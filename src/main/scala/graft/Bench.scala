@@ -93,11 +93,10 @@ object Bench {
       // The standard mitigation is a short periodic-GC interval — the
       // same setting a long-lived cluster driver would run with.
       .config("spark.cleaner.periodicGC.interval", "60s")
-      // ship -XX:-DontCompileHugeMethods to cluster executors (no-op in
-      // local mode; rationale + hugeMethodLimit rejection measurements
-      // in Verify.scala / OPTIMIZATION_r16.md §3)
-      .config("spark.executor.extraJavaOptions",
-        "-XX:-DontCompileHugeMethods")
+      // ship the huge-method JIT flag to cluster executors without
+      // dropping deployment-supplied options (no-op in local mode)
+      .config("spark.executor.extraJavaOptions", SparkEntry.executorJavaOptions(
+        sys.props.get("spark.executor.extraJavaOptions")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM + parquet footer caches so the first timed query
@@ -112,37 +111,26 @@ object Bench {
     // times; the reported figure is the median, which is robust to the
     // +-30% single-shot machine variance observed in rounds 1-2.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    // Per-query EXECUTOR CPU accounting: wall time alone cannot
+    // Per-query EXECUTOR CPU accounting, broken down by stage (and, for
+    // streaming entries, by micro-batch phase): wall time alone cannot
     // separate "the host stretched this query" from "this query did
     // more work" — the round-6 open question for the six build lines,
-    // whose multi-minute span a bracketing sentinel cannot cover (a
-    // load burst shorter than one build is invisible to probes that
-    // only run between entries). Task CPU time CAN: a throttled or
-    // preempted run burns the SAME cpu over a longer wall, a real
-    // regression burns MORE cpu. BENCH_FULL carries cpu_sec per entry,
-    // so any blown-up wall reading is decidable in isolation:
-    // cpu ≈ committed cpu → environment; cpu grew with wall → real.
-    val taskCpuNs = new java.util.concurrent.atomic.AtomicLong
-    val taskRunMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            taskCpuNs.addAndGet(m.executorCpuTime)
-            taskRunMs.addAndGet(m.executorRunTime)
-          }
-        }
-      })
-    val cpuByQuery = scala.collection.mutable.Map[String, Double]()
+    // whose multi-minute span a bracketing sentinel cannot cover. Task
+    // CPU time CAN: a throttled or preempted run burns the SAME cpu over
+    // a longer wall, a real regression burns MORE cpu. BENCH_FULL
+    // carries cpu_sec and the stage rows per entry, so any blown-up wall
+    // reading is decidable in isolation: cpu ≈ committed cpu →
+    // environment; cpu grew with wall → real, in the stage that grew.
+    val metrics = graft.obs.StageMetrics.attach(spark)
+    val windowByQuery =
+      scala.collection.mutable.Map[String, graft.obs.StageMetrics.Window]()
     def runOnce(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double) = {
+        : (Double, Option[graft.obs.StageMetrics.Window]) = {
       // drain at both window edges: listener delivery is async and a
       // late task-end event would otherwise credit the next query
       org.apache.spark.GraftSparkBridge.drainListeners(spark.sparkContext)
-      taskCpuNs.set(0L)
+      metrics.reset()
       val t0 = System.nanoTime()
       try {
         // bounded-heap keys (TopKAgg family) get the object-hash
@@ -156,10 +144,10 @@ object Bench {
         }
         val wall = (System.nanoTime() - t0) / 1e9
         org.apache.spark.GraftSparkBridge.drainListeners(spark.sparkContext)
-        (wall, taskCpuNs.get() / 1e9)
+        (wall, Some(metrics.snapshot()))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        (-1.0, -1.0)
+        (-1.0, None)
       }
     }
     def median(xs: Seq[Double]): Double = {
@@ -252,8 +240,8 @@ object Bench {
     val buildResults = sharedAssetBuilds
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-        val (wall, cpu) = runOnce(name, fn)
-        cpuByQuery(name) = cpu
+        val (wall, window) = runOnce(name, fn)
+        window.foreach(windowByQuery(name) = _)
         withSentinel(name, wall, always = true) }
     val results = buildResults ++ selected.map { case (name, fn) =>
       val runs = (1 to reps).map(_ => runOnce(name, fn))
@@ -261,7 +249,7 @@ object Bench {
       // medians of each series separately could pair rep 1's wall with
       // rep 2's cpu and fake a wall/cpu divergence
       val mid = runs.sortBy(_._1).apply((runs.size - 1) / 2)
-      cpuByQuery(name) = mid._2
+      mid._2.foreach(windowByQuery(name) = _)
       withSentinel(name, if (runs.exists(_._1 < 0)) -1.0 else mid._1)
     }
     sentinelOnce(entryIdx)
@@ -304,15 +292,22 @@ object Bench {
         s""""sentinel":$sentinelSummary,""" +
         s""""queries":${jsonMap(results.filter(r => headline.contains(r._1)))},""" +
         s""""sf":"$sfDir"}"""
-    val cpuResults = results.collect {
-      case (n, _) if cpuByQuery.contains(n) => n -> cpuByQuery(n) }
+    // a failed entry keeps its -1 cpu reading and has no stage rows
+    val cpuResults = results.map { case (n, _) =>
+      n -> windowByQuery.get(n).fold(-1.0)(_.cpuSec) }
+    def entryMap(f: graft.obs.StageMetrics.Window => Option[String]) =
+      results.flatMap { case (n, _) =>
+        windowByQuery.get(n).flatMap(f).map("\"" + n + "\":" + _) }
+        .mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""failures":${failed.map(f => "\"" + f._1 + "\"").mkString("[", ",", "]")},""" +
         s""""pairs_mode":"$pairsMode",""" +
         s""""sentinel":$sentinelSummary,"sentinel_times":$sentinelFull,""" +
         s""""queries":${jsonMap(results)},""" +
-        s""""queries_cpu_sec":${jsonMap(cpuResults)},"sf":"$sfDir"}"""
+        s""""queries_cpu_sec":${jsonMap(cpuResults)},""" +
+        s""""stages":${entryMap(w => Some(w.stagesJson))},""" +
+        s""""stream":${entryMap(_.streamJson)},"sf":"$sfDir"}"""
     // Focused runs (SPARK_GRAFT_ONLY set) go to their own file — a
     // 3-query iteration must never clobber the committed full-catalog
     // artifact (round-11 verdict "what's wrong" item 1)

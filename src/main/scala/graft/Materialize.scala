@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
 /** Lineage-cutting materialization with a config-gated RELIABLE path
@@ -39,8 +40,13 @@ object Materialize {
         val sc = spark.sparkContext
         // setCheckpointDir creates a unique subdirectory per context;
         // only (re)set it when unset or pointed elsewhere so repeated
-        // cuts share one directory tree.
-        if (!sc.getCheckpointDir.exists(_.contains(dir)))
+        // cuts share one directory tree. The parent is compared as a
+        // qualified path, not a substring: `/x/ckpt` is a prefix of
+        // `/x/ckpt2`.
+        val configured = new Path(dir)
+        val qualified = configured.getFileSystem(sc.hadoopConfiguration)
+          .makeQualified(configured)
+        if (!sc.getCheckpointDir.exists(d => new Path(d).getParent == qualified))
           sc.setCheckpointDir(dir)
         df.checkpoint(eager)
       case None => df.localCheckpoint(eager)

@@ -104,4 +104,21 @@ object SparkEntry {
       }
     }
   }
+
+  /** `spark.executor.extraJavaOptions` for the Verify/Bench sessions:
+    * the deployment-supplied value with `-XX:-DontCompileHugeMethods`
+    * appended. The flag lets HotSpot JIT the huge methods whole-stage
+    * codegen emits; cluster executors are separate JVMs, so the launcher
+    * flag (build.sbt, tools/run_main.sh) does not reach them. The
+    * Spark-side alternative (spark.sql.codegen.hugeMethodLimit=8000) was
+    * measured worse, see OPTIMIZATION_r16.md §3.
+    */
+  def executorJavaOptions(supplied: Option[String]): String = {
+    val flag = "-XX:-DontCompileHugeMethods"
+    supplied.map(_.trim).filter(_.nonEmpty) match {
+      case Some(opts) if opts.split("\\s+").contains(flag) => opts
+      case Some(opts) => s"$opts $flag"
+      case None => flag
+    }
+  }
 }

@@ -24,18 +24,10 @@ object Verify {
       // see Bench.scala: without a periodic driver GC, dead shuffle
       // files accumulate across the 200+ query dumps at large SFs
       .config("spark.cleaner.periodicGC.interval", "60s")
-      // huge-generated-method JIT fix, CLUSTER-PORTABLE form (round-16
-      // verdict item 3): the launcher JVMs carry
-      // -XX:-DontCompileHugeMethods (build.sbt / tools/run_main*.sh),
-      // but on a real cluster executors are separate JVMs — this conf
-      // ships the flag with the app. A no-op in local mode (executors
-      // share the launcher JVM). The Spark-side alternative
-      // (spark.sql.codegen.hugeMethodLimit=8000) was MEASURED WORSE:
-      // same median CPU on the one-shot builds, plus one catastrophic
-      // whole-stage-codegen fallback (decode 837 CPU-s cold / 403 warm
-      // vs ~5 normally) — see OPTIMIZATION_r16.md §3.
-      .config("spark.executor.extraJavaOptions",
-        "-XX:-DontCompileHugeMethods")
+      // ship the huge-method JIT flag to cluster executors without
+      // dropping deployment-supplied options (no-op in local mode)
+      .config("spark.executor.extraJavaOptions", SparkEntry.executorJavaOptions(
+        sys.props.get("spark.executor.extraJavaOptions")))
       // scan-split knob so the big-corpus gate runs share KSweep's
       // profile (embeddings-only corpora are one ~0.5 GB parquet dir;
       // the 128 MB default gives the cosine stage 4 scan tasks on a

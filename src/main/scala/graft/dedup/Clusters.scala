@@ -33,9 +33,10 @@ object Clusters {
       .distinct()
       .cutLineage()
     // seed labels with min(id, min neighbor) — the first propagation
-    // round folded into initialization. LAZY checkpoint: the first
-    // convergence probe below is the materializing action, so seeding
-    // costs one job, not materialize + probe.
+    // round folded into initialization. The cut is EAGER (cutLineage()
+    // defaults to eager = true): seeding costs one materializing job,
+    // and the first convergence probe below is a second job over the
+    // cut blocks.
     var labels = sym.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("_mn"))
       .select(col("id"), least(col("id"), col("_mn")).as("label"))
@@ -62,12 +63,10 @@ object Clusters {
       val viaPtr = labels.as("l")
         .join(labels.as("m"), col("l.label") === col("m.id"))
         .select(col("l.id").as("id"), col("m.label").as("label"))
-      // LAZY checkpoint, materialized by the convergence probe: the
-      // probe's aggregate job computes `next` once and caches its
-      // blocks; the following round's joins read the cache. One job
-      // per round instead of eager-materialize + probe (the eager
-      // variant doubled the loop's job count for no extra safety —
-      // the probe always runs immediately after).
+      // EAGER cut (cutLineage() defaults to eager = true): `next` is
+      // materialized by its own job, then the convergence probe runs a
+      // second job over the cut blocks, and the following round's
+      // joins read them too: two jobs per round.
       val next = labels.select(col("id"), col("label"))
         .union(viaEdges)
         .union(viaPtr)

@@ -21,7 +21,7 @@ object Fanout {
   /** ISO-8601-with-Z string → timestamp (the lambdas'
     * `datetime.fromisoformat(order_date.rstrip("Z"))`).
     */
-  private def eventTs = to_timestamp(regexp_replace(col("order_date"), "Z$", ""))
+  private[graft] def eventTs = to_timestamp(regexp_replace(col("order_date"), "Z$", ""))
 
   /** orders stream: 4-column projection, order_date collapsed to a DATE
     * (`lambda_orders_transformation:31` `event_timestamp.date().isoformat()`).
@@ -208,12 +208,7 @@ object SyntheticOrders {
         // after decode, but a stream must be wide AT THE SOURCE. A
         // round-robin repartition here is producer-side work, paid
         // once per (session, sfDir), outside any timed query.
-        // SPARK_GRAFT_WIRE_SPLITS widens the landing beyond one file
-        // per core (the round-10 floor experiments measure the
-        // decode+sink stage's skew absorption against it).
-        val splits = sys.env.get("SPARK_GRAFT_WIRE_SPLITS").map(_.toInt)
-          .getOrElse(s.sparkContext.defaultParallelism)
-        wire(s, d).repartition(splits)
+        wire(s, d).repartition(s.sparkContext.defaultParallelism)
           .write.mode("overwrite").parquet(dir)
         wireDirMemo.put((s, d), dir)
         dir

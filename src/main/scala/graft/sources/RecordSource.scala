@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ingest.{EventCodec, SyntheticOrders}
+import graft.ingest.{EventCodec, Fanout, SyntheticOrders}
 
 /** Source adapters for the reference's entry point — a stream of wire
   * records (`terraform/` wires REST API → Kinesis;
@@ -65,8 +65,7 @@ object FileRecordSource {
     nested.select(
       col("customer_id").as("partition_key"),
       EventCodec.encodeCol(nested).as("data"),
-      to_timestamp(regexp_replace(col("order_date"), "Z$", ""))
-        .as("arrival_ts"))
+      Fanout.eventTs.as("arrival_ts"))
   }
 
   def stage(s: SparkSession, sfDir: String, outDir: String): Unit =

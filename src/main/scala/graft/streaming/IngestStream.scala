@@ -36,10 +36,9 @@ object IngestStream {
     */
   def startFanout(events: DataFrame, outBase: String, checkpointBase: String)
       : Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
-    val ts = to_timestamp(regexp_replace(col("order_date"), "Z$", ""))
     // derive partition keys ONCE from the raw event (like each lambda's
     // partitionKeys block), then let every projection pass them through
-    val keyed = Fanout.withPartitionKeys(events, ts)
+    val keyed = Fanout.withPartitionKeys(events, Fanout.eventTs)
     val timeKeys = Seq("year", "month", "day", "hour")
     // shuffle each micro-batch ON its partition keys before the write —
     // without it every micro-batch task opens a writer per partition
@@ -63,11 +62,6 @@ object IngestStream {
         "country" +: timeKeys))
   }
 
-  /** A11 — watermarked tumbling-window aggregation over the event-time
-    * column: per-hour order volume per status. Late events beyond the
-    * watermark are dropped instead of growing state forever — the knob
-    * that makes this viable on an unbounded 100 TB/day stream.
-    */
   /** Stream-stream join: re-join two fan-out streams on order_id (the
     * streaming analog of the reference's Athena join
     * `OrderAndClientDetails.sql` / `TotalSalesPerCountry.sql` over the
@@ -77,8 +71,7 @@ object IngestStream {
     */
   def joinOrdersWithAddresses(events: DataFrame,
       watermark: String = "2 hours"): DataFrame = {
-    val ts = to_timestamp(regexp_replace(col("order_date"), "Z$", ""))
-    val keyed = events.withColumn("event_ts", ts)
+    val keyed = events.withColumn("event_ts", Fanout.eventTs)
     val orders = Fanout.orders(keyed, Seq("event_ts"))
       .withWatermark("event_ts", watermark)
     val addrs = Fanout.shippingAddresses(keyed, Seq("event_ts"))
@@ -92,11 +85,15 @@ object IngestStream {
         "country", "state", "city")
   }
 
+  /** A11 — watermarked tumbling-window aggregation over the event-time
+    * column: per-hour order volume per status. Late events beyond the
+    * watermark are dropped instead of growing state forever — the knob
+    * that makes this viable on an unbounded 100 TB/day stream.
+    */
   def windowedVolume(events: DataFrame, watermark: String = "2 hours",
       window_ : String = "1 hour"): DataFrame =
     events
-      .withColumn("event_ts",
-        to_timestamp(regexp_replace(col("order_date"), "Z$", "")))
+      .withColumn("event_ts", Fanout.eventTs)
       .withWatermark("event_ts", watermark)
       .groupBy(window(col("event_ts"), window_), col("status"))
       .agg(count(lit(1)).as("n_orders"),

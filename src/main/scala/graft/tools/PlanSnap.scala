@@ -10,9 +10,10 @@ import java.nio.file.{Files, Paths}
   * Usage: runMain graft.tools.PlanSnap <sfDir> <outDir> <tag> q1 q2 ...
   *
   * For streaming entries the catalog fn EXECUTES the stream and returns
-  * the sink table — the captured plan is the post-sink batch read, so a
-  * [[graft.tools.StreamProf]] run is the right tool for micro-batch
-  * internals; this tool is for the batch operators.
+  * the sink table — the captured plan is the post-sink batch read, so
+  * the `stages` and `stream` breakdowns Bench writes to BENCH_FULL.json
+  * are the right source for micro-batch internals; this tool is for the
+  * batch operators.
   */
 object PlanSnap {
 

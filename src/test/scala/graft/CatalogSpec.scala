@@ -96,4 +96,12 @@ class CatalogSpec extends AnyFunSuite {
         s"$name returned 0 rows")
     }
   }
+
+  test("executor JVM options keep deployment-supplied flags") {
+    val flag = "-XX:-DontCompileHugeMethods"
+    assert(SparkEntry.executorJavaOptions(Some("-Xss4m -Dfoo=bar")) ==
+      s"-Xss4m -Dfoo=bar $flag")
+    assert(SparkEntry.executorJavaOptions(Some(s"-Xss4m $flag")) ==
+      s"-Xss4m $flag")
+  }
 }

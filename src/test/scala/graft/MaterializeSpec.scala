@@ -48,4 +48,24 @@ class MaterializeSpec extends AnyFunSuite {
         .deleteQuietly(new java.io.File(dir))
     }
   }
+
+  test("a cut follows reliableCheckpointDir to a prefix of the previous dir") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ckpt_prefix")
+    val (longer, prefix) = (root.resolve("ckpt2").toString, root.resolve("ckpt").toString)
+    val key = "spark.graft.reliableCheckpointDir"
+    val sc = spark.sparkContext
+    try {
+      spark.conf.set(key, longer)
+      Materialize.cut(sample())
+      assert(sc.getCheckpointDir.exists(_.contains("/ckpt2/")))
+      spark.conf.set(key, prefix)
+      assert(Materialize.cut(sample()).count() == 100)
+      val parent = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get).getParent
+      assert(parent.toUri.getPath == prefix,
+        s"checkpoint dir ${sc.getCheckpointDir} is not directly under $prefix")
+    } finally {
+      spark.conf.unset(key)
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    }
+  }
 }
