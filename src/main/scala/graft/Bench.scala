@@ -77,12 +77,7 @@ object Bench {
     // on a real cluster this would be 2-3x executor cores instead
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
       math.max(4, cpus.toInt / 2).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = SparkEntry.session(s"local[$cpus]", shuffle.toInt)
       .config("spark.sql.adaptive.enabled", "true")
       // Shuffle files of dereferenced stages are only deleted when a
       // DRIVER GC collects their RDD references; with a large heap the

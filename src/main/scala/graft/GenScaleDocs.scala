@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Documents-only corpus scaler (round-12 verdict item 4): writes an
   * N× copy of ONLY a testdata directory's `documents.parquet`, using
   * the IDENTICAL per-copy token-permutation scheme as [[GenScale]]'s
@@ -14,9 +12,8 @@ import org.apache.spark.sql.SparkSession
   * admitted-mass growth under the 256 band-bucket cap into a MEASURED
   * rung: `GenScaleDocs /root/testdata/sf0.1 data/sfXXd 200` produces a
   * 1M-doc corpus (1000 → 5M, the full next decade) that
-  * [[BandMass]] can profile with one signature pass — the mass
-  * readout is a driver-side fold over the (bucket size → count)
-  * histogram, so no pair join ever materializes.
+  * was profiled with one signature pass (BANDCAP_DECADE.json; the
+  * profiling main is retired, see BENCH.md "Retired diagnostic mains").
   */
 object GenScaleDocs {
 
@@ -26,12 +23,8 @@ object GenScaleDocs {
     val src = args(0)
     val dst = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = SparkEntry.session(
+        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Embeddings-only corpus scaler (round-11 verdict item 2): writes an
   * N× copy of ONLY a testdata directory's `embeddings.parquet`, using
   * the identical id-offset + dimension-rotation scheme as
@@ -16,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * corpus costs tens of GB for nothing — the k-NN graph touches only
   * vectors (~0.5 GB at 2M × 64 dims). `GenScaleVec <srcDir> <dstDir>
   * [N] [--decorrelate] [--labels=2,8]` produces a directory
-  * KSweep/Tables.embeddings can read directly.
+  * Tables.embeddings can read directly.
   *
   * `--decorrelate` (round-12 verdict item 2): the plain rotation has
   * only `dim` distinct variants per source vector (64 here), so a
@@ -59,12 +57,8 @@ object GenScaleVec {
     val labelKeep: Option[Set[Int]] = flags
       .find(_.startsWith("--labels="))
       .map(_.drop("--labels=".length).split(",").map(_.trim.toInt).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = SparkEntry.session(
+        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

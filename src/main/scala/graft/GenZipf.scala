@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic ZIPF-SPARSE twin corpus generator (round-8 verdict
   * item 3): every decade conclusion so far comes from GenScale's
   * saturated-vocabulary corpus — the adversarial dense-df regime where
@@ -85,12 +83,8 @@ object GenZipf {
     val src = args(0)
     val dst = args(1)
     val nDocs = if (args.length > 2) args(2).toLong else 50000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = SparkEntry.session(
+        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -54,12 +54,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = SparkEntry.session("local[8]", 8)
       .config("spark.sql.adaptive.enabled", "true")
       // plan strings truncate ReadSchema at 100 chars by default, which
       // leaves an unclosed `struct<...` that the width regex would run

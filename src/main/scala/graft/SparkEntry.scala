@@ -105,6 +105,20 @@ object SparkEntry {
     }
   }
 
+  /** A session builder on `master` with `shufflePartitions` shuffle
+    * partitions and the confs every graft session needs: the UTC
+    * session time zone and nanos-as-long parquet timestamps the oracle
+    * comparison depends on (see Tables.normalizeTs), and no UI. Callers
+    * add their own confs before `getOrCreate()`.
+    */
+  def session(master: String, shufflePartitions: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+
   /** `spark.executor.extraJavaOptions` for the Verify/Bench sessions:
     * the deployment-supplied value with `-XX:-DontCompileHugeMethods`
     * appended. The flag lets HotSpot JIT the huge methods whole-stage

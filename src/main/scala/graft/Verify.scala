@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,16 +10,11 @@ object Verify {
     // oracle_sql.json is always written so the checker can validate names
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // decade-run discipline (BENCH.md round 9): the small-SF default
-      // (= cpus) GC-thrashes the sf10 LSH candidate distinct; dumps at
-      // sf10 set SPARK_GRAFT_SHUFFLE=64 like the benches do
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // decade-run discipline (BENCH.md round 9): the small-SF default
+    // (= cpus) GC-thrashes the sf10 LSH candidate distinct; dumps at
+    // sf10 set SPARK_GRAFT_SHUFFLE=64 like the benches do
+    val spark = SparkEntry.session(s"local[$cpus]",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus).toInt)
       // see Bench.scala: without a periodic driver GC, dead shuffle
       // files accumulate across the 200+ query dumps at large SFs
       .config("spark.cleaner.periodicGC.interval", "60s")
@@ -28,12 +22,6 @@ object Verify {
       // dropping deployment-supplied options (no-op in local mode)
       .config("spark.executor.extraJavaOptions", SparkEntry.executorJavaOptions(
         sys.props.get("spark.executor.extraJavaOptions")))
-      // scan-split knob so the big-corpus gate runs share KSweep's
-      // profile (embeddings-only corpora are one ~0.5 GB parquet dir;
-      // the 128 MB default gives the cosine stage 4 scan tasks on a
-      // 32-thread box) — default unchanged for the driver's runs
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "128m"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{Materialize, QueryDef, Tables}
 import graft.Materialize.CutOps
 
 /** Duplicate-cluster resolution: near-dup PAIRS are not enough — a
@@ -73,6 +73,7 @@ object Clusters {
         .groupBy("id").agg(min("label").as("label"))
         .cutLineage()
       val newSum = labelSum(next)
+      Materialize.release(labels)
       labels = next
       converged = newSum.compareTo(prevSum) == 0
       prevSum = newSum
@@ -130,10 +131,12 @@ object Clusters {
         .join(deg, "src")
         .join(ranks.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), (col("score") / col("deg")).as("c"))
-      ranks = contrib.groupBy("id").agg(sum("c").as("s"))
+      val next = contrib.groupBy("id").agg(sum("c").as("s"))
         .select(col("id"),
           (lit((1 - damping) / n) + lit(damping) * col("s")).as("score"))
         .cutLineage()
+      Materialize.release(ranks)
+      ranks = next
     }
     ranks
   }

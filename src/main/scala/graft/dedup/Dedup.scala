@@ -251,9 +251,9 @@ object Dedup {
   /** The EXACT inverted-index pair graph, unconditionally — never the
     * LSH stand-in, regardless of the candidate budget. This is what
     * [[sharedPairs]] serves below budget; it exists as its own entry
-    * point because evaluation harnesses (lsh_recall, the RecallProbe
-    * mains) need the lossless baseline BY DEFINITION: under the round-9
-    * auto dispatch, a baseline spelled `sharedPairs` silently became
+    * point because evaluation entries (lsh_recall) need the lossless
+    * baseline BY DEFINITION: under the round-9 auto dispatch, a
+    * baseline spelled `sharedPairs` silently became
     * the LSH graph itself precisely at the dense scales the recall
     * metric exists to measure, degenerating recall/precision to a
     * 1.0 self-comparison (round-9 advice item 1). Above budget this is
@@ -544,7 +544,7 @@ object Dedup {
     // most snippets span ≥ 2 windows), so
     // deep CONTIGUOUS containment — the quote/boilerplate-inclusion
     // case the operator exists for — is caught at ANY size ratio.
-    // Measured (RecallProbe cont, planted concatenation parents):
+    // Measured (planted concatenation parents, RECALL_SF10.json):
     // R ≥ 7 recall 0.38 → 1.0. Scattered deep containment (shingles
     // strewn non-contiguously through a 10× larger doc) remains the
     // documented residual; the sub-budget exact path is lossless for
@@ -744,51 +744,14 @@ object Dedup {
       .orderBy("band")
   }
 
-  /** Band-bucket SIZE histogram of the production 128-perm / 32-band
-    * LSH banding — (bucket size, number of buckets at that size) over
-    * all 32 bands, built with the identical packed keys the candidate
-    * join groups on. This is the measurement input for the band-cap
-    * asymptote sweep (graft.BandMass): every per-cap candidate mass
-    * Σ_{sz ≤ cap} C(sz,2) is a pure function of this histogram, so one
-    * signature pass per corpus supports the whole cap sweep.
-    */
-  def bandBucketSizeHist(docs: DataFrame): DataFrame = {
-    val numHashes = 128
-    val bands = 32
-    val rows = numHashes / bands
-    // NO empty-shingle filter (round-10 advice item 4): production
-    // minhashPairs bands every doc, including <3-token docs whose empty
-    // sets minhash to the shared all-MaxValue sentinel bucket — the
-    // histogram must profile the IDENTICAL banded table or BandMass
-    // understates the candidate mass the real join pays. (bandProfile
-    // above keeps its filter: that entry is oracle-gated against a
-    // len(t) >= 3 signature chain.)
-    val sig = withShingles(docs)
-      .select(col("doc_id"),
-        HashOps.minhash(col("shingles"), numHashes).as("sig"))
-    val banded = sig.select(
-      posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-        struct(
-          packedKey(element_at(col("sig"), b * lit(rows) + 1),
-            element_at(col("sig"), b * lit(rows) + 2)).as("k1"),
-          packedKey(element_at(col("sig"), b * lit(rows) + 3),
-            element_at(col("sig"), b * lit(rows) + 4)).as("k2")))))
-      .withColumnRenamed("pos", "band")
-      .select(col("band"), col("col.k1").as("k1"), col("col.k2").as("k2"))
-    banded.groupBy("band", "k1", "k2").agg(count(lit(1)).as("sz"))
-      .groupBy("sz").agg(count(lit(1)).as("n_buckets"))
-  }
-
   /** The WINDOW-GRID banded table behind containmentPairsLsh's
     * deep-asymmetry candidates: every doc's token stream cut into
     * `windowTokens`-token windows at `windowStride`, each window
     * shingled and minhashed (wrap32) like a document, banded 2-row,
     * and reduced to DISTINCT (doc, band, key) rows — several windows
-    * of one doc in a bucket count once. Factored out so the band-mass
-    * measurement tool profiles EXACTLY the table the candidate join
-    * groups on.
+    * of one doc in a bucket count once.
     */
-  private[graft] def windowBanded(docs: DataFrame, numHashes: Int,
+  private def windowBanded(docs: DataFrame, numHashes: Int,
       bands: Int, windowTokens: Int, windowStride: Int): DataFrame = {
     val rows = numHashes / bands
     val tok = docs
@@ -816,16 +779,6 @@ object Dedup {
         lit(0L).as("k2"))
       .distinct()
   }
-
-  /** Bucket-size histogram of [[windowBanded]] (the containment window
-    * geometry the production pass uses: 32 bands keyed on 2 of each
-    * band's 4 rows, replicated by the DuckDB oracle) — the BandMass
-    * input for the window candidate mass.
-    */
-  def windowBandBucketSizeHist(docs: DataFrame): DataFrame =
-    windowBanded(docs, 128, 32, 32, 16)
-      .groupBy("band", "k1", "k2").agg(count(lit(1)).as("sz"))
-      .groupBy("sz").agg(count(lit(1)).as("n_buckets"))
 
   /** D4 — SimHash near-dup: 64-bit signature, 4 bands of 16 bits for
     * candidate generation (any pair within hamming distance 3 shares at

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -47,22 +47,21 @@ object EventCodec {
         StructField("color", StringType),
         StructField("size", StringType))))))))))
 
+  /** The wire parse: base64 `data` → the event struct. try_to_binary
+    * makes malformed base64 a null row instead of a task failure — one
+    * poison record must not kill a 100 TB ingest job — and from_json
+    * yields an all-null struct on malformed JSON.
+    */
+  private[graft] def parseWire(data: Column): Column =
+    from_json(try_to_binary(data, lit("base64")).cast(StringType),
+      orderEventSchema)
+
   /** base64 `data` column → typed event columns. Works identically on
     * batch and streaming DataFrames (pure narrow projection).
     */
   def decode(records: DataFrame, dataCol: String = "data"): DataFrame =
-    records
-      .withColumn("_evt",
-        // try_to_binary: malformed base64 → null row instead of a task
-        // failure — one poison record must not kill a 100 TB ingest job
-        from_json(try_to_binary(col(dataCol), lit("base64")).cast(StringType),
-          orderEventSchema))
-      .select(col("_evt.*"))
+    records.withColumn("_evt", parseWire(col(dataCol))).select(col("_evt.*"))
 
-  /** Inverse: typed event columns → base64 JSON `data` (the producer's
-    * encoding, `python_producer.py:104-113`). Used to round-trip-test
-    * the codec and to feed the streaming ingest specs.
-    */
   /** Decode with dead-letter routing (the Firehose error-prefix analog:
     * failed records land in an S3 error output instead of vanishing).
     * Returns (decoded-good, raw-bad); bad = records whose base64 or JSON
@@ -70,9 +69,7 @@ object EventCodec {
     */
   def decodeWithDlq(records: DataFrame, dataCol: String = "data")
       : (DataFrame, DataFrame) = {
-    val parsed = records.withColumn("_evt",
-      from_json(try_to_binary(col(dataCol), lit("base64")).cast(StringType),
-        orderEventSchema))
+    val parsed = records.withColumn("_evt", parseWire(col(dataCol)))
     // from_json yields an all-null struct on malformed input; order_id is
     // non-null in every real event, so it is the validity sentinel
     val good = parsed.filter(col("_evt.order_id").isNotNull).select(col("_evt.*"))
@@ -80,6 +77,10 @@ object EventCodec {
     (good, bad)
   }
 
+  /** Inverse: typed event columns → base64 JSON `data` (the producer's
+    * encoding, `python_producer.py:104-113`). Used to round-trip-test
+    * the codec and to feed the streaming ingest specs.
+    */
   def encode(events: DataFrame): DataFrame =
     events.select(encodeCol(events).as("data"))
 
@@ -88,7 +89,7 @@ object EventCodec {
     * independently-evaluated frames back together by position is not
     * deterministic over shuffle-produced inputs).
     */
-  def encodeCol(events: DataFrame): org.apache.spark.sql.Column =
+  def encodeCol(events: DataFrame): Column =
     // Spark's base64 is MIME-chunked (CRLF every 76 chars) unless the
     // legacy conf says otherwise; the wire format (python b64encode)
     // is continuous — strip the line breaks so one record = one line.

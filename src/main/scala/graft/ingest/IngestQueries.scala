@@ -334,11 +334,7 @@ object IngestQueries {
         // 1-in-16 truncation, same order_id null sentinel), proven by
         // the unchanged oracle hash.
         val parsed = s.read.parquet(SyntheticOrders.dlqWireDir(s, d))
-          .withColumn("_evt",
-            from_json(
-              try_to_binary(col("data"), lit("base64"))
-                .cast(org.apache.spark.sql.types.StringType),
-              EventCodec.orderEventSchema))
+          .withColumn("_evt", EventCodec.parseWire(col("data")))
         parsed.agg(
           count(when(col("_evt.order_id").isNotNull, 1)).as("n_good"),
           count(when(col("_evt.order_id").isNull, 1)).as("n_bad"),

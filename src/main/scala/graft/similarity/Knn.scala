@@ -196,19 +196,17 @@ object Knn {
     * Σ n_l·(n_l−1) / sampleMod ≈ spent / sampleMod. A FIXED-fraction
     * mod (the old `% 100`) keeps that quadratic — n²/100 — and one
     * decade past the proven sf100 shape the GUARD dominates the
-    * construction it guards. This knob caps the probe's pair mass the
-    * same way SPARK_GRAFT_WINDOW_MASS_BUDGET caps the containment
+    * construction it guards. This budget caps the probe's pair mass
+    * the same way SPARK_GRAFT_WINDOW_MASS_BUDGET caps the containment
     * window grid: [[autoSampleMod]] scales the modulus so
-    * spent / mod ≤ budget. Default 5e9 ordered pairs — the scale the
+    * spent / mod ≤ budget. 5e9 ordered pairs — the scale the
     * sf100-shape exact probe already ran (9.5e10 / 100 ≈ 9.5e8), with
     * headroom; at every proven SF through sf100 the derived mod is
     * exactly the historical 100, so all committed gate rows are
     * unchanged, while a decade up (spent ≈ 9.5e12) the mod grows to
     * 1 901 and the probe mass stays 5e9 instead of 9.5e10.
     */
-  def probeMassBudget: Long =
-    sys.env.get("SPARK_GRAFT_PROBE_MASS_BUDGET").map(_.toLong)
-      .getOrElse(5000000000L)
+  val probeMassBudget: Long = 5000000000L
 
   /** The fixed-COUNT probe modulus: smallest power-free mod ≥ 100 that
     * keeps the probe's ordered-pair mass spent/mod under the budget.
@@ -226,9 +224,7 @@ object Knn {
     * at the calibrated ×4/3 spacing ((4/3)² ≈ 1.78 < 4) plus a second
     * when the failing mass is a minority of the corpus.
     */
-  def rungWorkFactor: Double =
-    sys.env.get("SPARK_GRAFT_RUNG_WORK_FACTOR").map(_.toDouble)
-      .getOrElse(4.0)
+  val rungWorkFactor: Double = 4.0
 
   /** The next kInternal rung of the K-law ladder: ×4/3 rounded up
     * (30 → 40, 39 → 52, 48 → 64 — the rung spacing the KSWEEP
@@ -359,7 +355,7 @@ object Knn {
     // fails AND the cumulative rung work (Σ n_l·K², the NN-descent
     // per-vector cost model) fits `rungFactor ×` the initial build's
     // n_total·K₀². Deterministic: routing, rungs and the stop are pure
-    // functions of the corpus and the knobs.
+    // functions of the corpus and the parameters.
     val (exactLabels, rungLabels) =
       failing0.partition(l => ns(l) * (ns(l) - 1L) <= fallbackBudget)
     val kRung0 = nextKRung(kInt)
@@ -417,8 +413,8 @@ object Knn {
           s"STOPPED: next rung kInternal=$kCur on labels " +
           s"${pending.mkString(",")} would cost ${cost.toLong} " +
           s"(spent ${workSpent.toLong} of ${workBudget.toLong}) — " +
-          "returning the best graph so far; raise " +
-          "SPARK_GRAFT_RUNG_WORK_FACTOR to climb further")
+          "returning the best graph so far; raise rungFactor to " +
+          "climb further")
       } else {
         workSpent += cost
         rungsTried :+= kCur
@@ -455,9 +451,7 @@ object Knn {
     * calibrated against (20k ⇒ kCell ≈ 39, the measured-0.96 sf10
     * anchor).
     */
-  def knnBlockSize: Long =
-    sys.env.get("SPARK_GRAFT_KNN_BLOCK_SIZE").map(_.toLong)
-      .getOrElse(20000L)
+  val knnBlockSize: Long = 20000L
 
   /** D54 for UNLABELED corpora (round-15 item 4): a real 100 TB
     * embedding corpus often has no bounded class dimension, so the
@@ -516,7 +510,7 @@ object Knn {
     }
     require(nlist <= 10000,
       s"knn_graph quantize: nlist=$nlist cells — raise the target " +
-        "block size (SPARK_GRAFT_KNN_BLOCK_SIZE) to keep the centroid " +
+        "block size (targetBlock) to keep the centroid " +
         "broadcast bounded")
     val spark = e.sparkSession
     import spark.implicits._
@@ -599,27 +593,24 @@ object Knn {
       Some(QuantizeInfo(nlist, kCell, rec, escalatedToGlobal = true)))
   }
 
-  /** The knn_graph entry's mode switch (round-15 item 4):
-    * SPARK_GRAFT_KNN_BLOCKING = `label` (default — the proven
-    * label-blocked dispatcher, byte-identical to round 14) | `auto`
-    * (quantize ONLY when the corpus has no usable class dimension,
-    * i.e. ≤ 1 distinct label) | `quantize` (force the quantizer —
-    * calibration/spec dial). Unknown values fail loudly.
+  /** The knn_graph entry's blocking choice, derived from the corpus:
+    * a corpus with ≥ 2 distinct labels has a class dimension to block
+    * on and takes the proven label-blocked dispatcher
+    * ([[graphTopKEscalating]]); a corpus with ≤ 1 distinct label has
+    * none, so the blocks come from the IVF coarse quantizer
+    * ([[graphTopKQuantized]]). The rule lives here and not in
+    * graphTopKEscalating, which is also the quantizer's fallback.
     */
   def graphTopKDispatch(e: DataFrame, k: Int): GraphResult =
-    sys.env.getOrElse("SPARK_GRAFT_KNN_BLOCKING", "label") match {
-      case "label" => graphTopKEscalating(e, k)
-      case "auto" =>
-        if (e.select("label").distinct().take(2).length <= 1) {
-          System.err.println("[graft] knn_graph: <=1 distinct label " +
-            "under SPARK_GRAFT_KNN_BLOCKING=auto — deriving blocks " +
-            "from the IVF coarse quantizer")
-          graphTopKQuantized(e, k)
-        } else graphTopKEscalating(e, k)
-      case "quantize" => graphTopKQuantized(e, k)
-      case other => sys.error(s"SPARK_GRAFT_KNN_BLOCKING=$other: " +
-        "expected label|auto|quantize")
-    }
+    if (unlabeled(e)) {
+      System.err.println("[graft] knn_graph: <=1 distinct label — " +
+        "deriving blocks from the IVF coarse quantizer")
+      graphTopKQuantized(e, k)
+    } else graphTopKEscalating(e, k)
+
+  /** True when `e` has at most one distinct label: nothing to block on. */
+  private[graft] def unlabeled(e: DataFrame): Boolean =
+    e.select("label").distinct().take(2).length <= 1
 
   /** Auto-scaled NN-descent list width (round-10 verdict item 1).
     * At FIXED kInternal = 30 the measured recall@3 declines with the
@@ -639,7 +630,7 @@ object Knn {
     * pivot); measured walls 364.8 / 478.9 / 644.2 s — the log law buys
     * recall headroom at ~(48/30)² ≈ 2.6× per two decades, not the
     * n-linear blowup a K ~ n rule would cost. Explicit kInternal > 0
-    * (the KSweep/RecallProbe dial) bypasses the rule.
+    * bypasses the rule.
     */
   def autoKInternal(meanLabelN: Double): Int = {
     val log2n = math.log(math.max(meanLabelN, 2.0)) / math.log(2.0)
@@ -726,7 +717,7 @@ object Knn {
     // that replicated the (26%-recall) approximation. Triple-level
     // exactness of the underlying machinery stays hash-gated via
     // knn_graph_block below; the full-corpus decade recall readout
-    // lives in RECALL_SF10.json (graft.RecallProbe).
+    // lives in RECALL_SF10.json.
     // Below budget the dispatched graph IS the exact twin and the
     // recall term is identically 1.
     // Round 14: the entry dispatches through graphTopKEscalating —

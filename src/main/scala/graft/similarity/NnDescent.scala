@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{TopKAgg, VectorOps}
+import graft.Materialize
 import graft.Materialize.CutOps
 
 /** NN-descent (Dong, Moses & Li, WWW'11): k-NN GRAPH construction by
@@ -208,6 +209,7 @@ object NnDescent {
         .cutLineage()
       freshCount = next.filter(col("fresh")).count()
       edgesCk.unpersist(blocking = false)
+      Materialize.release(edgesCk)
       edgesCk = next
       edges = detachStats(next)
       it += 1
@@ -229,6 +231,7 @@ object NnDescent {
         col("dst").as("neighbor_id"), round(col("cos"), 4).as("cosine"))
       .cutLineage()
     edgesCk.unpersist(blocking = false)
+    Materialize.release(edgesCk)
     out
   }
 }

@@ -9,9 +9,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Streaming: `mapGroupsWithState` keeps exactly one row of state per
   * key — the highest sequence number seen — and emits the current value
   * per key each micro-batch (OutputMode.Update ≈ DynamoDB's upsert
-  * visibility). State size is O(live keys), not O(events): the
-  * watermark-free profile matches a KV table whose keys never expire;
-  * pass a TTL through `timeout` if keys should age out.
+  * visibility). State holds one row per key ever seen, not per event,
+  * and grows with every new key: there is no watermark or timeout, so
+  * keys never expire (a TTL is an open ROADMAP item).
   */
 object LatestKV {
 

@@ -359,10 +359,7 @@ object StreamQueries {
           .schema(s.read.parquet(dir).schema)
           .option("maxFilesPerTrigger", Int.MaxValue.toString)
           .parquet(dir)
-        val parsed = raw.withColumn("_evt",
-          from_json(try_to_binary(col("data"), lit("base64"))
-            .cast(org.apache.spark.sql.types.StringType),
-            EventCodec.orderEventSchema))
+        val parsed = raw.withColumn("_evt", EventCodec.parseWire(col("data")))
         val agg = parsed.agg(
           count(when(col("_evt.order_id").isNotNull, 1)).as("n_good"),
           count(when(col("_evt.order_id").isNull, 1)).as("n_bad"),

@@ -23,12 +23,7 @@ object PlanSnap {
     val tag = args(2)
     val names = args.drop(3).toSeq
     Files.createDirectories(Paths.get(outDir))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.SparkEntry.session("local[8]", 8)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.maxMetadataStringLength", "10000")
       .getOrCreate()

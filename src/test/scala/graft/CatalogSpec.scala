@@ -8,15 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = SparkEntry.session("local[4]", 4)
       .appName("graft-test")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // Allowlisted: every global window left in the TEST sources is a
@@ -84,6 +79,33 @@ class CatalogSpec extends AnyFunSuite {
     val undocumented = registered.filterNot(k => s2.contains(s"`$k`"))
     assert(undocumented.isEmpty,
       s"catalog keys missing from SURVEY §2: $undocumented")
+  }
+
+  test("library code reads no env vars beyond Dedup's parity hooks") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    // the mains read their run settings from the environment; the
+    // library takes parameters, except the two pair-branch hooks the
+    // DuckDB oracle reads too
+    val mains = "(Bench|Verify|PlanAudit|Gen[A-Za-z]*)\\.scala".r
+    val hooks = Seq("SPARK_GRAFT_PAIRS", "SPARK_GRAFT_WINDOW_MASS_BUDGET")
+    val dedup = root.resolve("dedup/Dedup.scala")
+    val reads = java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(p => p.getParent == root &&
+        mains.matches(p.getFileName.toString))
+      .filterNot(_.startsWith(root.resolve("tools")))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if l.contains("sys.env") || l.contains("System.getenv") =>
+            (p, s"${root.relativize(p)}:${i + 1}: ${l.trim}")
+        }
+      }
+    assert(reads.exists(_._1 == dedup), "the scan found no env read at all")
+    val stray = reads.collect {
+      case (p, l) if p != dedup || !hooks.exists(l.contains) => l
+    }
+    assert(stray.isEmpty, s"library env reads: ${stray.mkString("; ")}")
   }
 
   test("flagship analytics queries return non-empty results") {

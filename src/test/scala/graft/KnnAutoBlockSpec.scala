@@ -127,12 +127,18 @@ class KnnAutoBlockSpec extends AnyFunSuite {
       "nlist < 2 must not quantize — the label dispatcher runs instead")
   }
 
-  test("the default dispatch mode is label — byte-identical to the round-14 entry") {
-    // the suite's JVM has no SPARK_GRAFT_KNN_BLOCKING set, so the
-    // entry's dispatcher must route to graphTopKEscalating verbatim
-    assert(sys.env.get("SPARK_GRAFT_KNN_BLOCKING").isEmpty)
+  test("a multi-label corpus dispatches to the label-blocked path") {
+    val e = df(noise(50).map { case (id, v, _) => (id, v, (id % 2).toInt) })
+    assert(!Knn.unlabeled(e))
+    val res = Knn.graphTopKDispatch(e, 3)
+    assert(res.quantize.isEmpty)
+    assert(pairSet(res.graph) == pairSet(Knn.graphTopKEscalating(e, 3).graph))
+  }
+
+  test("a one-label corpus dispatches to the quantizer") {
     val e = df(noise(50))
+    assert(Knn.unlabeled(e))
     assert(pairSet(Knn.graphTopKDispatch(e, 3).graph) ==
-      pairSet(Knn.graphTopKEscalating(e, 3).graph))
+      pairSet(Knn.graphTopKQuantized(e, 3).graph))
   }
 }

@@ -68,4 +68,59 @@ class MaterializeSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
     }
   }
+
+  /** Reliable checkpoint dirs (`rdd-*`) under `root`, at any depth. */
+  private def rddDirs(root: java.nio.file.Path): Int = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(root).iterator().asScala
+      .count(p => java.nio.file.Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith("rdd-"))
+  }
+
+  private def pathGraph(n: Int) = {
+    import spark.implicits._
+    (0L until n - 1L).map(i => (i, i + 1L)).toDF("src", "dst")
+  }
+
+  private def labelsOf(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("reliable CC loop keeps no checkpoint copy per round") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ckpt_cc")
+    val key = "spark.graft.reliableCheckpointDir"
+    // a 4-vertex path converges in 3 rounds, a 64-vertex path in more:
+    // per-round copies would make the second run leave more dirs
+    val local = labelsOf(dedup.Clusters.connectedComponents(pathGraph(64)))
+    try {
+      spark.conf.set(key, root.toString)
+      val left = Seq(4, 64).map { n =>
+        val before = rddDirs(root)
+        val labels = labelsOf(dedup.Clusters.connectedComponents(pathGraph(n)))
+        assert(labels == (0L until n).map(_ -> 0L).toMap)
+        if (n == 64) assert(labels == local)
+        rddDirs(root) - before
+      }
+      assert(left(0) == left(1), s"checkpoint dirs per run grew with rounds: $left")
+      // what is left is the symmetric edge list and the final labels
+      assert(left(1) <= 2, s"$left")
+    } finally {
+      spark.conf.unset(key)
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    }
+  }
+
+  test("reliable PageRank loop keeps no rank copy per round") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ckpt_pr")
+    val key = "spark.graft.reliableCheckpointDir"
+    try {
+      spark.conf.set(key, root.toString)
+      val ranks = dedup.Clusters.pageRank(pathGraph(8), iters = 6, damping = 0.85)
+      assert(math.abs(ranks.agg(sum("score")).head().getDouble(0) - 1.0) < 1e-9)
+      // the symmetric edge list, the degrees and the final ranks
+      assert(rddDirs(root) == 3)
+    } finally {
+      spark.conf.unset(key)
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    }
+  }
 }
