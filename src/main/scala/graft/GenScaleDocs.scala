@@ -8,11 +8,13 @@ package graft
   * corpus has the same statistical family as the committed sf1/sf10
   * decade steps, at none of the lineitem/orders disk cost.
   *
-  * Exists to convert BANDCAP_SWEEP.json's ~4.1×/decade projected
-  * admitted-mass growth under the 256 band-bucket cap into a MEASURED
+  * Exists to convert the ~4.1×/decade admitted-mass growth that
+  * evidence/decade/BANDCAP_SWEEP.json projects under the 256
+  * band-bucket cap into a MEASURED
   * rung: `GenScaleDocs /root/testdata/sf0.1 data/sfXXd 200` produces a
   * 1M-doc corpus (1000 → 5M, the full next decade) that
-  * was profiled with one signature pass (BANDCAP_DECADE.json; the
+  * was profiled with one signature pass
+  * (evidence/decade/BANDCAP_DECADE.json; the
   * profiling main is retired, see BENCH.md "Retired diagnostic mains").
   */
 object GenScaleDocs {

@@ -91,13 +91,12 @@ object Clusters {
     * entries (dedup_clusters, dedup_canonical, curate_keep,
     * train_manifest) need the same label assignment, and the CC loop's
     * per-round jobs are the most expensive recomputation in the gate
-    * path. The final labels frame is already localCheckpoint-
-    * materialized by the loop, so the memo only pins the reference.
-    * Bounded keyed AssetMemo (locking/eviction/invariant documented
-    * there); Bench reports the build as its own `shared_labels_build`
-    * line.
+    * path. The final labels frame is already cut by the loop, so the
+    * memo only pins the reference (and releases the cut on eviction,
+    * see AssetMemo); Bench reports the build as its own
+    * `shared_labels_build` line.
     */
-  private val labelsMemo = new graft.AssetMemo(8)
+  private val labelsMemo = new graft.AssetMemo[DataFrame]
 
   def sharedLabels(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =

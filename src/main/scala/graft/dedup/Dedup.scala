@@ -124,14 +124,12 @@ object Dedup {
     * for each, exactly the overhead the SyntheticOrders memo removes
     * on the ingest side. A production pipeline does the same thing:
     * the pair graph is computed once per corpus snapshot and stored;
-    * downstream stages read it. Cached in a bounded keyed AssetMemo
-    * (not a single slot — alternating corpora in one session would
-    * thrash build/persist cycles); locking, eviction, and the
-    * immutable-corpus invariant are documented on AssetMemo. Bench
-    * reports the build as its own `shared_pairs_build` line so the
-    * consumers' per-query timings read as marginal costs.
+    * downstream stages read it. Cached in an AssetMemo (locking,
+    * eviction and the immutable-corpus invariant are documented
+    * there). Bench reports the build as its own `shared_pairs_build`
+    * line so the consumers' per-query timings read as marginal costs.
     */
-  private val pairsMemo = new graft.AssetMemo(8)
+  private val pairsMemo = new graft.AssetMemo[DataFrame]
 
   /** Absolute candidate budget for the shared pair graph: the exact
     * inverted-index self-join emits exactly Σ df·(df−1) candidate rows
@@ -156,25 +154,16 @@ object Dedup {
 
   /** Memoized dispatch DECISION per (session, corpus) — a boolean, not
     * a frame. Kept separate from the frame memos so the LSH branch can
-    * alias [[sharedMinhashPairs]]' frame WITHOUT double ownership:
-    * before round 10 the alias itself sat in pairsMemo, and either
-    * memo's race-loser cleanup or LRU eviction would unpersist the
-    * frame the OTHER memo still served — a silent recompute cliff
-    * (round-9 advice item 4). Now exactly one memo owns each persisted
-    * frame: pairsMemo the exact graph, minhashMemo the LSH graph.
+    * alias [[sharedMinhashPairs]]' frame WITHOUT double ownership: an
+    * evicting memo releases its frame, so a frame held by two memos
+    * could be released under the other (round-9 advice item 4).
+    * Exactly one memo owns each persisted frame: pairsMemo the exact
+    * graph, minhashMemo the LSH graph.
     */
-  private val pairsModeMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(SparkSession, String), Boolean](
-        16, 0.75f, /* accessOrder = */ true) {
-        // bounded like AssetMemo so stopped sessions aren't pinned
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(SparkSession, String), Boolean])
-            : Boolean = size > 64
-      })
+  private val pairsModeMemo = new graft.AssetMemo[Boolean]
 
   private def pairsUseLsh(s: SparkSession, d: String): Boolean =
-    pairsModeMemo.computeIfAbsent((s, d), { _ =>
+    pairsModeMemo.getOrBuild(s, d) {
       val docs = Tables.documents(s, d)
       val post = sharedPostings(s, d)
       val mode = sys.env.getOrElse("SPARK_GRAFT_PAIRS", "auto")
@@ -205,7 +194,7 @@ object Dedup {
         case other => throw new IllegalArgumentException(
           s"SPARK_GRAFT_PAIRS must be auto|exact|lsh, got '$other'")
       }
-    })
+    }
 
   def sharedPairs(s: SparkSession, d: String): DataFrame = {
     // Pair-graph plan selection for the DENSE-decade regime,
@@ -279,7 +268,7 @@ object Dedup {
     * budget dispatches to the LSH plan — one band join + verify per
     * corpus snapshot either way.
     */
-  private val minhashMemo = new graft.AssetMemo(8)
+  private val minhashMemo = new graft.AssetMemo[DataFrame]
 
   def sharedMinhashPairs(s: SparkSession, d: String): DataFrame =
     minhashMemo.getOrBuild(s, d) {
@@ -297,7 +286,7 @@ object Dedup {
     * computed once per corpus snapshot and stored; Bench reports the
     * build as its own `shared_postings_build` line.
     */
-  private val postingsMemo = new graft.AssetMemo(8)
+  private val postingsMemo = new graft.AssetMemo[DataFrame]
 
   def sharedPostings(s: SparkSession, d: String): DataFrame =
     postingsMemo.getOrBuild(s, d) {
@@ -845,8 +834,9 @@ object Dedup {
     // GenScale's ×1e8 copy-id stride at sf10 (id 0's seeded copy = 1e8 =
     // GenScale copy 1 of vector 0), and two different vectors sharing a
     // vec_id corrupted the oracle's per-id signature GROUP BY while the
-    // engine signed per row — the first real divergence CORRECTNESS_SF10
-    // caught (engine 121k pairs vs oracle 52k)
+    // engine signed per row — the first real divergence
+    // evidence/decade/CORRECTNESS_SF10.json caught (engine 121k pairs
+    // vs oracle 52k)
     val copies = base.filter(pmod(col("vec_id"), lit(7L)) === 0L)
       .select((-col("vec_id") - lit(1L)).as("vec_id"), col("label"),
         transform(col("embedding"), (x, i) =>

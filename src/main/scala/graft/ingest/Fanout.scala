@@ -120,25 +120,28 @@ object SyntheticOrders {
     * checkpoint stores the rows as-is (no conversion either way) and
     * keeps the build's partition layout, so the document frame's
     * downstream CPU-heavy consumers (wire encode, fan-outs) stay wide.
-    *
-    * A SINGLE slot, not a map: the drivers (Verify, Bench, one shared
-    * test session) work one (session, sfDir) at a time, and an
-    * unbounded strong-ref map would pin stopped sessions and their
-    * checkpointed blocks forever. On a key change the previous frame's
-    * blocks are reclaimed by the ContextCleaner once the memo drops the
-    * last reference (the sessions run with a periodic-GC interval).
     */
-  @volatile private var memo: Option[((SparkSession, String), DataFrame)] = None
+  private val nestedMemo = new graft.AssetMemo[DataFrame]
 
-  def nested(s: SparkSession, d: String): DataFrame = synchronized {
-    memo match {
-      case Some(((`s`, `d`), df)) => df
-      case _ =>
-        val df = build(s, d).cutLineage()
-        memo = Some(((s, d), df))
-        df
+  def nested(s: SparkSession, d: String): DataFrame =
+    nestedMemo.getOrBuild(s, d)(build(s, d).cutLineage())
+
+  /** The encoded payloads keyed by `order_id`, from one select over the
+    * document: [[wire]] serves its `data` column and [[dlqWireDir]]
+    * picks the payloads to corrupt by `order_id`, so the corpus is
+    * encoded once for both landings. localCheckpoint for the same
+    * reason as [[nested]]: the wire frame is one long base64 string per
+    * row, and the columnar cache's string-column building + per-read
+    * reconstruction dwarfed the encode itself (measured ~20+ CPU-s per
+    * cached consumer pass at sf0.1 vs ~3 CPU-s for the whole encode).
+    */
+  private val wireMemo = new graft.AssetMemo[DataFrame]
+
+  private def keyedWire(s: SparkSession, d: String): DataFrame =
+    wireMemo.getOrBuild(s, d) {
+      val n = nested(s, d)
+      n.select(col("order_id"), EventCodec.encodeCol(n).as("data")).cutLineage()
     }
-  }
 
   /** The wire-encoded stream (what the producer actually sends:
     * `python_producer.py:47-113` builds the doc then base64-posts it).
@@ -147,73 +150,36 @@ object SyntheticOrders {
     * three bench repetitions of `ingest_decode` should re-run the
     * decode, not rebuild the client's payloads.
     */
-  @volatile private var wireMemo: Option[((SparkSession, String), DataFrame)] = None
-
-  def wire(s: SparkSession, d: String): DataFrame = synchronized {
-    wireMemo match {
-      case Some(((`s`, `d`), df)) => df
-      case _ =>
-        // localCheckpoint for the same reason as [[nested]]: the wire
-        // frame is one long base64 string per row, and the columnar
-        // cache's string-column building + per-read reconstruction
-        // dwarfed the encode itself (measured ~20+ CPU-s per cached
-        // consumer pass at sf0.1 vs ~3 CPU-s for the whole encode)
-        val df = EventCodec.encode(nested(s, d)).cutLineage()
-        wireMemo = Some(((s, d), df))
-        df
-    }
-  }
+  def wire(s: SparkSession, d: String): DataFrame =
+    keyedWire(s, d).select("data")
 
   /** The wire stream LANDED as a parquet directory (what a file-source
-    * streaming consumer reads). Written once per (session, sfDir) —
-    * re-landing the producer's payloads on every bench repetition would
-    * time the test harness, not the streaming decode under test.
+    * streaming consumer reads), once per (session, sfDir): re-landing
+    * the producer's payloads on every bench repetition would time the
+    * test harness, not the streaming decode under test. The landing
+    * lives under [[Tables.scratchDir]] — the session-scoped scratch
+    * root that is already registered for recursive delete at JVM exit
+    * (never eagerly — a streaming consumer may still be reading a
+    * landed dir when the session ends), so eviction needs no cleanup.
     */
-  /** Keyed landed-dir memos (round-9 advice item 5): the earlier
-    * single-slot form re-landed the full wire corpus on EVERY corpus
-    * alternation — exactly the pattern the leak-check suites and a
-    * multi-SF bench run — and leaked a fresh never-deleted temp
-    * directory each time. A small keyed map caps the re-land churn at
-    * one landing per (session, sfDir), and the landing lives under
-    * [[Tables.scratchDir]] — the session-scoped scratch root that is
-    * already registered for recursive delete at JVM exit (never
-    * eagerly — a streaming consumer may still be reading a landed dir
-    * when the session ends).
-    */
-  // bounded like AssetMemo/pairsModeMemo so stopped sessions aren't
-  // pinned for the JVM lifetime (round-10 advice item 5); values are
-  // paths under the session scratch root, which is already registered
-  // for delete at JVM exit — eviction needs no cleanup action
-  private def boundedDirMemo() =
-    new java.util.LinkedHashMap[(SparkSession, String), String](
-      16, 0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), String])
-          : Boolean = size > 64
-    }
+  private val wireDirMemo = new graft.AssetMemo[String]
 
-  private val wireDirMemo = boundedDirMemo()
-
-  def wireDir(s: SparkSession, d: String): String = synchronized {
-    Option(wireDirMemo.get((s, d))) match {
-      case Some(dir) => dir
-      case _ =>
-        val dir = graft.Tables.scratchDir(s, d, "wireland") + "/wire"
-        // Pre-split the landed wire asset to one file per core: the
-        // streaming file source plans its micro-batch from the FILE
-        // list, and the upstream encode frame is AQE-coalesced (1-2
-        // partitions ≈ one 128 MB-bytes-per-split scan task), which
-        // would bind the CPU-heavy base64+JSON decode of every
-        // streaming consumer to 1-2 tasks — the batch side re-widens
-        // after decode, but a stream must be wide AT THE SOURCE. A
-        // round-robin repartition here is producer-side work, paid
-        // once per (session, sfDir), outside any timed query.
-        wire(s, d).repartition(s.sparkContext.defaultParallelism)
-          .write.mode("overwrite").parquet(dir)
-        wireDirMemo.put((s, d), dir)
-        dir
+  def wireDir(s: SparkSession, d: String): String =
+    wireDirMemo.getOrBuild(s, d) {
+      val dir = graft.Tables.scratchDir(s, d, "wireland") + "/wire"
+      // Pre-split the landed wire asset to one file per core: the
+      // streaming file source plans its micro-batch from the FILE
+      // list, and the upstream encode frame is AQE-coalesced (1-2
+      // partitions ≈ one 128 MB-bytes-per-split scan task), which
+      // would bind the CPU-heavy base64+JSON decode of every
+      // streaming consumer to 1-2 tasks — the batch side re-widens
+      // after decode, but a stream must be wide AT THE SOURCE. A
+      // round-robin repartition here is producer-side work, paid
+      // once per (session, sfDir), outside any timed query.
+      wire(s, d).repartition(s.sparkContext.defaultParallelism)
+        .write.mode("overwrite").parquet(dir)
+      dir
     }
-  }
 
   /** The DLQ test feed — the wire stream with the md5-chosen 1-in-16
     * payloads truncated to 16 chars — LANDED once per (session, sfDir),
@@ -226,29 +192,23 @@ object SyntheticOrders {
     * write per rep). Bench reports the landing as its own
     * `dlq_wire_build` line.
     */
-  private val dlqDirMemo = boundedDirMemo()
+  private val dlqDirMemo = new graft.AssetMemo[String]
 
-  def dlqWireDir(s: SparkSession, d: String): String = synchronized {
-    Option(dlqDirMemo.get((s, d))) match {
-      case Some(dir) => dir
-      case _ =>
-        val dir = graft.Tables.scratchDir(s, d, "dlqwireland") + "/wire"
-        val n = nested(s, d)
-        val enc = EventCodec.encodeCol(n)
-        val corruptPick =
-          conv(substring(md5(col("order_id").cast("binary")), 1, 2), 16, 10)
-            .cast("int") % 16 === 0
-        // same one-file-per-core pre-split as wireDir — the streaming
-        // source plans its micro-batch from the file list
-        n.withColumn("data",
-            when(corruptPick, substring(enc, 1, 16)).otherwise(enc))
-          .select("data")
-          .repartition(s.sparkContext.defaultParallelism)
-          .write.mode("overwrite").parquet(dir)
-        dlqDirMemo.put((s, d), dir)
-        dir
+  def dlqWireDir(s: SparkSession, d: String): String =
+    dlqDirMemo.getOrBuild(s, d) {
+      val dir = graft.Tables.scratchDir(s, d, "dlqwireland") + "/wire"
+      val corruptPick =
+        conv(substring(md5(col("order_id").cast("binary")), 1, 2), 16, 10)
+          .cast("int") % 16 === 0
+      // same one-file-per-core pre-split as wireDir — the streaming
+      // source plans its micro-batch from the file list
+      keyedWire(s, d)
+        .select(when(corruptPick, substring(col("data"), 1, 16))
+          .otherwise(col("data")).as("data"))
+        .repartition(s.sparkContext.defaultParallelism)
+        .write.mode("overwrite").parquet(dir)
+      dir
     }
-  }
 
   private def build(s: SparkSession, d: String): DataFrame = {
     val o = Tables.orders(s, d)

@@ -191,12 +191,7 @@ object IngestQueries {
         // fresh createTempDirectory per invocation would leak one full
         // partitioned copy of the fan-out per bench rep / verify run
         val out = Tables.scratchDir(s, d, "psink") + "/orders"
-        val fanned = Fanout.withPartitionKeys(
-          Fanout.orders(SyntheticOrders.nested(s, d)),
-          col("order_date"))
-          .select("order_id", "customer_id", "order_date", "status",
-            "year", "month")
-        PartitionedSink.write(fanned, out,
+        PartitionedSink.write(ordersByMonth(SyntheticOrders.nested(s, d)), out,
           partitionCols = Seq("year", "month"),
           clusterCols = Seq("customer_id"))
         s.read.parquet(out)
@@ -235,21 +230,9 @@ object IngestQueries {
     "catalog_roundtrip" -> QueryDef(
       (s, d) => {
         val out = Tables.scratchDir(s, d, "glue") + "/orders"
-        val fanned = Fanout.withPartitionKeys(
-          Fanout.orders(SyntheticOrders.nested(s, d)),
-          col("order_date"))
-          .select("order_id", "customer_id", "order_date", "status",
-            "year", "month")
-        PartitionedSink.write(fanned, out,
-          partitionCols = Seq("year", "month"),
-          clusterCols = Seq("customer_id"))
         val tbl = "graft_orders_by_name"
-        val dataDdl = fanned.drop("year", "month").schema.fields
-          .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        s.sql(s"CREATE TABLE $tbl ($dataDdl, year STRING, month STRING) " +
-          s"USING PARQUET PARTITIONED BY (year, month) LOCATION '$out'")
-        s.sql(s"MSCK REPAIR TABLE $tbl")
+        registerPartitioned(s, tbl, ordersByMonth(SyntheticOrders.nested(s, d)),
+          out, Seq("year", "month"), Seq("customer_id"))
         s.sql(s"SELECT year, month, count(*) AS n_orders FROM $tbl " +
           "GROUP BY year, month ORDER BY year, month")
       },
@@ -422,43 +405,49 @@ object IngestQueries {
         val keyed = nested
           .withColumn("year", substring(col("order_date"), 1, 4))
           .withColumn("month", substring(col("order_date"), 6, 2))
-        def register(name: String, df: org.apache.spark.sql.DataFrame,
-            path: String, partitionCols: Seq[String],
-            clusterCols: Seq[String] = Nil): Unit = {
-          PartitionedSink.write(df, path, partitionCols, clusterCols)
-          val dataDdl = df.schema.fields
-            .filterNot(f => partitionCols.contains(f.name))
-            .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-          val partDdl = partitionCols.map(c => s"$c STRING").mkString(", ")
-          s.sql(s"DROP TABLE IF EXISTS $name")
-          s.sql(s"CREATE TABLE $name ($dataDdl, $partDdl) USING PARQUET " +
-            s"PARTITIONED BY (${partitionCols.mkString(", ")}) " +
-            s"LOCATION '$path'")
-          s.sql(s"MSCK REPAIR TABLE $name")
-        }
-        val registrations: Seq[() => Unit] = Seq(
-          () => register("graft_cat_orders",
-            Fanout.withPartitionKeys(Fanout.orders(nested), col("order_date"))
-              .select("order_id", "customer_id", "order_date", "status",
-                "year", "month"),
-            base + "/orders", Seq("year", "month"), Seq("customer_id")),
-          () => register("graft_cat_product_details",
-            Fanout.productDetails(keyed, passthrough = Seq("year", "month")),
-            base + "/product_details", Seq("year", "month")),
-          () => register("graft_cat_purchase_details",
-            Fanout.purchaseDetails(keyed, passthrough = Seq("year", "month")),
-            base + "/purchase_details", Seq("year", "month")),
-          () => register("graft_cat_shipping_addresses",
-            Fanout.shippingAddresses(keyed, passthrough = Seq("year", "month")),
-            base + "/shipping_addresses", Seq("country", "year", "month")))
         // Sequential on purpose: overlapping the four write jobs from a
         // thread pool (guide §2.6) was MEASURED WORSE here — 59→119
         // executor-CPU-s with no wall win (four distinct cold codegen
         // classes interpreting concurrently + four rebalance exchanges
         // contending); the sinks are too short for tail back-fill to
         // pay on this corpus. Revisit only with profile evidence.
-        registrations.foreach(_())
+        registerPartitioned(s, "graft_cat_orders", ordersByMonth(nested),
+          base + "/orders", Seq("year", "month"), Seq("customer_id"))
+        registerPartitioned(s, "graft_cat_product_details",
+          Fanout.productDetails(keyed, passthrough = Seq("year", "month")),
+          base + "/product_details", Seq("year", "month"))
+        registerPartitioned(s, "graft_cat_purchase_details",
+          Fanout.purchaseDetails(keyed, passthrough = Seq("year", "month")),
+          base + "/purchase_details", Seq("year", "month"))
+        registerPartitioned(s, "graft_cat_shipping_addresses",
+          Fanout.shippingAddresses(keyed, passthrough = Seq("year", "month")),
+          base + "/shipping_addresses", Seq("country", "year", "month"))
         catalogMemo.put(s, d)
       }
     }
+
+  /** The orders sink keyed by the order's year and month (A8's layout). */
+  private def ordersByMonth(nested: org.apache.spark.sql.DataFrame) =
+    Fanout.withPartitionKeys(Fanout.orders(nested), col("order_date"))
+      .select("order_id", "customer_id", "order_date", "status",
+        "year", "month")
+
+  /** Land `df` through the partitioned sink and register it by name as
+    * an external table with STRING partition keys, then discover its
+    * partitions with MSCK (the Glue crawler analog).
+    */
+  private def registerPartitioned(s: org.apache.spark.sql.SparkSession,
+      name: String, df: org.apache.spark.sql.DataFrame, path: String,
+      partitionCols: Seq[String], clusterCols: Seq[String] = Nil): Unit = {
+    PartitionedSink.write(df, path, partitionCols, clusterCols)
+    val dataDdl = df.schema.fields
+      .filterNot(f => partitionCols.contains(f.name))
+      .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+    val partDdl = partitionCols.map(c => s"$c STRING").mkString(", ")
+    s.sql(s"DROP TABLE IF EXISTS $name")
+    s.sql(s"CREATE TABLE $name ($dataDdl, $partDdl) USING PARQUET " +
+      s"PARTITIONED BY (${partitionCols.mkString(", ")}) " +
+      s"LOCATION '$path'")
+    s.sql(s"MSCK REPAIR TABLE $name")
+  }
 }

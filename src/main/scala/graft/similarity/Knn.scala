@@ -119,34 +119,6 @@ object Knn {
         round(col("e.score"), 4).as("cosine"))
   }
 
-  /** D54 core — the budget-dispatched k-NN graph. Below the ordered-
-    * pair budget Σ n_l·(n_l−1) ≤ 2e7 the exact within-label graph is
-    * affordable and runs lossless ([[exactLabelGraph]]); above it the
-    * graph is built by NN-descent ([[NnDescent.knnGraph]]), whose
-    * per-vector work is O(iters·kInternal²) — independent of corpus
-    * size — and whose measured recall@3 is 0.91–1.00 across the
-    * proven decades (RECALL_SF10.json), replacing the round-9
-    * hyperplane sub-blocking whose measured decade recall was 0.262
-    * (position-insensitive signature bits cannot preserve cos ≈ 0.45
-    * neighbors on this corpus's isotropic label blocks; a k-means
-    * coarse quantizer measured 0.30–0.50 at the same budget — see the
-    * NnDescent scaladoc).
-    */
-  def graphTopK(e: DataFrame, k: Int, budget: Long = 20000000L,
-      kInternal: Int = 0): DataFrame = {
-    val row = e.groupBy("label").agg(count(lit(1)).as("n"))
-      .agg(coalesce(sum(col("n") * (col("n") - lit(1L))), lit(0L)).as("v"),
-        coalesce(avg(col("n")), lit(0.0)).as("nbar"))
-      .head()
-    val spent = row.getLong(0)
-    if (spent <= budget) exactLabelGraph(e, k)
-    else {
-      val kInt = if (kInternal > 0) kInternal
-                 else autoKInternal(row.getDouble(1))
-      NnDescent.knnGraph(e, k, kInt)
-    }
-  }
-
   /** Escalation outcome of [[graphTopKEscalating]]'s recall guard —
     * driver-side metadata for logs/specs; the graph itself is the
     * returned DataFrame. `kRung` is the FIRST ladder rung
@@ -234,11 +206,18 @@ object Knn {
   def nextKRung(k: Int): Int =
     math.max(k + 1, math.ceil(k * 4.0 / 3.0).toInt)
 
-  /** D54 production dispatcher — [[graphTopK]] plus a SELF-HEALING
-    * recall guard (round-13 verdict item 2). The in-plan recall_ok
-    * gate turns a structure-free corpus (the KSWEEP_SF100D1 worst
-    * case: converged K=48 recall@3 = 0.8586 on decorrelated 218k
-    * blocks) into a loud failure, but a 100 TB pipeline operator
+  /** D54 production dispatcher — the budget-dispatched k-NN graph plus
+    * a SELF-HEALING recall guard (round-13 verdict item 2). Below the
+    * ordered-pair budget Σ n_l·(n_l−1) ≤ `budget` the exact
+    * within-label graph is affordable and runs lossless
+    * ([[exactLabelGraph]]); above it the graph is built by NN-descent
+    * ([[NnDescent.knnGraph]]), whose per-vector work is
+    * O(iters·kInternal²) — independent of corpus size (see the
+    * NnDescent scaladoc). The in-plan recall_ok gate turns a
+    * structure-free corpus (the worst case in
+    * evidence/decade/KSWEEP_SF100D1.json: converged K=48 recall@3 =
+    * 0.8586 on decorrelated 218k blocks) into a loud failure, but a
+    * 100 TB pipeline operator
     * wants an escalation policy, not just an abort. Here the
     * dispatcher PROBES the approximate graph against the exact
     * 1-in-mod sample (the same deterministic sample the gate hashes;
@@ -622,9 +601,10 @@ object Knn {
     * prescribed K = max(30, c·log₂ n̄): c = 2.7 anchors the floor at
     * the measured-near-perfect sf1 point (2.7·log₂ 2 180 = 29.9 → 30;
     * recall 0.9968) and yields 39 at sf10 / 48 at the sf100 decade.
-    * Calibration artifact KSWEEP_SF10.json (same-day sweep at the
-    * decade): K = 30 → 0.9131, K = 39 → 0.9593, K = 48 → 0.9808 — the
-    * selected rung holds a +0.06 margin over the hash-gated bound and
+    * Calibration artifact evidence/decade/KSWEEP_SF10.json (same-day
+    * sweep at the decade): K = 30 → 0.9131, K = 39 → 0.9593,
+    * K = 48 → 0.9808 — the selected rung holds a +0.06 margin over
+    * the hash-gated bound and
     * the next rung's measured recall covers the projected next-decade
     * decline. Cost grows ~K² per round (candidate pairs are (2K)² per
     * pivot); measured walls 364.8 / 478.9 / 644.2 s — the log law buys
@@ -698,9 +678,9 @@ object Knn {
     // hard-negative sampling and semantic-dedup clustering. Exact
     // all-pairs is O(n²) and never runs at corpus scale; below the
     // ordered-pair budget the graph is the exact within-label join,
-    // above it NN-descent (see graphTopK and the NnDescent scaladoc —
-    // this replaced the round-9 hyperplane sub-blocking whose measured
-    // decade recall was 0.262).
+    // above it NN-descent (see graphTopKEscalating and the NnDescent
+    // scaladoc — this replaced the round-9 hyperplane sub-blocking
+    // whose measured decade recall was 0.262).
     //
     // Gated like knn_ivf (D7b): NN-descent's converged graph is
     // deterministic but its iterative merge is not SQL-portable, so

@@ -144,15 +144,16 @@ object NnDescent {
     // Termination is the paper's δ rule (Dong et al. §2.3, δ = 0.001):
     // stop once a round's surviving fresh mass falls below δ·K·n —
     // NOT at literal zero. Round-13 finding (decorrelated 218k-block
-    // corpus, KSWEEP_SF100D1.json): on low-structure geometry the
-    // fresh mass has a long sub-percent tail, and the previous
+    // corpus, evidence/decade/KSWEEP_SF100D1.json): on low-structure
+    // geometry the fresh mass has a long sub-percent tail, and the previous
     // fresh==0 ∧ maxIters=18 pair terminated BY THE CAP mid-descent
     // (999k fresh at round 18, recall@3 0.789 — an iteration-budget
     // artifact, not a K deficit). δ-stop bounds the un-exploited
     // staleness at 0.1% of list mass (recall effect ≤ ~10⁻³) while
     // duplicate-dense corpora, whose fresh mass collapses 9.5M → 303
-    // in one round (KSWEEP_SF100V), stop on the same round they
-    // previously hit 0 — their final edge set is bit-identical
+    // in one round (evidence/decade/KSWEEP_SF100V.json), stop on the
+    // same round they previously hit 0 — their final edge set is
+    // bit-identical
     // because the sub-δ round discovered nothing. maxIters = 60 is a
     // runaway backstop, no longer the binding constraint; hitting it
     // is logged as NOT CONVERGED.

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.ingest.{EventCodec, Fanout}
+import graft.ingest.Fanout
 
 /** The Kinesis→Firehose→S3 pipeline as Structured Streaming
   * (SURVEY §2 A10–A11).
@@ -22,11 +22,6 @@ import graft.ingest.{EventCodec, Fanout}
   * pure DataFrame => DataFrame.
   */
 object IngestStream {
-
-  /** Stream of raw wire records (one base64 payload per line/row with a
-    * `data` column) → typed order events.
-    */
-  def decodeStream(raw: DataFrame): DataFrame = EventCodec.decode(raw)
 
   /** Fan a decoded event stream out to the four Firehose-analog parquet
     * sinks, each dynamic-partitioned by its derived time keys (plus

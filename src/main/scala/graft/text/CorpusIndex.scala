@@ -63,7 +63,7 @@ object CorpusIndex {
     * consumers' timings read as marginal costs; locking, eviction,
     * and the immutable-corpus invariant are documented on AssetMemo.
     */
-  private val chunksMemo = new graft.AssetMemo(8)
+  private val chunksMemo = new graft.AssetMemo[org.apache.spark.sql.DataFrame]
 
   def sharedChunks(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =

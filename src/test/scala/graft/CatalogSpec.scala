@@ -108,6 +108,24 @@ class CatalogSpec extends AnyFunSuite {
     assert(stray.isEmpty, s"library env reads: ${stray.mkString("; ")}")
   }
 
+  test("AssetMemo is the only per-corpus asset cache in library code") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    // the shapes of the hand-rolled caches AssetMemo replaced: bounded
+    // LinkedHashMaps, computeIfAbsent maps and single-slot vars
+    val cache = "removeEldestEntry|computeIfAbsent|@volatile private var \\w*[mM]emo\\b".r
+    val files = java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+    assert(files.exists(_.endsWith("AssetMemo.scala")), "the scan found no sources")
+    val stray = files.filterNot(_.endsWith("AssetMemo.scala")).flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if cache.findFirstIn(l).isDefined =>
+          s"${root.relativize(p)}:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(stray.isEmpty, s"hand-rolled asset caches: ${stray.mkString("; ")}")
+  }
+
   test("flagship analytics queries return non-empty results") {
     for (name <- Seq("ref_avg_order_value", "ref_top_products",
         "ref_order_customer", "ref_income_by_type", "ref_sales_by_country",

@@ -49,8 +49,8 @@ class GraphOpsSpec extends AnyFunSuite {
     // the catalog entry now emits the gated summary row; the label
     // invariant is a property of the underlying triple graph, so test
     // the dispatched graph API directly
-    val g = graft.similarity.Knn.graphTopK(
-      Tables.embeddings(spark, sf), 3)
+    val g = graft.similarity.Knn.graphTopKDispatch(
+      Tables.embeddings(spark, sf), 3).graph
     val labels = Tables.embeddings(spark, sf).select(
       col("vec_id").as("id"), col("label"))
     val crossBlock = g

@@ -7,7 +7,7 @@ import graft.similarity.Knn
 
 /** The knn_graph recall-escalation policy (round-13 verdict item 2)
   * on a small DECORRELATED corpus — the structure-free geometry class
-  * KSWEEP_SF100D1 measured below the 0.9 gate at the auto K. Vectors
+  * evidence/decade/KSWEEP_SF100D1.json measured below the 0.9 gate at the auto K. Vectors
   * are deterministic splitmix64 noise (the --decorrelate generator's
   * property at spec scale): pairwise cosines are extreme-value noise,
   * so a deliberately narrow NN-descent list (kInternal = 3) probes

@@ -96,7 +96,7 @@ class StreamingSpec extends AnyFunSuite {
     val ckBase = Files.createTempDirectory("graft-stream-ck").toString
 
     val raw = spark.readStream.text(inDir).withColumnRenamed("value", "data")
-    val events = IngestStream.decodeStream(raw)
+    val events = EventCodec.decode(raw)
     val queries = IngestStream.startFanout(events, outBase, ckBase)
     queries.foreach(_.awaitTermination(120000))
 
@@ -119,7 +119,7 @@ class StreamingSpec extends AnyFunSuite {
     val inDir = Files.createTempDirectory("graft-win-in").toString
     enc.coalesce(1).write.mode("overwrite").text(inDir)
     val raw = spark.readStream.text(inDir).withColumnRenamed("value", "data")
-    val agg = IngestStream.windowedVolume(IngestStream.decodeStream(raw))
+    val agg = IngestStream.windowedVolume(EventCodec.decode(raw))
     val q = agg.writeStream.format("memory").queryName("winvol")
       .outputMode("append").trigger(
         org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
@@ -159,7 +159,7 @@ class StreamingSpec extends AnyFunSuite {
     enc.coalesce(1).write.mode("overwrite").text(inDir)
     val raw = spark.readStream.text(inDir).withColumnRenamed("value", "data")
     val joined = IngestStream.joinOrdersWithAddresses(
-      IngestStream.decodeStream(raw))
+      EventCodec.decode(raw))
     val q = joined.writeStream.format("memory").queryName("ssj")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()

@@ -4,7 +4,7 @@
 Runs tools/check_oracle.py one key at a time (one heavy DuckDB at a
 time — the disk/RAM discipline from the round-7/9 sf1+sf10 sweeps),
 with a per-key timeout and wall clock, and writes a JSON artifact in
-the CORRECTNESS_SF10.json per-query shape.
+the evidence/decade/CORRECTNESS_SF10.json per-query shape.
 
 Usage:
   sweep_keys.py <sfDir> <verifyOutDir> <artifactPath> [--timeout=900]
