@@ -25,12 +25,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * leaves no entry, so the next call rebuilds.
   *
   * Least-recently-used entries beyond [[AssetMemo.MaxEntries]] are
-  * evicted. An evicted `DataFrame` is released — unpersisted, and on
-  * the reliable-checkpoint path its checkpoint files are deleted
-  * ([[Materialize.release]]); any other value is just dropped. An
-  * entry whose build is still running is dropped without waiting. An
-  * in-flight reader of an evicted reliable cut fails rather than
-  * recomputes (its lineage is truncated), which is why the bound sits
+  * evicted. An evicted `DataFrame` is released — unpersisted, and if
+  * it is a cut, its blocks dropped or, on the reliable-checkpoint path,
+  * its checkpoint files deleted ([[Materialize.release]]); any other
+  * value is just dropped. An entry whose build is still running is
+  * dropped without waiting. An in-flight reader of an evicted cut
+  * fails rather than recomputes (its lineage is truncated), which is
+  * why the bound sits
   * above the corpora per session (3 sf dirs plus a few suite-planted
   * ones).
   */

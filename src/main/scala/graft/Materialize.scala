@@ -54,18 +54,20 @@ object Materialize {
     }
   }
 
-  /** Delete the checkpoint files of a reliable cut that is no longer
-    * read. Iterative loops call it on the round they supersede, so the
-    * checkpoint directory holds the live round, not one copy per round.
-    * A no-op for a local cut (its blocks are not files) and for a frame
-    * that is not itself a cut. The caller must not read `df` again.
+  /** Free a cut that is no longer read: drop a local cut's blocks, and
+    * delete a reliable cut's checkpoint files. Iterative loops call it
+    * on the round they supersede, so storage holds the live round, not
+    * one copy per round. A no-op for a frame that is not itself a cut.
+    * The caller must not read `df` again.
     */
   def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.getCheckpointFile.foreach { f =>
-      val p = new Path(f)
-      p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-    }
+    case r: LogicalRDD =>
+      r.rdd.unpersist(blocking = false)
+      r.rdd.getCheckpointFile.foreach { f =>
+        val p = new Path(f)
+        p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+          .delete(p, true)
+      }
     case _ => ()
   }
 

@@ -27,6 +27,16 @@ class MaterializeSpec extends AnyFunSuite {
       org.apache.spark.sql.execution.LogicalRDD])
   }
 
+  test("release drops a local cut's blocks") {
+    val cut = Materialize.cut(sample())
+    val rdd = cut.queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    val sc = spark.sparkContext
+    assert(sc.getPersistentRDDs.contains(rdd.id))
+    Materialize.release(cut)
+    assert(!sc.getPersistentRDDs.contains(rdd.id))
+  }
+
   test("reliableCheckpointDir routes the cut through a reliable checkpoint") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_reliable_ckpt").toString

@@ -1,11 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ingest.{EventCodec, SyntheticOrders}
+import graft.ingest.{EventCodec, Fanout, SyntheticOrders}
 import graft.streaming.{IngestStream, LatestKV}
 
 class StreamingSpec extends AnyFunSuite {
@@ -86,31 +87,144 @@ class StreamingSpec extends AnyFunSuite {
       s"restored dedup state violated: $got")
   }
 
+  private val fanoutSinks =
+    Seq("orders", "product_details", "purchase_details", "shipping_addresses")
+
+  /** Lands wire records (one `data` column) as a text directory. */
+  private def landWire(records: DataFrame): String = {
+    val dir = Files.createTempDirectory("graft-fan-in").toString
+    records.coalesce(1).write.mode("overwrite").text(dir)
+    dir
+  }
+
+  private def decodedStream(inDir: String): DataFrame =
+    EventCodec.decode(spark.readStream.text(inDir).withColumnRenamed("value", "data"))
+
+  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  /** Runs the fan-out over `inDir` to completion. */
+  private def fanout(inDir: String, outBase: String, ckBase: String): Unit =
+    IngestStream.startFanout(decodedStream(inDir), outBase, ckBase)
+      .foreach(q => assert(q.awaitTermination(120000), "fanout did not finish"))
+
+  /** Batch `Fanout` over decoded events, by sink name. */
+  private def batchFanout(decoded: DataFrame): Map[String, DataFrame] = {
+    val keys = Seq("year", "month", "day", "hour")
+    val keyed = Fanout.withPartitionKeys(decoded, Fanout.eventTs)
+    Map("orders" -> Fanout.orders(keyed, keys),
+      "product_details" -> Fanout.productDetails(keyed, keys),
+      "purchase_details" -> Fanout.purchaseDetails(keyed, keys),
+      "shipping_addresses" -> Fanout.shippingAddresses(keyed, keys))
+  }
+
+  /** A sink's committed rows, read with `like`'s schema and column order
+    * (partition values stay strings, as the projections produce them).
+    */
+  private def readSink(dir: String, like: DataFrame): DataFrame =
+    spark.read.schema(like.schema).parquet(dir).select(like.columns.map(col): _*)
+
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.count() == want.count(), s"$what: row counts differ")
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      s"$what: row multisets differ")
+  }
+
+  private def dataFiles(dir: java.io.File): Int =
+    Option(dir.listFiles()).toSeq.flatten.map { f =>
+      if (f.isDirectory) { if (f.getName.startsWith("_")) 0 else dataFiles(f) }
+      else if (f.getName.endsWith(".parquet")) 1 else 0
+    }.sum
+
   test("streaming fanout writes the same rows as the batch transforms") {
-    import spark.implicits._
-    // wire-encode the synthetic events, feed them as a file stream
     val enc = EventCodec.encode(SyntheticOrders.nested(spark, sf))
-    val inDir = Files.createTempDirectory("graft-stream-in").toString
-    enc.coalesce(1).write.mode("overwrite").text(inDir)
-    val outBase = Files.createTempDirectory("graft-stream-out").toString
-    val ckBase = Files.createTempDirectory("graft-stream-ck").toString
+    val inDir = landWire(enc)
+    val outBase = tmp("graft-stream-out")
+    val queries = IngestStream.startFanout(decodedStream(inDir), outBase,
+      tmp("graft-stream-ck"))
+    assert(queries.size == 1, "the fan-out must be one query")
+    queries.foreach(q => assert(q.awaitTermination(120000)))
 
-    val raw = spark.readStream.text(inDir).withColumnRenamed("value", "data")
-    val events = EventCodec.decode(raw)
-    val queries = IngestStream.startFanout(events, outBase, ckBase)
-    queries.foreach(_.awaitTermination(120000))
-
-    val batchEvents = EventCodec.decode(enc)
-    val streamedOrders = spark.read.parquet(s"$outBase/orders")
-    assert(streamedOrders.count() == batchEvents.count())
-    val streamedProducts = spark.read.parquet(s"$outBase/product_details")
-    val expectedProducts =
-      batchEvents.agg(sum(size(col("product_details")))).head.getLong(0)
-    assert(streamedProducts.count() == expectedProducts)
+    val expected = batchFanout(EventCodec.decode(enc))
+    fanoutSinks.foreach { s =>
+      assertSameRows(readSink(s"$outBase/$s", expected(s)), expected(s), s)
+      assert(new java.io.File(s"$outBase/$s/_spark_metadata").isDirectory,
+        s"$s has no commit log")
+    }
     // dynamic partitioning materialized (firehose-style layout)
     assert(new java.io.File(s"$outBase/orders").list().exists(_.startsWith("year=")))
     assert(new java.io.File(s"$outBase/shipping_addresses").list()
       .exists(_.startsWith("country=")))
+  }
+
+  test("fanout reports in-band ingest counts that match the batch") {
+    // one truncated payload: the codec decodes it to an all-null row
+    val enc = EventCodec.encode(SyntheticOrders.nested(spark, sf))
+    val wire = enc.limit(1).select(substring(col("data"), 1, 16).as("data"))
+      .union(enc)
+    val inDir = landWire(wire)
+    val outBase = tmp("graft-obs-out")
+    val q = IngestStream.startFanout(decodedStream(inDir), outBase,
+      tmp("graft-obs-ck")).head
+    assert(q.awaitTermination(120000))
+    val observed = q.recentProgress.toSeq
+      .flatMap(p => Option(p.observedMetrics.get("ingest")))
+    assert(observed.nonEmpty, "no batch reported the ingest observation")
+    def total(name: String): Long = observed.map(_.getAs[Long](name)).sum
+
+    val decoded = EventCodec.decode(spark.read.text(inDir).withColumnRenamed("value", "data"))
+    val undecodable = decoded.filter(col("order_id").isNull).count()
+    assert(undecodable == 1)
+    assert(total("decoded_rows") == decoded.count())
+    assert(total("undecodable_rows") == undecodable)
+    assert(total("product_rows") ==
+      batchFanout(decoded)("product_details").count())
+    assert(total("product_rows") ==
+      spark.read.parquet(s"$outBase/product_details").count())
+  }
+
+  test("a fanout batch replayed after one sink failed lands every row once") {
+    val inDir = landWire(EventCodec.encode(SyntheticOrders.nested(spark, sf)))
+    val refOut = tmp("graft-replay-ref")
+    fanout(inDir, refOut, tmp("graft-replay-refck"))
+
+    val (outBase, ckBase) = (tmp("graft-replay-out"), tmp("graft-replay-ck"))
+    // a regular file where the addresses sink's directory belongs fails
+    // that sink's write; the other three commit batch 0 first
+    val blocker = new java.io.File(s"$outBase/shipping_addresses")
+    assert(blocker.createNewFile())
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      fanout(inDir, outBase, ckBase))
+    fanoutSinks.init.foreach(s =>
+      assert(new java.io.File(s"$outBase/$s/_spark_metadata/0").isFile,
+        s"$s did not commit batch 0 before the failure"))
+    assert(blocker.delete())
+    fanout(inDir, outBase, ckBase)
+
+    fanoutSinks.foreach { s =>
+      val ref = spark.read.parquet(s"$refOut/$s")
+      assertSameRows(readSink(s"$outBase/$s", ref), ref, s)
+      // a second copy of batch 0 would show as extra files on disk
+      assert(dataFiles(new java.io.File(s"$outBase/$s")) ==
+        dataFiles(new java.io.File(s"$refOut/$s")), s"$s holds extra files")
+      assert(new java.io.File(s"$outBase/$s/_spark_metadata").list()
+        .filterNot(_.startsWith(".")).toSeq == Seq("0"))
+    }
+  }
+
+  test("fanout refuses a sink whose log holds batches its checkpoint never planned") {
+    val inDir = landWire(EventCodec.encode(SyntheticOrders.nested(spark, sf)))
+    val outBase = tmp("graft-stale-out")
+    // the orders sink written by a query with its own checkpoint
+    Fanout.orders(decodedStream(inDir)).writeStream
+      .format("parquet")
+      .option("path", s"$outBase/orders")
+      .option("checkpointLocation", tmp("graft-stale-oldck"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination(120000)
+    val e = intercept[IllegalStateException](
+      IngestStream.startFanout(decodedStream(inDir), outBase, tmp("graft-stale-ck")))
+    assert(e.getMessage.contains("sink orders"), e.getMessage)
   }
 
   test("windowed volume agg with watermark runs on a stream") {
