@@ -273,13 +273,12 @@ object Bench {
     val sentinelFull = sentinels
       .map { case (i, s, c) => s"[$i,${fmt(s)},${fmt(c)}]" }
       .mkString("[", ",", "]")
-    // Pair-graph provenance tag (round-8 advice item): "<env>:<plan>"
-    // where env is the SPARK_GRAFT_PAIRS request (auto unless overridden)
-    // and plan is what sharedPairs actually built this JVM ("unbuilt" if
-    // no entry touched it). Artifacts produced on the ~0.87-recall LSH
-    // graph can never be mistaken for exact-graph numbers.
-    val pairsMode = sys.env.getOrElse("SPARK_GRAFT_PAIRS", "auto") +
-      ":" + graft.dedup.Dedup.pairsPlanResolved
+    // Pair-graph provenance tag (round-8 advice item): "auto:<plan>"
+    // where plan is what sharedPairs' auto dispatch actually built this
+    // JVM ("unbuilt" if no entry touched it). Artifacts produced on the
+    // ~0.87-recall LSH graph can never be mistaken for exact-graph
+    // numbers.
+    val pairsMode = "auto:" + graft.dedup.Dedup.pairsPlanResolved
     val line =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""n_queries":${results.size},"failures":${failed.size},""" +

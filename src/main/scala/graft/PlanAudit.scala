@@ -47,8 +47,8 @@ object PlanAudit {
     * holder (`ks_drift`, value-cardinality-bounded cumsums) moved onto
     * the distributed ranged prefix-sum pass, so every global Window is
     * now a violation — the zero-single-reducer-sort invariant is fully
-    * gated. (withGlobalIndex / withGlobalPrefixSums need no exemption —
-    * their offsets are driver-collected counts, not a window.)
+    * gated. (Packing.withGlobalPrefixSums needs no exemption — its
+    * offsets are driver-collected counts, not a window.)
     */
   private val globalWindowAllow = Set.empty[String]
 

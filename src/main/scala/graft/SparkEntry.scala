@@ -16,14 +16,10 @@ object SparkEntry {
     */
   private lazy val catalog: Map[String, QueryDef] =
     operators.RefQueries.defs ++
+      operators.Tpch.defs ++
       operators.Relational.defs ++
-      operators.Relational2.defs ++
-      operators.Relational3.defs ++
-      operators.Relational4.defs ++
       operators.TypedOps.defs ++
       operators.SqlSurface.defs ++
-      operators.TpchMore.defs ++
-      operators.TpchFull.defs ++
       operators.Skew.defs ++
       operators.Packing.defs ++
       operators.Maintenance.defs ++

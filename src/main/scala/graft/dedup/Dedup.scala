@@ -166,34 +166,26 @@ object Dedup {
     pairsModeMemo.getOrBuild(s, d) {
       val docs = Tables.documents(s, d)
       val post = sharedPostings(s, d)
-      val mode = sys.env.getOrElse("SPARK_GRAFT_PAIRS", "auto")
-      mode match {
-        case "exact" => false
-        case "lsh"   => true
-        case "auto" =>
-          // one df-agg pass: non-hot ≡ df ≤ cap, so the spent scalar
-          // needs no hot-set anti-join (the first probe formulation
-          // cost a measured ~88 s of the 277 s sf10 build — two extra
-          // aggregates + an anti-join over the postings for a number
-          // one filtered aggregate produces).
-          // Cap in exact INTEGER arithmetic, replicated verbatim by the
-          // oracle (greatest(1000, count // 1000)): the earlier
-          // count*0.001 binary-double form could differ from DuckDB's
-          // exact DECIMAL FLOOR by 1 near exact multiples of 1000 docs,
-          // shifting df==cap boundary shingles across the hot cut and —
-          // near the 1e9 budget — potentially flipping the engine and
-          // the oracle onto DIFFERENT pair-graph branches (round-9
-          // advice item 2)
-          val cap = math.max(1000L,
-            docs.select(count(lit(1))).head().getLong(0) / 1000L)
-          val spent = post.groupBy("s").agg(count(lit(1)).as("df"))
-            .filter(col("df") <= cap)
-            .agg(coalesce(sum(col("df") * (col("df") - lit(1L))), lit(0L)))
-            .head().getLong(0)
-          spent > pairsCandidateBudget
-        case other => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_PAIRS must be auto|exact|lsh, got '$other'")
-      }
+      // one df-agg pass: non-hot ≡ df ≤ cap, so the spent scalar
+      // needs no hot-set anti-join (the first probe formulation
+      // cost a measured ~88 s of the 277 s sf10 build — two extra
+      // aggregates + an anti-join over the postings for a number
+      // one filtered aggregate produces).
+      // Cap in exact INTEGER arithmetic, replicated verbatim by the
+      // oracle (greatest(1000, count // 1000)): the earlier
+      // count*0.001 binary-double form could differ from DuckDB's
+      // exact DECIMAL FLOOR by 1 near exact multiples of 1000 docs,
+      // shifting df==cap boundary shingles across the hot cut and —
+      // near the 1e9 budget — potentially flipping the engine and
+      // the oracle onto DIFFERENT pair-graph branches (round-9
+      // advice item 2)
+      val cap = math.max(1000L,
+        docs.select(count(lit(1))).head().getLong(0) / 1000L)
+      val spent = post.groupBy("s").agg(count(lit(1)).as("df"))
+        .filter(col("df") <= cap)
+        .agg(coalesce(sum(col("df") * (col("df") - lit(1L))), lit(0L)))
+        .head().getLong(0)
+      spent > pairsCandidateBudget
     }
 
   def sharedPairs(s: SparkSession, d: String): DataFrame = {
@@ -216,9 +208,7 @@ object Dedup {
     // the selection scalar (guarded UNION on the same Σ df·(df−1),
     // [[MurmurSql.pairGraphChainSql]]), so all 20 consumers stay
     // hash-provable at every scale factor on whichever path the
-    // corpus selects. SPARK_GRAFT_PAIRS overrides for measurement
-    // runs ("exact" | "lsh"); unknown values FAIL rather than
-    // silently running some default plan.
+    // corpus selects.
     val useLsh = pairsUseLsh(s, d)
     lastPairsPlan = if (useLsh) "lsh" else "exact"
     if (useLsh) {
@@ -226,9 +216,9 @@ object Dedup {
       // approximate at the J=0.5 boundary, and a reader of any
       // artifact produced in this mode must be able to tell
       System.err.println(
-        s"[graft] sharedPairs($d): candidate budget exceeded or " +
-          "SPARK_GRAFT_PAIRS=lsh — serving the LSH (minhash) pair " +
-          "graph, not the exact inverted-index graph")
+        s"[graft] sharedPairs($d): candidate budget exceeded — " +
+          "serving the LSH (minhash) pair graph, not the exact " +
+          "inverted-index graph")
       // serve dedup_minhash's memoized frame — above budget the two
       // are the SAME computation, and a full-catalog run would
       // otherwise pay the band join + verify twice. NOT re-stored in
@@ -435,7 +425,7 @@ object Dedup {
     (pmod(a, lit(4294967296L)) - lit(2147483648L)) * lit(4294967296L) +
       pmod(b, lit(4294967296L))
 
-  /** Default window-mass budget for the containment window grid, and
+  /** Window-mass budget for the containment window grid, and
     * the stride ladder that enforces it (round-10 verdict item 6): the
     * un-trimmed sf10 verify spilled past 55 GB of disk and zipf10's
     * long sparse docs spilled the first 64-band window cut — the
@@ -450,14 +440,11 @@ object Dedup {
     * same stride and the entry stays hash-provable on any corpus
     * shape. Strides above windowTokens sample the doc with gaps —
     * degraded contiguous-containment recall, the documented trade for
-    * bounded disk; the exact sub-budget path is always lossless.
-    * Env override `SPARK_GRAFT_WINDOW_MASS_BUDGET` (both engines read
-    * it at plan/SQL build time — the SPARK_GRAFT_PAIRS pattern) exists
-    * to force the degraded rungs onto small corpora for parity proofs.
+    * bounded disk; the exact sub-budget path is always lossless. The
+    * oracle SQL interpolates this same constant, so both engines pick
+    * the same stride.
     */
-  private[graft] def defaultWindowMassBudget: Long =
-    sys.env.get("SPARK_GRAFT_WINDOW_MASS_BUDGET").map(_.toLong)
-      .getOrElse(20000000L)
+  private[graft] val defaultWindowMassBudget: Long = 20000000L
 
   /** Smallest ladder stride whose estimated window mass fits `budget`:
     * estimated mass at stride s is (massBase − nDocs)·base/s + nDocs
@@ -1253,9 +1240,8 @@ object Dedup {
       * the signature chain, so sub-budget gates pay nothing for it.
       */
     // the window-grid disk-budget scalar, interpolated into the cwst
-    // stride ladder — same JVM-time env read as the engine's default
-    // parameter, so the two sides always agree (see
-    // defaultWindowMassBudget)
+    // stride ladder — the engine's default parameter, so the two sides
+    // always agree (see defaultWindowMassBudget)
     private def windowMassBudgetSql: String = defaultWindowMassBudget.toString
 
     val containmentPairsSql: String =

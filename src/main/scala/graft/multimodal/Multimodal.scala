@@ -119,12 +119,6 @@ object Multimodal {
           out
       }
 
-    /** ??? real: vision-model forward pass; stand-in: luma-histogram
-      * projection over the (really) decoded plane.
-      */
-    def embed(bytes: Array[Byte], dims: Int): Array[Float] =
-      embedLuma(decodeLuma(bytes), dims)
-
     /** Integer accumulation + ONE float division per dim (round 12):
       * the feature is a pure function of each dim's luma SUM, so it is
       * bit-identical under any partitioning/vectorization (no float-

@@ -111,7 +111,7 @@ object Behavior {
     // One user-keyed aggregate collapses the event stream to one row
     // per user first; then each metric's quintile comes from a
     // DISTRIBUTED dense rank (range-repartition + per-partition
-    // window + offset broadcast, Relational4.withGlobalIndex) fed into
+    // window + offset broadcast, Packing.withGlobalPrefixSums) fed into
     // the exact ntile arithmetic (Packing.ntileFromRank) — bit-for-bit
     // the SQL ntile the oracle runs, with ZERO single-partition global
     // Windows (at 10⁹ users a global ntile sort is 3× a one-reducer
@@ -129,7 +129,7 @@ object Behavior {
         val ranked = Seq(
           ("last_ts", "_r_rank"), ("freq", "_f_rank"), ("monetary", "_m_rank"))
           .foldLeft(rfm) { case (df, (metric, rankCol)) =>
-            Relational4.withGlobalIndex(df, Seq(metric, "user_id"))
+            Packing.withGlobalPrefixSums(df, Seq(metric, "user_id"), Nil)
               .withColumnRenamed("rn", rankCol)
           }
         val n = broadcast(ranked.agg(max("_m_rank").as("_n")))

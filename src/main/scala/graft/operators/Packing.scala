@@ -7,50 +7,56 @@ import graft.{QueryDef, Tables}
 
 /** Training-run data layout (SURVEY §2 D34/D35): the deterministic
   * global shuffle and the token-budget sequence packing that turn a
-  * curated corpus into the stream a trainer actually reads.
-  *
-  * Both need a GLOBAL total order — the classic single-reducer trap.
-  * Like `Relational4.withGlobalIndex`, the order is realized as
-  * range-repartition on the sort key + per-partition window + tiny
-  * broadcast of per-partition offsets, so no stage ever funnels the
-  * corpus through one task.
+  * curated corpus into the stream a trainer actually reads — plus the
+  * one global-order pass they, and every other globally ranked entry,
+  * run on.
   */
 object Packing {
 
-  /** Global order statistics in ONE ranged pass: dense rank `rn`
-    * (1-based) and exclusive prefix sum `prefix` of `valueCol` (long)
-    * in `sortCols` order. Range-repartition on the sort key, then a
-    * per-partition window for both stats; the per-partition (row count,
-    * value total) offsets are collected driver-side (#partitions rows —
-    * the `RDD.zipWithIndex` pattern, bounded by the partition count,
-    * never the data) and re-emitted as literal map expressions, so the
-    * plan carries no global window and no offsets join. This is the
-    * single-reducer-free formulation of `row_number()` +
-    * `sum() OVER (ROWS UNBOUNDED PRECEDING AND 1 PRECEDING)`. The
-    * ranged layout is materialized once for the same reason as
-    * withGlobalIndex (RangePartitioner samples boundaries per-RDD).
-    * Callers pass a globally unique sort key.
-    */
-  def withGlobalOrderStats(df: DataFrame, sortCols: Seq[String],
-      valueCol: String): DataFrame =
-    withGlobalPrefixSums(df, sortCols, Seq(valueCol))
-      .withColumnRenamed(s"prefix_$valueCol", "prefix")
-
-  /** Generalization of [[withGlobalOrderStats]] to several long value
-    * columns in one ranged pass: emits `rn` plus `prefix_<col>` (the
-    * exclusive global prefix sum) for each of `valueCols` — e.g. the
-    * two cumulative sample counts of a KS statistic. One
-    * range-repartition, one per-partition window stack, one
-    * #partitions-row driver collect for all offsets.
+  /** Global order statistics in ONE ranged pass, without a
+    * single-reducer global window: emits the dense rank `rn` (1-based)
+    * in `sortCols` order plus `prefix_<col>`, the exclusive global
+    * prefix sum, for each long column of `valueCols` (none for a plain
+    * row numbering). The single-reducer-free formulation of
+    * `row_number()` + `sum() OVER (ROWS UNBOUNDED PRECEDING AND 1
+    * PRECEDING)`: `row_number() over (order by k)` plans one partition —
+    * the classic 100 TB bottleneck. Instead, range-repartition on the
+    * sort key (so partition i's keys all precede partition i+1's), run
+    * one per-partition window stack for all the stats, and add
+    * per-partition offsets. Callers pass a globally unique sort key:
+    * ties across a range boundary would be numbered
+    * nondeterministically.
+    *
+    * The offsets come from a #partitions-row (row count, value totals)
+    * aggregate collected driver-side (the `RDD.zipWithIndex` pattern —
+    * bounded by the partition count, never the data) and are re-emitted
+    * as `typedlit` map literals, so the plan carries no global window
+    * and no offsets join. Every task's plan embeds those maps, one
+    * entry per range partition and stat: fine at today's partition
+    * counts, but a run at thousands of shuffle partitions should
+    * broadcast the offsets instead.
     */
   def withGlobalPrefixSums(df: DataFrame, sortCols: Seq[String],
       valueCols: Seq[String]): DataFrame = {
-    // Width follows the DATA via AQE range coalescing (round 16, guide
-    // §2 "scale-adaptive partitioning") — prefix sums and ranks are
-    // partition-count-invariant (total-ordered sortCols), so the layout
-    // is free to follow input size instead of a constant. See
-    // Relational4.withGlobalIndex for the measured small-frame cost of
-    // the round-15 parallelism floor this replaces.
+    // Width follows the DATA, not a constant (round 16, guide §2
+    // "scale-adaptive partitioning"): repartitionByRange WITHOUT an
+    // explicit count starts from spark.sql.shuffle.partitions and lets
+    // AQE coalesce adjacent ranges down to the advisory partition size.
+    // Round 15 pinned width to max(8, defaultParallelism), which at
+    // local[32] gave every tiny frame 32 range partitions + 32
+    // checkpoint blocks per pass — rfm_segments (3 sequential passes on
+    // a 5k-row frame) measured 3.0 s at 32 cores vs 1.2 s at 8, and
+    // ks_drift 6.1 s vs 0.7 s, pure per-partition fixed cost. AQE
+    // coalescing keeps small frames narrow and big frames wide; range
+    // CONTIGUITY is preserved by coalescing (adjacent partitions merge),
+    // and the emitted stats are partition-count-INVARIANT anyway: the
+    // sort key is a total order, so a row's rank and prefix are fixed by
+    // its position in that order no matter where the range boundaries
+    // fall — proven by the unchanged oracle hashes.
+    // Materialize the ranged layout ONCE: RangePartitioner samples its
+    // boundaries per-RDD, so evaluating this subtree twice (offset
+    // stats + final numbering) could assign the same row to different
+    // partitions and corrupt the numbering.
     val ranged0 = df
       .repartitionByRange(sortCols.map(col): _*)
       .withColumn("_pid", spark_partition_id())
@@ -84,10 +90,10 @@ object Packing {
     * rows, the first n mod k buckets take ceil(n/k) rows and the rest
     * floor(n/k) — the SQL-standard definition, applied arithmetically
     * to (rank, n) so the bucket id never needs the planner's
-    * single-partition global Window. Pair with `withGlobalIndex` /
-    * `withGlobalOrderStats` for the rank. The q=0 (n < k) divide is
-    * unreachable: the big-bucket branch then covers every rank, and
-    * CaseWhen only evaluates the branch it takes.
+    * single-partition global Window. Pair with `withGlobalPrefixSums`
+    * for the rank. The q=0 (n < k) divide is unreachable: the
+    * big-bucket branch then covers every rank, and CaseWhen only
+    * evaluates the branch it takes.
     */
   def ntileFromRank(rank: Column, n: Column, k: Int): Column = {
     val q = floor(n / lit(k))
@@ -107,14 +113,14 @@ object Packing {
     // dense rank in md5(doc_id||salt) order. Content-stable (same
     // permutation on any cluster/partitioning/engine — a re-run of a
     // crashed job resumes the SAME stream) and single-reducer-free via
-    // withGlobalIndex.
+    // withGlobalPrefixSums.
     "corpus_shuffle" -> QueryDef(
       (s, d) =>
-        Relational4.withGlobalIndex(
+        withGlobalPrefixSums(
           Tables.documents(s, d)
             .withColumn("h", shuffleKey(":shuffle"))
             .select("doc_id", "h"),
-          Seq("h"))
+          Seq("h"), Nil)
           .select(col("doc_id"), col("rn").as("shuffle_rank"))
           .orderBy("shuffle_rank"),
       """SELECT doc_id,
@@ -136,8 +142,8 @@ object Packing {
           .withColumn("n_tokens",
             size(split(trim(col("text")), "\\s+")).cast("long"))
           .select("doc_id", "h", "n_tokens")
-        withGlobalOrderStats(docs, Seq("h"), "n_tokens")
-          .withColumn("bin", floor(col("prefix") / 2048).cast("long"))
+        withGlobalPrefixSums(docs, Seq("h"), Seq("n_tokens"))
+          .withColumn("bin", floor(col("prefix_n_tokens") / 2048).cast("long"))
           .groupBy("bin")
           .agg(count(lit(1)).as("n_docs_start"),
             sum("n_tokens").as("doc_tokens"))

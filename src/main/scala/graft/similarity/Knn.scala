@@ -169,7 +169,7 @@ object Knn {
     * mod (the old `% 100`) keeps that quadratic — n²/100 — and one
     * decade past the proven sf100 shape the GUARD dominates the
     * construction it guards. This budget caps the probe's pair mass
-    * the same way SPARK_GRAFT_WINDOW_MASS_BUDGET caps the containment
+    * the same way Dedup.defaultWindowMassBudget caps the containment
     * window grid: [[autoSampleMod]] scales the modulus so
     * spent / mod ≤ budget. 5e9 ordered pairs — the scale the
     * sf100-shape exact probe already ran (9.5e10 / 100 ≈ 9.5e8), with

@@ -326,19 +326,6 @@ object StreamQueries {
          FROM sessions GROUP BY user_id, session_id
          ORDER BY user_id, session_start"""),
 
-    // A10 gate twin — the reference's WHOLE streaming pipeline shape as
-    // one gate-checked query: wire-encoded base64-JSON order records
-    // arrive on a stream, are decoded by the codec, fanned out by the
-    // product_details transform (array explode + struct flatten —
-    // `lambda_product_details_transformation`), and land in the sink.
-    // The oracle is the flat lineitem projection: a single dropped,
-    // duplicated, or mis-decoded record anywhere on the
-    // encode→stream→decode→explode path breaks the hash.
-    // Sink is a real FILE sink (the Firehose→S3 analog), not the memory
-    // sink the small stateful entries use: this query's output is
-    // corpus-sized (one row per line item), and a memory sink would
-    // funnel all of it through the driver — the file sink keeps the
-    // write distributed, exactly as it must be at 100 TB.
     // A14 streaming twin — dead-letter ACCOUNTING as a streaming query:
     // the same md5-chosen 1-in-16 truncation corruption as the batch
     // dlq_routing entry, but arriving on a stream; a single complete-
@@ -382,6 +369,19 @@ object StreamQueries {
                   AS good_key_sum
          FROM tagged"""),
 
+    // A10 gate twin — the reference's WHOLE streaming pipeline shape as
+    // one gate-checked query: wire-encoded base64-JSON order records
+    // arrive on a stream, are decoded by the codec, fanned out by the
+    // product_details transform (array explode + struct flatten —
+    // `lambda_product_details_transformation`), and land in the sink.
+    // The oracle is the flat lineitem projection: a single dropped,
+    // duplicated, or mis-decoded record anywhere on the
+    // encode→stream→decode→explode path breaks the hash.
+    // Sink is a real FILE sink (the Firehose→S3 analog), not the memory
+    // sink the small stateful entries use: this query's output is
+    // corpus-sized (one row per line item), and a memory sink would
+    // funnel all of it through the driver — the file sink keeps the
+    // write distributed, exactly as it must be at 100 TB.
     "stream_fanout_products" -> QueryDef(
       (s, d) => {
         val wireDir = graft.ingest.SyntheticOrders.wireDir(s, d)

@@ -352,9 +352,9 @@ object CorpusStats {
     // correctly-rounded double ops — deterministic at 4 dp.
     "length_gini" -> QueryDef(
       (s, d) => {
-        val ranked = graft.operators.Packing.withGlobalOrderStats(
+        val ranked = graft.operators.Packing.withGlobalPrefixSums(
           Tables.documents(s, d).select("source", "n_chars", "doc_id"),
-          Seq("source", "n_chars", "doc_id"), "n_chars")
+          Seq("source", "n_chars", "doc_id"), Nil)
         val minrn = ranked.groupBy(col("source").as("_src"))
           .agg(min("rn").as("_min_rn"))
         val agg = ranked

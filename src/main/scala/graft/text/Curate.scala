@@ -378,10 +378,10 @@ object Curate {
           .withColumn("tok", col("n_tokens").cast("long"))
           .select("doc_id", "n_tokens", "h", "tok")
         graft.operators.Packing
-          .withGlobalOrderStats(kept, Seq("h"), "tok")
+          .withGlobalPrefixSums(kept, Seq("h"), Seq("tok"))
           .select(col("doc_id"), col("n_tokens"),
             col("rn").as("shuffle_rank"),
-            floor(col("prefix") / 2048).cast("long").as("bin"))
+            floor(col("prefix_tok") / 2048).cast("long").as("bin"))
           .orderBy("shuffle_rank")
       },
       """WITH RECURSIVE

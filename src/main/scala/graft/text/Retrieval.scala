@@ -159,7 +159,7 @@ object Retrieval {
     // D73 — Heaps'-law vocabulary growth: distinct types vs tokens seen
     // after each decile of the corpus in doc_id order. Spark shape: the
     // doc rank and cumulative token count come from ONE ranged pass
-    // (withGlobalOrderStats — no global window), each term's first
+    // (withGlobalPrefixSums — no global window), each term's first
     // appearance is a term-keyed min-shuffle, and the 10 checkpoints are
     // a broadcast nested loop (10 rows) feeding a decile-keyed count —
     // the corpus-side cost is ~2 scans regardless of corpus size.
@@ -169,13 +169,14 @@ object Retrieval {
           .select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
           .withColumn("n_tok", size(col("t")).cast("long"))
         val ranked = graft.operators.Packing
-          .withGlobalOrderStats(base, Seq("doc_id"), "n_tok")
+          .withGlobalPrefixSums(base, Seq("doc_id"), Seq("n_tok"))
         val cps = ranked.agg(max("rn").as("n"))
           .select(explode(sequence(lit(1), lit(10))).as("decile"), col("n"))
           .select(col("decile").cast("long").as("decile"),
             expr("(n * decile + 9) div 10").as("c_rank"))
         val tokAt = ranked
-          .select(col("rn"), (col("prefix") + col("n_tok")).as("n_tokens"))
+          .select(col("rn"),
+            (col("prefix_n_tok") + col("n_tok")).as("n_tokens"))
           .join(broadcast(cps), col("rn") === col("c_rank"))
         val firsts = ranked
           .select(col("rn"), explode(col("t")).as("term"))

@@ -96,7 +96,7 @@ object Vocab {
     // 25} (the test corpus has 31 types; a web corpus would probe
     // {1e3, 1e4, 1e5}) — the metric that sizes a tokenizer vocabulary.
     // One term-keyed count shuffle; rank AND running sum then come from
-    // ONE distributed ranged pass (Packing.withGlobalOrderStats over
+    // ONE distributed ranged pass (Packing.withGlobalPrefixSums over
     // (-c, term): range-repartition + per-partition window + offset
     // broadcast) — no single-partition global Window, because an open
     // web-scale vocabulary is 10⁸⁺ types and would one-reducer there.
@@ -107,10 +107,10 @@ object Vocab {
         val counts = Tables.documents(s, d)
           .select(explode(split(trim(col("text")), "\\s+")).as("term"))
           .groupBy("term").agg(count(lit(1)).as("c"))
-        val ranked = graft.operators.Packing.withGlobalOrderStats(
+        val ranked = graft.operators.Packing.withGlobalPrefixSums(
           counts.withColumn("_negc", -col("c")),
-          Seq("_negc", "term"), "c")
-          .withColumn("cum", col("prefix") + col("c"))
+          Seq("_negc", "term"), Seq("c"))
+          .withColumn("cum", col("prefix_c") + col("c"))
         // the total is the LAST cumulative value — deriving it as
         // max(cum) avoids a second full token scan of the corpus
         val total = ranked.agg(max("cum").as("total"))

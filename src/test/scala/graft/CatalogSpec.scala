@@ -81,31 +81,50 @@ class CatalogSpec extends AnyFunSuite {
       s"catalog keys missing from SURVEY §2: $undocumented")
   }
 
-  test("library code reads no env vars beyond Dedup's parity hooks") {
+  test("library code reads no env vars") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     // the mains read their run settings from the environment; the
-    // library takes parameters, except the two pair-branch hooks the
-    // DuckDB oracle reads too
-    val mains = "(Bench|Verify|PlanAudit|Gen[A-Za-z]*)\\.scala".r
-    val hooks = Seq("SPARK_GRAFT_PAIRS", "SPARK_GRAFT_WINDOW_MASS_BUDGET")
-    val dedup = root.resolve("dedup/Dedup.scala")
+    // library takes parameters
+    val mains = "(Bench|Verify|PlanAudit|GenScale)\\.scala".r
     val reads = java.nio.file.Files.walk(root).iterator().asScala.toSeq
       .filter(_.toString.endsWith(".scala"))
-      .filterNot(p => p.getParent == root &&
-        mains.matches(p.getFileName.toString))
-      .filterNot(_.startsWith(root.resolve("tools")))
       .flatMap { p =>
         java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
           case (l, i) if l.contains("sys.env") || l.contains("System.getenv") =>
             (p, s"${root.relativize(p)}:${i + 1}: ${l.trim}")
         }
       }
-    assert(reads.exists(_._1 == dedup), "the scan found no env read at all")
+    assert(reads.exists(_._1 == root.resolve("Bench.scala")),
+      "the scan found no env read at all")
     val stray = reads.collect {
-      case (p, l) if p != dedup || !hooks.exists(l.contains) => l
+      case (p, l) if !(p.getParent == root &&
+          mains.matches(p.getFileName.toString)) &&
+          !p.startsWith(root.resolve("tools")) => l
     }
     assert(stray.isEmpty, s"library env reads: ${stray.mkString("; ")}")
+  }
+
+  test("no catalog key is defined twice") {
+    import scala.jdk.CollectionConverters._
+    // merging defs maps with ++, or one Map literal, silently keeps
+    // only the last of two same-named keys
+    val root = java.nio.file.Paths.get("src/main")
+    val keyDef = "\"([a-z0-9_]+)\" -> (?:graft\\.)?QueryDef\\(".r
+    val defs = java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.flatMap {
+          case (l, i) => keyDef.findAllMatchIn(l)
+            .map(m => m.group(1) -> s"${root.relativize(p)}:${i + 1}")
+        }
+      }
+    assert(defs.map(_._1).toSet == SparkEntry.queries.keySet,
+      "the scan and the registered catalog disagree on the key set")
+    val dups = defs.groupBy(_._1).collect {
+      case (k, ds) if ds.size > 1 => s"$k at ${ds.map(_._2).mkString(", ")}"
+    }
+    assert(dups.isEmpty, s"catalog keys defined twice: ${dups.mkString("; ")}")
   }
 
   test("AssetMemo is the only per-corpus asset cache in library code") {

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Packing, Relational4}
+import graft.operators.Packing
 
-/** The distributed global-order helpers (range-repartition +
+/** The distributed global-order pass (range-repartition +
   * per-partition window + driver-collected offset maps) must be
   * bit-for-bit equal to the single-partition window formulations they
   * replace — they are what keeps rfm_segments / vocab_coverage /
@@ -24,10 +24,10 @@ class OrderStatsSpec extends AnyFunSuite {
       .repartition(7)
   }
 
-  test("withGlobalIndex equals global row_number across sizes") {
+  test("rank-only withGlobalPrefixSums equals global row_number across sizes") {
     for (n <- Seq(1, 5, 97, 1000)) {
       val df = randomRows(n)
-      val got = Relational4.withGlobalIndex(df, Seq("v", "k"))
+      val got = Packing.withGlobalPrefixSums(df, Seq("v", "k"), Nil)
         .select("k", "rn")
       val want = df.withColumn("rn",
         row_number().over(Window.orderBy("v", "k")).cast("long"))
@@ -37,17 +37,17 @@ class OrderStatsSpec extends AnyFunSuite {
     }
   }
 
-  test("withGlobalOrderStats prefix equals exclusive window prefix sum") {
+  test("withGlobalPrefixSums prefix equals exclusive window prefix sum") {
     val df = randomRows(500).withColumn("w", (col("v") % 13).cast("long"))
-    val got = Packing.withGlobalOrderStats(df, Seq("v", "k"), "w")
-      .select("k", "rn", "prefix")
+    val got = Packing.withGlobalPrefixSums(df, Seq("v", "k"), Seq("w"))
+      .select("k", "rn", "prefix_w")
     val base = Window.orderBy("v", "k")
     val want = df
       .withColumn("rn", row_number().over(base).cast("long"))
-      .withColumn("prefix",
+      .withColumn("prefix_w",
         coalesce(sum("w").over(
           base.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("k", "rn", "prefix")
+      .select("k", "rn", "prefix_w")
     assert(got.collect().map(_.toSeq).toSet ==
       want.collect().map(_.toSeq).toSet)
   }
@@ -72,7 +72,7 @@ class OrderStatsSpec extends AnyFunSuite {
     // n % k != 0 (ragged), n == k, n < k (rank = bucket), k = 1
     for ((n, k) <- Seq((64, 5), (65, 5), (5, 5), (3, 5), (100, 7), (10, 1))) {
       val df = randomRows(n)
-      val ranked = Relational4.withGlobalIndex(df, Seq("v", "k"))
+      val ranked = Packing.withGlobalPrefixSums(df, Seq("v", "k"), Nil)
         .crossJoin(broadcast(
           randomRows(n).agg(count(lit(1)).as("_n"))))
       val got = ranked

@@ -80,8 +80,8 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
     # driver testdata is one file per table; GenScale-produced scale
     # steps are Spark-written DIRECTORIES named <t>.parquet
     p = Path(f"{sfdir}/{t}.parquet")
-    # partial corpora are legitimate (GenScaleVec writes embeddings
-    # only, GenScaleDocs documents only); DuckDB binds views EAGERLY,
+    # partial corpora are legitimate (`GenScale vec` writes embeddings
+    # only, `GenScale docs` documents only); DuckDB binds views EAGERLY,
     # so creating a view over a missing file crashes the whole run
     # before any query. Skip missing tables — a query that references
     # one fails individually with a clear "table not found".
@@ -163,7 +163,7 @@ if "--chain-cache" in sys.argv:
         _doc_dir = Path(sfdir) / "documents.parquet"
         _doc_files = sorted(_doc_dir.glob("*.parquet")) \
             if _doc_dir.is_dir() else [_doc_dir]
-        # embeddings-only corpora (GenScaleVec output) have no
+        # embeddings-only corpora (`GenScale vec` output) have no
         # documents.parquet — an unconditional f.stat() crashed the
         # cache-key computation (round-12 advice item 2); the chain
         # consumers can't run there anyway, so an empty fingerprint is
