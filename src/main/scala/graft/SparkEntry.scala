@@ -104,8 +104,9 @@ object SparkEntry {
   /** A session builder on `master` with `shufflePartitions` shuffle
     * partitions and the confs every graft session needs: the UTC
     * session time zone and nanos-as-long parquet timestamps the oracle
-    * comparison depends on (see Tables.normalizeTs), and no UI. Callers
-    * add their own confs before `getOrCreate()`.
+    * comparison depends on (see Tables.normalizeTs), no UI, and the
+    * fork-free local file system ([[fs.LocalFs.conf]]). Callers add their
+    * own confs before `getOrCreate()`.
     */
   def session(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -114,6 +115,7 @@ object SparkEntry {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(fs.LocalFs.conf)
 
   /** `spark.executor.extraJavaOptions` for the Verify/Bench sessions:
     * the deployment-supplied value with `-XX:-DontCompileHugeMethods`

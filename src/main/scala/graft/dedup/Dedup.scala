@@ -456,6 +456,36 @@ object Dedup {
       .find(s => (massBase - nDocs) * base <= (budget - nDocs) * s)
       .getOrElse(base * 16)
 
+  /** The window-grid stride a containment run over `docs` uses: the
+    * pre-flight disk-budget guard (see defaultWindowMassBudget). One
+    * token-count scan estimates the window mass at the base stride; the
+    * deterministic ladder ([[windowStrideFor]]) doubles the stride until
+    * the estimate fits, and the oracle replicates the identical mass
+    * scalar + CASE ladder (cwmass/cwst).
+    */
+  private[graft] def windowStrideOf(docs: DataFrame, windowTokens: Int,
+      windowStride: Int, windowMassBudget: Long): Int = {
+    val mrow = docs
+      .select(size(split(trim(col("text")), "\\s+")).as("l"))
+      .filter(col("l") >= 3)
+      .agg(coalesce(sum(
+        (greatest(col("l") - lit(windowTokens), lit(0))
+          / lit(windowStride)).cast("long") + 1L), lit(0L)).as("m"),
+        count(lit(1)).as("d"))
+      .head()
+    val strideSel = windowStrideFor(mrow.getLong(0), mrow.getLong(1),
+      windowStride, windowMassBudget)
+    if (strideSel != windowStride)
+      System.err.println(s"[graft] containment window-grid: " +
+        s"estimated window mass ${mrow.getLong(0)} over " +
+        s"${mrow.getLong(1)} docs exceeds budget $windowMassBudget " +
+        s"at stride $windowStride — DEGRADING stride to $strideSel " +
+        s"(deep-containment recall is reduced" +
+        (if (strideSel > windowTokens) "; stride exceeds the window " +
+          "width, coverage is now gappy-sampled" else "") + ")")
+    strideSel
+  }
+
   def containmentPairsLsh(docs: DataFrame, threshold: Double,
       numHashes: Int = 128, bands: Int = 64,
       bandCap: Long = 256L,
@@ -547,29 +577,8 @@ object Dedup {
         // the banded-table volume halves - long sparse docs (zipf10:
         // ~14 windows/doc x 510k docs) spilled the 64-band table past
         // the sandbox disk in the bench
-        // pre-flight disk-budget guard (see defaultWindowMassBudget):
-        // one token-count scan estimates the window mass at the base
-        // stride; the deterministic ladder doubles the stride until
-        // the estimate fits, and the oracle replicates the identical
-        // mass scalar + CASE ladder (cwmass/cwst)
-        val mrow = docs
-          .select(size(split(trim(col("text")), "\\s+")).as("l"))
-          .filter(col("l") >= 3)
-          .agg(coalesce(sum(
-            (greatest(col("l") - lit(windowTokens), lit(0))
-              / lit(windowStride)).cast("long") + 1L), lit(0L)).as("m"),
-            count(lit(1)).as("d"))
-          .head()
-        val strideSel = windowStrideFor(mrow.getLong(0), mrow.getLong(1),
-          windowStride, windowMassBudget)
-        if (strideSel != windowStride)
-          System.err.println(s"[graft] containment window-grid: " +
-            s"estimated window mass ${mrow.getLong(0)} over " +
-            s"${mrow.getLong(1)} docs exceeds budget $windowMassBudget " +
-            s"at stride $windowStride — DEGRADING stride to $strideSel " +
-            s"(deep-containment recall is reduced" +
-            (if (strideSel > windowTokens) "; stride exceeds the window " +
-              "width, coverage is now gappy-sampled" else "") + ")")
+        val strideSel = windowStrideOf(docs, windowTokens, windowStride,
+          windowMassBudget)
         val raw = bandedCappedPairs(
           windowBanded(docs, numHashes, windowBands, windowTokens,
             strideSel),

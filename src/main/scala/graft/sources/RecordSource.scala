@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.fs.LocalFs
 import graft.ingest.{EventCodec, Fanout, SyntheticOrders}
 
 /** Source adapters for the reference's entry point — a stream of wire
@@ -33,9 +34,15 @@ trait RecordSource {
   /** Streaming DataFrame in the normalized record shape. */
   def stream(s: SparkSession): DataFrame
 
-  /** The decoded order-event stream (shared by every adapter). */
-  final def events(s: SparkSession): DataFrame =
+  /** The decoded order-event stream (shared by every adapter). Every live
+    * query starts here, so a session graft did not build gets the
+    * fork-free local file system ([[graft.fs.LocalFs.install]]) before its
+    * first checkpoint write.
+    */
+  final def events(s: SparkSession): DataFrame = {
+    LocalFs.install(s)
     EventCodec.decode(stream(s))
+  }
 }
 
 /** File-backed source for tests and backfills: reads wire-format

@@ -70,6 +70,34 @@ class DedupSpec extends AnyFunSuite {
     // what the LSH branch documents as its asymmetric recall trade)
   }
 
+  test("a degraded window-stride run emits only exact containment pairs") {
+    import spark.implicits._
+    // doc 1 (60 words) sits inside doc 2's 360; docs 3 and 4 are the same
+    // 240 words; docs 5 and 6 share nothing. Their window mass at the
+    // base stride 16 is 79, so a budget of 30 degrades the stride to 64
+    val words = (p: String, n: Int) => (1 to n).map(i => s"$p$i").mkString(" ")
+    val snippet = words("s", 60)
+    val planted = Seq(
+      (1L, snippet),
+      (2L, s"${words("f", 150)} $snippet ${words("g", 150)}"),
+      (3L, words("d", 240)), (4L, words("d", 240)),
+      (5L, words("u", 240)), (6L, words("v", 240)))
+      .map { case (id, t) => (id, t, "s", t.length.toLong) }
+      .toDF("doc_id", "text", "source", "n_chars")
+    val budget = 30L
+    val stride = Dedup.windowStrideOf(planted, 32, 16, budget)
+    assert(stride >= 32, s"budget $budget kept stride $stride")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val degraded = pairs(Dedup.containmentPairsLsh(planted, 0.8, windowMassBudget = budget))
+    // the run used that rung: it equals the run whose BASE stride it is
+    assert(degraded == pairs(Dedup.containmentPairsLsh(planted, 0.8, windowStride = stride)))
+    val exact = pairs(Dedup.containmentPairs(planted, 0.8))
+    assert(exact.contains((1L, 2L, 1.0)) && exact.contains((3L, 4L, 1.0)))
+    assert(degraded.nonEmpty && degraded.subsetOf(exact),
+      s"pairs the exact path does not emit: ${degraded -- exact}")
+  }
+
   test("embedding pairs budget dispatch: LSH branch catches planted dups, precision 1") {
     import spark.implicits._
     // the gate corpora have ZERO qualifying pairs at 0.99, so plant:

@@ -6,7 +6,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.hadoop.fs.{FileContext, Path}
+import graft.fs.LocalFs
 import graft.ingest.{EventCodec, Fanout, SyntheticOrders}
+import graft.sources.FileRecordSource
 import graft.streaming.{IngestStream, LatestKV}
 
 class StreamingSpec extends AnyFunSuite {
@@ -182,6 +185,47 @@ class StreamingSpec extends AnyFunSuite {
       spark.read.parquet(s"$outBase/product_details").count())
   }
 
+  /** `file` and its `.crc` exist, and a checksummed read of `file`
+    * passes. Spark reads checkpoint entries with the one-argument
+    * `FileContext.open`, which skips the `.crc` (FilterFs hands it to the
+    * raw file system), so the verification is made here.
+    */
+  private def assertChecksummed(file: String): Unit = {
+    val f = new java.io.File(file)
+    assert(f.isFile && new java.io.File(f.getParent, s".${f.getName}.crc").isFile,
+      s"$file has no .crc beside it")
+    val in = FileContext.getFileContext(spark.sessionState.newHadoopConf())
+      .open(new Path(f.toURI), 4096)
+    try in.readAllBytes() finally in.close()
+  }
+
+  test("the test session resolves graft's local file system for file:") {
+    val conf = spark.sessionState.newHadoopConf()
+    assert(new Path("file:///").getFileSystem(conf).isInstanceOf[LocalFs.Checksummed])
+    assert(FileContext.getFileContext(conf).getDefaultFileSystem.isInstanceOf[LocalFs.Context])
+  }
+
+  test("RecordSource.events installs LocalFs on a session graft did not build, and keeps a user's file system") {
+    // a session without graft's keys: newSession copies the context's
+    // SparkConf, which the test session's builder filled, so unset them
+    def bare() = {
+      val s = spark.newSession()
+      LocalFs.conf.keys.foreach(s.conf.unset)
+      s
+    }
+    val source = FileRecordSource(tmp("graft-install-src"))
+    val plain = bare()
+    assert(LocalFs.conf.keys.forall(plain.conf.getOption(_).isEmpty))
+    source.events(plain)
+    LocalFs.conf.foreach { case (k, v) => assert(plain.conf.getOption(k).contains(v), k) }
+    val stock = classOf[org.apache.hadoop.fs.LocalFileSystem].getName
+    val own = bare()
+    own.conf.set("fs.file.impl", stock)
+    source.events(own)
+    assert(own.conf.get("fs.file.impl") == stock)
+    assert((LocalFs.conf.keySet - "fs.file.impl").forall(k => own.conf.getOption(k).isEmpty))
+  }
+
   test("a fanout batch replayed after one sink failed lands every row once") {
     val inDir = landWire(EventCodec.encode(SyntheticOrders.nested(spark, sf)))
     val refOut = tmp("graft-replay-ref")
@@ -197,8 +241,12 @@ class StreamingSpec extends AnyFunSuite {
     fanoutSinks.init.foreach(s =>
       assert(new java.io.File(s"$outBase/$s/_spark_metadata/0").isFile,
         s"$s did not commit batch 0 before the failure"))
+    // the failed run logged batch 0's offsets (the entry the restart
+    // replays) beside its .crc, and the entry verifies against it
+    assertChecksummed(s"$ckBase/fanout/offsets/0")
     assert(blocker.delete())
     fanout(inDir, outBase, ckBase)
+    Seq("offsets/0", "commits/0").foreach(e => assertChecksummed(s"$ckBase/fanout/$e"))
 
     fanoutSinks.foreach { s =>
       val ref = spark.read.parquet(s"$refOut/$s")
