@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
   *
@@ -104,8 +105,9 @@ object SparkEntry {
   /** A session builder on `master` with `shufflePartitions` shuffle
     * partitions and the confs every graft session needs: the UTC
     * session time zone and nanos-as-long parquet timestamps the oracle
-    * comparison depends on (see Tables.normalizeTs), no UI, and the
-    * fork-free local file system ([[fs.LocalFs.conf]]). Callers add their
+    * comparison depends on (see Tables.normalizeTs), no UI, the
+    * fork-free local file system ([[fs.LocalFs.conf]]) and the shared
+    * executor class loader ([[sharedClassLoader]]). Callers add their
     * own confs before `getOrCreate()`.
     */
   def session(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -115,7 +117,45 @@ object SparkEntry {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config(fs.LocalFs.conf)
+      .config(fs.LocalFs.conf ++ sharedClassLoader)
+
+  /** Spark's per-session artifact isolation, off. With it on (Spark's
+    * default), every job of a session is tagged with the session's UUID,
+    * and executors run its tasks on a class loader of that session's own.
+    * A streaming query runs on a clone of its session with a new UUID, so
+    * each query graft starts per delivery got a new loader, and
+    * `CodeGenerator`'s compile cache, keyed by the loader, missed on every
+    * generated class of every task. Off, tasks run on the executor's one
+    * default loader and a delivery reuses the classes of the ones before.
+    *
+    * The trade-off: a session cloned after this is set (every stream
+    * session is one) does not see jars added to its parent through
+    * `addArtifact`; tasks see only the application's class path and
+    * `SparkContext.addJar`. [[install]] therefore skips a session that
+    * holds such artifacts.
+    */
+  val sharedClassLoader: Map[String, String] =
+    Map(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false")
+
+  /** Sets on `s`, as session conf, the key groups [[session]] builds graft's
+    * sessions with ([[fs.LocalFs.conf]], [[sharedClassLoader]]), for a
+    * session graft did not build. Every live query starts here
+    * ([[sources.RecordSource.events]]), so its checkpoint writes and the
+    * sessions its queries clone from then on get both; a session that
+    * resolved its artifact isolation already keeps it. A group is skipped
+    * when `s` names one of its keys itself (in its session conf, or its
+    * SparkContext's Hadoop conf for the file system keys); the class
+    * loader also when `s` holds session-scoped artifacts its tasks need.
+    */
+  def install(s: SparkSession): Unit = {
+    val (own, hadoop) = (s.conf.getAll, s.sparkContext.hadoopConfiguration)
+    def named(k: String) = own.contains(k) ||
+      Option(hadoop.getPropertySources(k)).exists(_.exists(_ != "core-default.xml"))
+    def set(group: Map[String, String]): Unit =
+      if (!group.keys.exists(named)) group.foreach { case (k, v) => s.conf.set(k, v) }
+    set(fs.LocalFs.conf)
+    if (!GraftSqlBridge.holdsArtifacts(s)) set(sharedClassLoader)
+  }
 
   /** `spark.executor.extraJavaOptions` for the Verify/Bench sessions:
     * the deployment-supplied value with `-XX:-DontCompileHugeMethods`

@@ -5,10 +5,9 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
 
 /** Hadoop's `file:` file system without a process launch per file.
   *
@@ -20,7 +19,8 @@ import org.apache.spark.sql.SparkSession
   * and state-store file by such a create and rename. [[Raw]] answers both
   * calls through `java.nio` and is otherwise stock; it is wrapped as the
   * checksummed `FileSystem` ([[Checksummed]]) and as the FileContext twin
-  * ([[Context]]), so `.crc` files are written and verified as before.
+  * ([[Context]]), so `.crc` files are written as before, and verified on
+  * every read.
   */
 object LocalFs {
 
@@ -57,8 +57,14 @@ object LocalFs {
   }
 
   /** The `fs.AbstractFileSystem.file.impl` class: Hadoop's
-    * `local.LocalFs` (`ChecksumFs` over `RawLocalFs`) over [[Raw]]. */
-  final class Context(uri: URI, conf: Configuration) extends ChecksumFs(new Delegate(uri, conf))
+    * `local.LocalFs` (`ChecksumFs` over `RawLocalFs`) over [[Raw]], whose
+    * one-argument `open` verifies the `.crc` too. Hadoop's `FilterFs`
+    * hands that call straight to the raw file system, and Spark reads
+    * every offsets, commits, metadata-log and state-store entry through
+    * it, so a corrupted entry would read back silently. */
+  final class Context(uri: URI, conf: Configuration) extends ChecksumFs(new Delegate(uri, conf)) {
+    override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+  }
 
   /** `RawLocalFs` over [[Raw]]: its server defaults set the `.crc` chunk
     * size and type, so the checksum files are byte-identical. */
@@ -70,7 +76,8 @@ object LocalFs {
     override def isValidName(src: String): Boolean = true
   }
 
-  /** The Hadoop keys that install it. Spark copies session conf into every
+  /** The Hadoop keys that install it (`graft.SparkEntry.session` and
+    * `install` set them). Spark copies session conf into every
     * `sessionState.newHadoopConf()`, the conf of checkpoint managers and
     * file writers alike. The `file:` FileSystem is cached per scheme before
     * any session conf is read, so the cache is turned off for it: each
@@ -81,13 +88,4 @@ object LocalFs {
     "fs.file.impl" -> classOf[Checksummed].getName,
     "fs.AbstractFileSystem.file.impl" -> classOf[Context].getName,
     "fs.file.impl.disable.cache" -> "true")
-
-  /** Sets [[conf]] on `s`, unless `s` already sets one of its keys in its
-    * session conf or its SparkContext's Hadoop conf. */
-  def install(s: SparkSession): Unit = {
-    val hadoop = s.sparkContext.hadoopConfiguration
-    def named(k: String) = s.conf.getOption(k).isDefined ||
-      Option(hadoop.getPropertySources(k)).exists(_.exists(_ != "core-default.xml"))
-    if (!conf.keys.exists(named)) conf.foreach { case (k, v) => s.conf.set(k, v) }
-  }
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.fs.LocalFs
+import graft.SparkEntry
 import graft.ingest.{EventCodec, Fanout, SyntheticOrders}
 
 /** Source adapters for the reference's entry point — a stream of wire
@@ -35,12 +35,12 @@ trait RecordSource {
   def stream(s: SparkSession): DataFrame
 
   /** The decoded order-event stream (shared by every adapter). Every live
-    * query starts here, so a session graft did not build gets the
-    * fork-free local file system ([[graft.fs.LocalFs.install]]) before its
-    * first checkpoint write.
+    * query starts here, so a session graft did not build gets graft's
+    * session conf ([[graft.SparkEntry.install]]: the fork-free local file
+    * system and the shared executor class loader) before its first query.
     */
   final def events(s: SparkSession): DataFrame = {
-    LocalFs.install(s)
+    SparkEntry.install(s)
     EventCodec.decode(stream(s))
   }
 }

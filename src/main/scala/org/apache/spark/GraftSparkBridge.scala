@@ -1,7 +1,8 @@
 package org.apache.spark
 
-/** Bridge into `private[spark]` scheduler internals needed by the
-  * benchmark's per-query task-metric accounting.
+/** Bridge into `private[spark]` internals: the scheduler's listener bus,
+  * which the benchmark's per-query task-metric accounting drains, and the
+  * codegen metrics.
   */
 object GraftSparkBridge {
 
@@ -13,4 +14,12 @@ object GraftSparkBridge {
     */
   def drainListeners(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Generated classes compiled in this JVM so far (by the driver and, in
+    * local mode, by tasks): the sample count of
+    * `CodegenMetrics.METRIC_COMPILATION_TIME`, which `CodeGenerator`
+    * updates on each compile-cache miss.
+    */
+  def codegenCompilations: Long =
+    metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

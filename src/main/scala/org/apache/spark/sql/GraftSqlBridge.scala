@@ -11,6 +11,15 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Whether `spark` holds session-scoped jars: added through
+    * `addArtifact`, or copied from the session it was cloned from. Its
+    * tasks load them through the session's own executor class loader
+    * (private[sql] `artifactManager`). Reads no isolation conf, so the
+    * session's artifact isolation stays unresolved.
+    */
+  def holdsArtifacts(spark: SparkSession): Boolean =
+    spark.asInstanceOf[classic.SparkSession].artifactManager.getAddedJars.nonEmpty
+
   /** Wrap a custom LogicalPlan as a DataFrame (private[sql]
     * `Dataset.ofRows` — the standard entry point for extension
     * libraries that build their own plan nodes).

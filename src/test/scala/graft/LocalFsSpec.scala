@@ -90,10 +90,12 @@ class LocalFsSpec extends AnyFunSuite {
       p
     }
     intercept[ChecksumException](fsOf(c).open(corrupted()).readAllBytes())
-    // FileContext verifies on open(path, bufferSize); the one-argument open
-    // goes through FilterFs straight to the raw file system, stock or not
-    intercept[ChecksumException](
-      FileContext.getFileContext(c).open(corrupted(), 4096).readAllBytes())
+    // both FileContext opens verify: Spark reads checkpoint entries through
+    // the one-argument open, which the stock FilterFs hands to the raw file
+    // system unverified
+    val fc = FileContext.getFileContext(c)
+    intercept[ChecksumException](fc.open(corrupted(), 4096).readAllBytes())
+    intercept[ChecksumException](fc.open(corrupted()).readAllBytes())
   }
 
   test("FileContext rename refuses to replace a file without OVERWRITE and replaces it with") {

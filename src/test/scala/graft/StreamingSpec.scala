@@ -1,12 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.GraftSparkBridge
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.hadoop.fs.{FileContext, Path}
+import org.apache.hadoop.fs.{ChecksumException, FileContext, Path}
 import graft.fs.LocalFs
 import graft.ingest.{EventCodec, Fanout, SyntheticOrders}
 import graft.sources.FileRecordSource
@@ -185,17 +186,16 @@ class StreamingSpec extends AnyFunSuite {
       spark.read.parquet(s"$outBase/product_details").count())
   }
 
-  /** `file` and its `.crc` exist, and a checksummed read of `file`
-    * passes. Spark reads checkpoint entries with the one-argument
-    * `FileContext.open`, which skips the `.crc` (FilterFs hands it to the
-    * raw file system), so the verification is made here.
+  /** `file` and its `.crc` exist, and a read of `file` through the
+    * one-argument `FileContext.open`, the call Spark reads checkpoint
+    * entries with, passes the checksum.
     */
   private def assertChecksummed(file: String): Unit = {
     val f = new java.io.File(file)
     assert(f.isFile && new java.io.File(f.getParent, s".${f.getName}.crc").isFile,
       s"$file has no .crc beside it")
     val in = FileContext.getFileContext(spark.sessionState.newHadoopConf())
-      .open(new Path(f.toURI), 4096)
+      .open(new Path(f.toURI))
     try in.readAllBytes() finally in.close()
   }
 
@@ -205,14 +205,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(FileContext.getFileContext(conf).getDefaultFileSystem.isInstanceOf[LocalFs.Context])
   }
 
+  /** A session without graft's keys: newSession copies the context's
+    * SparkConf, which the test session's builder filled, so unset them. */
+  private def bare() = {
+    val s = spark.newSession()
+    (LocalFs.conf.keys ++ SparkEntry.sharedClassLoader.keys).foreach(s.conf.unset)
+    s
+  }
+
   test("RecordSource.events installs LocalFs on a session graft did not build, and keeps a user's file system") {
-    // a session without graft's keys: newSession copies the context's
-    // SparkConf, which the test session's builder filled, so unset them
-    def bare() = {
-      val s = spark.newSession()
-      LocalFs.conf.keys.foreach(s.conf.unset)
-      s
-    }
     val source = FileRecordSource(tmp("graft-install-src"))
     val plain = bare()
     assert(LocalFs.conf.keys.forall(plain.conf.getOption(_).isEmpty))
@@ -224,6 +225,73 @@ class StreamingSpec extends AnyFunSuite {
     source.events(own)
     assert(own.conf.get("fs.file.impl") == stock)
     assert((LocalFs.conf.keySet - "fs.file.impl").forall(k => own.conf.getOption(k).isEmpty))
+  }
+
+  test("RecordSource.events shares the executor class loader unless a session sets isolation or holds artifacts") {
+    val key = SparkEntry.sharedClassLoader.keys.head
+    val source = FileRecordSource(tmp("graft-loader-src"))
+    val plain = bare()
+    assert(!plain.conf.getAll.contains(key))
+    source.events(plain)
+    assert(plain.conf.get(key) == "false")
+    val own = bare()
+    own.conf.set(key, "true")
+    source.events(own)
+    assert(own.conf.get(key) == "true")
+    // an empty jar, added as a session-scoped artifact
+    val jar = new java.io.File(tmp("graft-loader-jar"), "empty.jar")
+    new java.util.jar.JarOutputStream(new java.io.FileOutputStream(jar)).close()
+    val holding = bare()
+    holding.addArtifact(jar.getPath)
+    source.events(holding)
+    assert(!holding.conf.getAll.contains(key), "the class loader was shared over the session's artifacts")
+    LocalFs.conf.foreach { case (k, v) => assert(holding.conf.getOption(k).contains(v), k) }
+  }
+
+  test("a second delivery through startFanout compiles no generated code") {
+    val Array(first, second) =
+      EventCodec.encode(SyntheticOrders.nested(spark, sf)).randomSplit(Array(0.5, 0.5), 1L)
+    val (inDir, outBase, ckBase) = (tmp("graft-codegen-in"), tmp("graft-codegen-out"),
+      tmp("graft-codegen-ck"))
+    // both deliveries are written up front: a write compiles code of its
+    // own, and the codegen cache is bounded
+    val staged = Seq(first, second).map { wire =>
+      val dir = tmp("graft-codegen-wire")
+      wire.coalesce(1).write.mode("overwrite").text(dir)
+      new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+    }
+    def deliver(files: Array[java.io.File]): Long = {
+      files.foreach(f => assert(f.renameTo(new java.io.File(inDir, f.getName))))
+      val compiled = GraftSparkBridge.codegenCompilations
+      val q = IngestStream.startFanout(decodedStream(inDir), outBase, ckBase).head
+      assert(q.awaitTermination(120000), "fanout did not finish")
+      assert(q.recentProgress.map(_.numInputRows).sum > 0, "the delivery read no records")
+      GraftSparkBridge.codegenCompilations - compiled
+    }
+    deliver(staged(0))
+    val again = deliver(staged(1))
+    assert(again == 0, s"the second delivery compiled $again classes")
+    // the counter counts: a projection with a literal no plan has held yet compiles
+    val compiled = GraftSparkBridge.codegenCompilations
+    spark.range(1).selectExpr(s"id + ${System.nanoTime}L").collect()
+    assert(GraftSparkBridge.codegenCompilations > compiled)
+  }
+
+  test("a fanout restarted from a corrupted offsets entry fails with ChecksumException") {
+    val inDir = landWire(EventCodec.encode(SyntheticOrders.nested(spark, sf)))
+    val (outBase, ckBase) = (tmp("graft-corrupt-out"), tmp("graft-corrupt-ck"))
+    fanout(inDir, outBase, ckBase)
+    // one flipped bit in the entry's last digit: still a valid offset, so
+    // only the .crc tells the entry was corrupted
+    val entry = java.nio.file.Paths.get(s"$ckBase/fanout/offsets/0")
+    val bytes = Files.readAllBytes(entry)
+    val at = bytes.lastIndexWhere(b => b >= '0' && b <= '9')
+    bytes(at) = (bytes(at) ^ 1).toByte
+    Files.write(entry, bytes)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      fanout(inDir, outBase, ckBase))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ChecksumException]), e.toString)
   }
 
   test("a fanout batch replayed after one sink failed lands every row once") {
