@@ -123,24 +123,12 @@ object PlanAudit {
       println(f"${a.name}%-22s $status")
     }
 
-    // full JSON string escape incl. control chars — Spark exception
-    // messages are routinely multi-line, and one raw \n would make
-    // PLAN_AUDIT.json unparseable exactly when a round breaks
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = audits.map { a =>
-      s"${jstr(a.name)}:{" +
+      s"${Verify.jsonString(a.name)}:{" +
         s""""scans":${a.scans},"pushed":${a.pushed},"bcast":${a.bcast},""" +
         s""""smj":${a.smj},"codegen":${a.codegen},"exchange":${a.exchange},""" +
         s""""wide":${a.wide},"global_window":${a.gwin},""" +
-        s""""err":${a.err.map(jstr).getOrElse("null")}}"""
+        s""""err":${a.err.map(Verify.jsonString).getOrElse("null")}}"""
     }.mkString("{", ",", "}")
     java.nio.file.Files.write(java.nio.file.Paths.get("PLAN_AUDIT.json"),
       (json + "\n").getBytes("UTF-8"))

@@ -83,23 +83,24 @@ object SparkEntry {
     Set("topk_agg", "inverted_index", "knn_graph", "knn_graph_block")
 
   /** Run `body` with the object-hash fallback threshold raised iff
-    * `name` is a bounded-heap key (see [[boundedHeapKeys]]); the
-    * previous session value is restored afterwards. The conf is a
-    * runtime SQLConf, so set/restore around the triggering action is
-    * race-free in the single-threaded Verify/Bench mains.
+    * `name` is a bounded-heap key (see [[boundedHeapKeys]]).
     */
-  def withBoundedHeapConf[T](spark: SparkSession, name: String)(body: => T): T = {
-    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+  def withBoundedHeapConf[T](spark: SparkSession, name: String)(body: => T): T =
     if (!boundedHeapKeys(name)) body
-    else {
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "1000000")
-      try body
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
+    else withConf(spark,
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")(body)
+
+  /** Run `body` with session conf `key` set to `value`, then restore the
+    * value set before, or unset `key` if none was. Callers run one at a
+    * time on a session (the Verify/Bench mains and the stream entries
+    * run entries one after another), so no nesting or concurrency guard.
+    * A runtime SQLConf is read when a query starts, so restoring after
+    * the action cannot affect it.
+    */
+  def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** A session builder on `master` with `shufflePartitions` shuffle

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.TopKBuffer
+import graft.functions.BoundedHeap
 
 /** Whole-operator custom plan (SURVEY §4 ladder step (c)): exact cosine
   * top-k of a small broadcast query set against an embedding corpus.
@@ -19,7 +19,7 @@ import graft.functions.TopKBuffer
   * scored rows and shuffles them all to rank — at 100 TB that shuffle IS
   * the job. This operator pins the query vectors on every task (Spark
   * broadcast), keeps one bounded heap per query per partition
-  * (`TopKBuffer`, the same structure the top-k aggregate uses), and
+  * (`BoundedHeap`, the same structure the top-k aggregates use), and
   * emits only k rows per (query, partition); the single-partition merge
   * handles k × queries × partitions rows — trivially small — exactly the
   * shape of TakeOrderedAndProject generalized per query.
@@ -89,7 +89,7 @@ case class CosineTopKExec(
       val ids = bcIds.value
       val vecs = bcVecs.value
       val nq = ids.length
-      val heaps = Array.fill(nq)(new TopKBuffer(kk))
+      val heaps = Array.fill(nq)(new BoundedHeap(kk))
       // precompute query norms once per partition
       val qNorm = vecs.map { v =>
         var s = 0.0; var i = 0
@@ -115,16 +115,15 @@ case class CosineTopKExec(
             }
             val denom = qNorm(q) * math.sqrt(cn)
             val cos = if (denom == 0.0) 0.0 else dot / denom
-            // heap payload is the neighbor id; score the cosine
-            heaps(q).insert(nid, cos)
+            // heap payload is the neighbor id; key the cosine
+            heaps(q).insert(BoundedHeap.scoreKey(cos), nid)
           }
           q += 1
         }
       }
-      // emit partials: (queryIdx, neighborId, cosine)
+      // emit partials, unordered: (queryIdx, neighborId, cosine key)
       heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-        val arr = h.sortedDesc
-        arr.iterator.map { case (p, s) => (q, p, s) }
+        Iterator.range(0, h.size).map(i => (q, h.payloads(i), h.keys(i)))
       }
     }
 
@@ -135,11 +134,11 @@ case class CosineTopKExec(
     // O(k·queries·partitions) partials.
     partials.repartition(1).mapPartitions { it =>
       val ids = bcIds.value
-      val heaps = Array.fill(ids.length)(new TopKBuffer(kk))
-      it.foreach { case (q, p, s) => heaps(q).insert(p, s) }
+      val heaps = Array.fill(ids.length)(new BoundedHeap(kk))
+      it.foreach { case (q, p, key) => heaps(q).insert(key, p) }
       heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-        h.sortedDesc.iterator.zipWithIndex.map { case ((p, s), r) =>
-          InternalRow(ids(q), r + 1, p, s)
+        h.bestFirst.iterator.zipWithIndex.map { case (i, r) =>
+          InternalRow(ids(q), r + 1, h.payloads(i), BoundedHeap.keyScore(h.keys(i)))
         }
       }
     }

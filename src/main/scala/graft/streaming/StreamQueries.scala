@@ -55,38 +55,12 @@ object StreamQueries {
     * 4 is the floor's knee. Stream results are
     * partition-count-independent (hash partitioning only moves rows),
     * so this is a latency knob, not a semantics knob; a production
-    * deployment sizes it to state volume instead. The conf is read at
-    * query START (recorded into the new checkpoint), so restoring after
-    * termination cannot affect the running query.
+    * deployment sizes it to state volume instead.
     */
   def withStreamShuffle[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    // Re-entrancy/concurrency guard: parallel suites share one session,
-    // so an unguarded read/clamp/restore can capture the CLAMPED value
-    // as "prev" and leave the session stuck at 8 forever. Ref-count per
-    // session: only the first entrant records prev, only the last
-    // restores it. (Batch queries planned inside the window still see
-    // the clamp — acceptable for the suite, and AQE re-coalesces.)
-    clampLock.synchronized {
-      val (depth, prev) = clampState.getOrElse(s, (0, s.conf.get(key)))
-      if (depth == 0) {
-        val clamped =
-          scala.util.Try(prev.toInt).toOption.fold(4)(v => math.min(v, 4))
-        s.conf.set(key, clamped.toString)
-      }
-      clampState(s) = (depth + 1, prev)
-    }
-    try body finally clampLock.synchronized {
-      clampState.get(s).foreach { case (depth, prev) =>
-        if (depth <= 1) { s.conf.set(key, prev); clampState.remove(s) }
-        else clampState(s) = (depth - 1, prev)
-      }
-    }
+    graft.SparkEntry.withConf(s, key, math.min(s.conf.get(key).toInt, 4).toString)(body)
   }
-
-  private val clampLock = new Object
-  private val clampState =
-    scala.collection.mutable.Map.empty[SparkSession, (Int, String)]
 
   /** Run an AvailableNow stream into a uniquely-named memory sink and
     * return the sink table after termination.

@@ -248,7 +248,6 @@ object TextAnalysis {
         val symRatio =
           length(regexp_replace(col("text"), "[A-Za-z0-9\\s]", ""))
             .cast("double") / length(col("text")).cast("double")
-        val lenScore = least(n / lit(100.0), lit(1.0))
         Tables.documents(s, d).select(
           col("doc_id"),
           size(t).as("n_tokens"),

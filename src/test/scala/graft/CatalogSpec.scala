@@ -163,4 +163,21 @@ class CatalogSpec extends AnyFunSuite {
     assert(SparkEntry.executorJavaOptions(Some(s"-Xss4m $flag")) ==
       s"-Xss4m $flag")
   }
+
+  test("withConf restores a set key and unsets an unset one") {
+    val (set, unset) = ("spark.sql.shuffle.partitions", "spark.sql.graft.probe")
+    val before = spark.conf.get(set)
+    assert(!spark.conf.getAll.contains(unset))
+    SparkEntry.withConf(spark, set, "3") {
+      SparkEntry.withConf(spark, unset, "on") {
+        assert(spark.conf.get(set) == "3" && spark.conf.get(unset) == "on")
+      }
+    }
+    assert(spark.conf.get(set) == before)
+    assert(!spark.conf.getAll.contains(unset))
+    // restored on a throwing body too
+    intercept[IllegalStateException](
+      SparkEntry.withConf(spark, set, "5")(throw new IllegalStateException))
+    assert(spark.conf.get(set) == before)
+  }
 }
