@@ -77,21 +77,8 @@ object Bench {
     // on a real cluster this would be 2-3x executor cores instead
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
       math.max(4, cpus.toInt / 2).toString)
-    val spark = SparkEntry.session(s"local[$cpus]", shuffle.toInt)
+    val spark = SparkEntry.driverSession(s"local[$cpus]", shuffle.toInt)
       .config("spark.sql.adaptive.enabled", "true")
-      // Shuffle files of dereferenced stages are only deleted when a
-      // DRIVER GC collects their RDD references; with a large heap the
-      // JVM can go 30+ min without one, so a multi-query session
-      // accumulates every past query's shuffle on local disk. Measured
-      // at the sf10 probe (round 8): ~10 GB/min of dead shuffle, disk
-      // 97% full and a bench abort before the first natural full GC.
-      // The standard mitigation is a short periodic-GC interval — the
-      // same setting a long-lived cluster driver would run with.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      // ship the huge-method JIT flag to cluster executors without
-      // dropping deployment-supplied options (no-op in local mode)
-      .config("spark.executor.extraJavaOptions", SparkEntry.executorJavaOptions(
-        sys.props.get("spark.executor.extraJavaOptions")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM + parquet footer caches so the first timed query

@@ -13,16 +13,8 @@ object Verify {
     // decade-run discipline (BENCH.md round 9): the small-SF default
     // (= cpus) GC-thrashes the sf10 LSH candidate distinct; dumps at
     // sf10 set SPARK_GRAFT_SHUFFLE=64 like the benches do
-    val spark = SparkEntry.session(s"local[$cpus]",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus).toInt)
-      // see Bench.scala: without a periodic driver GC, dead shuffle
-      // files accumulate across the 200+ query dumps at large SFs
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      // ship the huge-method JIT flag to cluster executors without
-      // dropping deployment-supplied options (no-op in local mode)
-      .config("spark.executor.extraJavaOptions", SparkEntry.executorJavaOptions(
-        sys.props.get("spark.executor.extraJavaOptions")))
-      .getOrCreate()
+    val spark = SparkEntry.driverSession(s"local[$cpus]",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus).toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -21,17 +21,22 @@ import graft.Materialize.CutOps
   */
 object Clusters {
 
+  /** The distinct edges of `edges(src, dst)` in both directions, cut
+    * ONCE: every round of the loops below joins against them, and
+    * without the cut the whole upstream pipeline (e.g. the shingle pair
+    * join) would re-execute per round.
+    */
+  private def symmetricEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .cutLineage()
+
   /** edges(src,dst) → (doc_id, cluster_rep = min id reachable). Only
     * vertices that appear in an edge are returned.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    // materialize the edge list ONCE — every round joins against it, and
-    // without this the whole upstream pipeline (e.g. the shingle pair
-    // join) would re-execute per iteration
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .cutLineage()
+    val sym = symmetricEdges(edges)
     // seed labels with min(id, min neighbor) — the first propagation
     // round folded into initialization. The cut is EAGER (cutLineage()
     // defaults to eager = true): seeding costs one materializing job,
@@ -116,10 +121,7 @@ object Clusters {
     * a driver-side redistribution term.
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .cutLineage()
+    val sym = symmetricEdges(edges)
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
       .cutLineage()
     // n is a scalar aggregate (node count), not a data collect
@@ -283,6 +285,15 @@ object Clusters {
          SELECT * FROM (SELECT * FROM fout UNION ALL SELECT * FROM iout)
          ORDER BY doc_id"""
 
+  /** [[connectedComponents]]' labels in SQL: the closure's `reach`,
+    * then `labels(doc_id, cluster_rep)`.
+    */
+  private val reachLabelsSql: String =
+    Dedup.MurmurSql.nearDupReachSql + """,
+         labels AS (
+           SELECT a AS doc_id, min(b) AS cluster_rep
+           FROM reach GROUP BY a)"""
+
   val defs: Map[String, QueryDef] = Map(
 
     // D14 — dedup clusters over the n-gram near-dup graph: every doc in
@@ -297,17 +308,7 @@ object Clusters {
       (s, d) =>
         sharedLabels(s, d)
           .orderBy("doc_id"),
-      """WITH RECURSIVE
-         """ + Dedup.MurmurSql.pairGraphChainSql + """,
-         sym AS MATERIALIZED (
-           SELECT doc_a AS a, doc_b AS b FROM pairs
-           UNION SELECT doc_b, doc_a FROM pairs
-           UNION SELECT doc_a, doc_a FROM pairs
-           UNION SELECT doc_b, doc_b FROM pairs),
-         reach(a, b) AS (
-           SELECT a, b FROM sym
-           UNION
-           SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a)
+      Dedup.MurmurSql.nearDupReachSql + """
          SELECT a AS doc_id, min(b) AS cluster_rep
          FROM reach GROUP BY a ORDER BY doc_id"""),
 
@@ -329,17 +330,7 @@ object Clusters {
           .groupBy("cluster_size")
           .agg(count(lit(1)).as("n_clusters"))
           .orderBy("cluster_size"),
-      """WITH RECURSIVE
-         """ + Dedup.MurmurSql.pairGraphChainSql + """,
-         sym AS MATERIALIZED (
-           SELECT doc_a AS a, doc_b AS b FROM pairs
-           UNION SELECT doc_b, doc_a FROM pairs
-           UNION SELECT doc_a, doc_a FROM pairs
-           UNION SELECT doc_b, doc_b FROM pairs),
-         reach(a, b) AS (
-           SELECT a, b FROM sym
-           UNION
-           SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
+      Dedup.MurmurSql.nearDupReachSql + """,
          comp AS (SELECT a AS doc_id, min(b) AS rep FROM reach GROUP BY a),
          csz AS (SELECT rep, count(*) AS cluster_size FROM comp GROUP BY rep)
          SELECT cluster_size, count(*) AS n_clusters
@@ -369,20 +360,7 @@ object Clusters {
             col("n_chars").as("keep_chars"), col("cluster_size"))
           .orderBy("cluster_rep")
       },
-      """WITH RECURSIVE
-         """ + Dedup.MurmurSql.pairGraphChainSql + """,
-         sym AS MATERIALIZED (
-           SELECT doc_a AS a, doc_b AS b FROM pairs
-           UNION SELECT doc_b, doc_a FROM pairs
-           UNION SELECT doc_a, doc_a FROM pairs
-           UNION SELECT doc_b, doc_b FROM pairs),
-         reach(a, b) AS (
-           SELECT a, b FROM sym
-           UNION
-           SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-         labels AS (
-           SELECT a AS doc_id, min(b) AS cluster_rep
-           FROM reach GROUP BY a),
+      reachLabelsSql + """,
          ranked AS (
            SELECT l.cluster_rep, l.doc_id, d.n_chars,
                   row_number() OVER
@@ -688,20 +666,7 @@ object Clusters {
               .as("purity"))
           .orderBy("cluster_rep")
       },
-      """WITH RECURSIVE
-         """ + Dedup.MurmurSql.pairGraphChainSql + """,
-         sym AS MATERIALIZED (
-           SELECT doc_a AS a, doc_b AS b FROM pairs
-           UNION SELECT doc_b, doc_a FROM pairs
-           UNION SELECT doc_a, doc_a FROM pairs
-           UNION SELECT doc_b, doc_b FROM pairs),
-         reach(a, b) AS (
-           SELECT a, b FROM sym
-           UNION
-           SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-         labels AS (
-           SELECT a AS doc_id, min(b) AS cluster_rep
-           FROM reach GROUP BY a),
+      reachLabelsSql + """,
          by_src AS (
            SELECT l.cluster_rep, d.source, count(*) AS n
            FROM labels l JOIN documents d USING (doc_id)

@@ -95,15 +95,33 @@ object Dedup {
       hotDfFrac: Double = 0.001, minDfCap: Long = 1000L,
       hotSet: Option[DataFrame] = None,
       postingsSet: Option[DataFrame] = None): DataFrame = {
+    val ex = coldPostings(docs, hotDfFrac, minDfCap, hotSet, postingsSet)
+    jaccardVerified(ex, ex,
+      col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"), threshold)
+  }
+
+  /** Postings (`postingsSet`, or built) without the hot shingles
+    * (`hotSet`, or capped from their df).
+    */
+  private def coldPostings(docs: DataFrame, hotDfFrac: Double,
+      minDfCap: Long, hotSet: Option[DataFrame],
+      postingsSet: Option[DataFrame]): DataFrame = {
     val exAll = postingsSet.getOrElse(postings(docs))
     val hot = hotSet.getOrElse(
       hotShingles(docs, hotDfFrac, minDfCap, postingsSet = Some(exAll)))
-    val ex = exAll.join(hot, Seq("s"), "left_anti")
-    val a = ex.as("a")
-    val b = ex.as("b")
-    // lossless size-band prune: j = common/(na+nb-common) ≤ min(na,nb)/max(na,nb),
-    // so j ≥ t requires max ≤ min/t — pairs outside the band can't qualify
-    a.join(b, col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id") &&
+    exAll.join(hot, Seq("s"), "left_anti")
+  }
+
+  /** Postings pairs `a`, `b` joined `on` a shared shingle, verified by
+    * exact 3-gram Jaccard ≥ `threshold`: (doc_a, doc_b, jaccard at
+    * 4 dp). The join also applies the lossless size-band prune:
+    * j = common/(na+nb-common) ≤ min(na,nb)/max(na,nb), so j ≥ t
+    * requires max ≤ min/t — pairs outside the band can't qualify.
+    */
+  private def jaccardVerified(a: DataFrame, b: DataFrame, on: Column,
+      threshold: Double): DataFrame =
+    a.as("a")
+      .join(b.as("b"), on &&
         col("a.n") * lit(threshold) <= col("b.n") &&
         col("b.n") * lit(threshold) <= col("a.n"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -113,7 +131,6 @@ object Dedup {
         col("common") * lit(1.0) / (col("na") + col("nb") - col("common")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
 
   /** The corpus near-dup pair graph (3-gram Jaccard ≥ 0.5 on the
     * `documents` table) as a shared MATERIALIZED corpus asset. Seven
@@ -316,10 +333,7 @@ object Dedup {
       hotSet: Option[DataFrame] = None,
       postingsSet: Option[DataFrame] = None,
       candidateBudget: Long = 20000000L): DataFrame = {
-    val exAll = postingsSet.getOrElse(postings(docs))
-    val hot = hotSet.getOrElse(
-      hotShingles(docs, hotDfFrac, minDfCap, postingsSet = Some(exAll)))
-    val ex = exAll.join(hot, Seq("s"), "left_anti")
+    val ex = coldPostings(docs, hotDfFrac, minDfCap, hotSet, postingsSet)
     // Adaptive plan selection, measured not guessed (the AQE idiom
     // applied at the operator level): Σ df·(df−1) over the non-hot df
     // spectrum IS the exact candidate row count the inverted-index
@@ -624,22 +638,9 @@ object Dedup {
       minDfCap: Long = 1000L, hotSet: Option[DataFrame] = None,
       basePostings: Option[DataFrame] = None,
       incomingPostings: Option[DataFrame] = None): DataFrame = {
-    val exBase = basePostings.getOrElse(postings(base))
-    val hot = hotSet.getOrElse(
-      hotShingles(base, hotDfFrac, minDfCap, postingsSet = Some(exBase)))
-    val idx = exBase.join(hot, Seq("s"), "left_anti")
+    val idx = coldPostings(base, hotDfFrac, minDfCap, hotSet, basePostings)
     val probe = incomingPostings.getOrElse(postings(incoming))
-    idx.as("a")
-      .join(probe.as("b"), col("a.s") === col("b.s") &&
-        col("a.n") * lit(threshold) <= col("b.n") &&
-        col("b.n") * lit(threshold) <= col("a.n"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("common"),
-        first(col("a.n")).as("na"), first(col("b.n")).as("nb"))
-      .withColumn("jaccard",
-        col("common") * lit(1.0) / (col("na") + col("nb") - col("common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
+    jaccardVerified(idx, probe, col("a.s") === col("b.s"), threshold)
   }
 
   /** D3 — MinHash+LSH candidate pairs, then exact-Jaccard verification.
@@ -939,9 +940,19 @@ object Dedup {
   private[graft] object MurmurSql {
     /** DuckDB-side exact-double cosine (matches the Spark expression's
       * arithmetic order bit-for-bit; the builtin list_cosine_similarity
-      * accumulates in float32 and diverges at ~1e-7). Defined HERE, not
-      * on the outer object, so MurmurSql's initializer is self-contained
-      * (see the outer forwarder's scaladoc for the init-order hazard).
+      * accumulates in float32 and diverges at ~1e-7). Callers in Dedup,
+      * Knn and Quantize call it here directly.
+      *
+      * Initialization order: MurmurSql's initializer is self-contained
+      * and never calls into the outer object. A MurmurSql-first load
+      * order (first external touch being e.g. `MurmurSql.sqlMinhashSql`)
+      * would otherwise re-enter Dedup's constructor mid-MurmurSql-init,
+      * and the outer `defs` would capture the not-yet-assigned MurmurSql
+      * vals as null (observed round 8: dedup_simhash/dedup_embedding
+      * oracles went null when an unrelated edit changed which symbol
+      * touched Dedup first; CatalogSpec now rejects an oracle holding
+      * `null`). So every fragment here is a `def`, or a `val` defined
+      * before the vals that read it, and the outer `defs` is lazy.
       */
     private[graft] def duckCosine(a: String, b: String): String =
       s"""(list_sum(list_transform(range(1, 65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))
@@ -1002,6 +1013,27 @@ object Dedup {
     private def tokPrep(src: String, carry: String): String =
       tokPrepP("", src, carry)
 
+    /** Simhash signature assembly over a murmur chain `src` carrying
+      * (doc_id, cnt, ua, ub): `bits`, the count-weighted vote per
+      * signature bit, then `sig(doc_id, s)`, the signed-64 signature.
+      */
+    private def simhashSigSql(src: String): String =
+      s"""bits AS (
+            SELECT doc_id, b,
+                   sum(cnt * CASE WHEN (CASE WHEN b < 32 THEN (ub >> b) & 1
+                                         ELSE (ua >> (b - 32)) & 1 END) = 1
+                                  THEN 1 ELSE -1 END) AS votes
+            FROM $src, unnest(range(0, 64)) AS u(b)
+            GROUP BY 1, 2),
+          sig AS (
+            SELECT doc_id,
+                   CAST(sum(CASE WHEN votes > 0 AND b < 63
+                                 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)
+                        - CASE WHEN max(CASE WHEN b = 63 AND votes > 0
+                                        THEN 1 ELSE 0 END) = 1
+                               THEN 9223372036854775808 ELSE 0 END AS BIGINT) AS s
+            FROM bits GROUP BY 1)"""
+
     /** sql_minhash oracle: per-doc distinct-shingle count, first
       * minhash value (= min seed-A murmur over shingles, since
       * permutation 0 is `h1 + 0·h2`), and the 64-bit simhash — two
@@ -1025,21 +1057,7 @@ object Dedup {
           ttc AS (SELECT doc_id, tok, count(*) AS cnt FROM tt GROUP BY 1, 2),
           ${tokPrepP("t", "ttc", "cnt,")},
           ${fmixStagesP("t", "cnt,")},
-          bits AS (
-            SELECT doc_id, b,
-                   sum(cnt * CASE WHEN (CASE WHEN b < 32 THEN (ub >> b) & 1
-                                         ELSE (ua >> (b - 32)) & 1 END) = 1
-                                  THEN 1 ELSE -1 END) AS votes
-            FROM thh, unnest(range(0, 64)) AS u(b)
-            GROUP BY 1, 2),
-          sig AS (
-            SELECT doc_id,
-                   CAST(sum(CASE WHEN votes > 0 AND b < 63
-                                 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)
-                        - CASE WHEN max(CASE WHEN b = 63 AND votes > 0
-                                        THEN 1 ELSE 0 END) = 1
-                               THEN 9223372036854775808 ELSE 0 END AS BIGINT) AS s
-            FROM bits GROUP BY 1)
+          ${simhashSigSql("thh")}
           SELECT sh.doc_id,
                  CAST(len(sh.shingles) AS INT) AS n_shingles,
                  COALESCE(mh.mh0, 9223372036854775807) AS mh0,
@@ -1142,6 +1160,57 @@ object Dedup {
       * final `pairs` contract as [[pairGraphChainSql]].
       */
     val exactPairChainSql: String = pairGraphChain(forceExact = true)
+
+    /** SQL twin of [[Dedup.withShingles]] over a CTE `toks(doc_id, t)`:
+      * the CTE `sh(doc_id, shingles)`, each doc's distinct word
+      * 3-grams, for docs of 3 tokens or more.
+      */
+    val shingleSetsSql: String =
+      """sh AS (
+           SELECT doc_id,
+                  list_distinct([array_to_string(t[i:i+2], ' ')
+                                 for i in range(1, len(t) - 1)]) AS shingles
+           FROM toks WHERE len(t) >= 3)"""
+
+    /** The pair graph's edges in both directions plus a self-loop per
+      * endpoint, closing a CTE: every doc reaches itself.
+      */
+    private val reflexiveEdgesSql: String =
+      """SELECT doc_a AS a, doc_b AS b FROM pairs
+           UNION SELECT doc_b, doc_a FROM pairs
+           UNION SELECT doc_a, doc_a FROM pairs
+           UNION SELECT doc_b, doc_b FROM pairs)"""
+
+    /** The near-dup closure of [[pairGraphChainSql]] as the Curate
+      * oracles splice it, inside a `WITH RECURSIVE`: the chain, `sym_e`
+      * (both edge directions plus self-loops), the recursive
+      * `reach(a, b)`, `comp(doc_id, rep)` (each doc's min reachable id)
+      * and `<name>(doc_id)`, the docs that are not their cluster's
+      * representative.
+      */
+    def nonRepsSql(name: String): String = pairGraphChainSql + s""",
+         sym_e AS (
+           $reflexiveEdgesSql,
+         reach(a, b) AS (
+           SELECT a, b FROM sym_e
+           UNION
+           SELECT r.a, s.b FROM reach r JOIN sym_e s ON r.b = s.a),
+         comp AS (SELECT a AS doc_id, min(b) AS rep FROM reach GROUP BY a),
+         $name AS (SELECT doc_id FROM comp WHERE doc_id <> rep)"""
+
+    /** The Clusters oracles' form of the same closure, the fixpoint of
+      * [[Clusters.connectedComponents]]: `WITH RECURSIVE`, the chain, a
+      * materialized `sym` and the recursive `reach(a, b)`.
+      */
+    val nearDupReachSql: String =
+      """WITH RECURSIVE
+         """ + pairGraphChainSql + """,
+         sym AS MATERIALIZED (
+           """ + reflexiveEdgesSql + """,
+         reach(a, b) AS (
+           SELECT a, b FROM sym
+           UNION
+           SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a)"""
 
     private def pairGraphChain(forceExact: Boolean): String = {
       val exactGuard =
@@ -1488,41 +1557,9 @@ object Dedup {
             SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
             FROM documents),
           tc AS (SELECT doc_id, tok, count(*) AS cnt FROM toks GROUP BY 1, 2),
-          b AS (SELECT doc_id, cnt,
-            [ord(tok[i]) for i in range(1, length(tok)+1)] AS bl,
-            length(tok) AS n FROM tc),
-          c AS (SELECT doc_id, cnt, bl, n,
-            list_transform(range(0, n//4), i ->
-              bl[4*i+1] + bl[4*i+2]*256 + bl[4*i+3]*65536 + bl[4*i+4]*16777216)
-              AS chunks
-            FROM b),
-          h0 AS (SELECT doc_id, cnt, ${mm32(0x9747b28cL)} AS f0a,
-                        ${mm32(0x85ebca6bL)} AS f0b FROM c),
-          h1 AS (SELECT doc_id, cnt, xor(f0a, f0a//65536) AS f1a,
-                        xor(f0b, f0b//65536) AS f1b FROM h0),
-          h2 AS (SELECT doc_id, cnt, ${mulMod("f1a", "2246822507")} AS f2a,
-                        ${mulMod("f1b", "2246822507")} AS f2b FROM h1),
-          h3 AS (SELECT doc_id, cnt, xor(f2a, f2a//8192) AS f3a,
-                        xor(f2b, f2b//8192) AS f3b FROM h2),
-          h4 AS (SELECT doc_id, cnt, ${mulMod("f3a", "3266489909")} AS f4a,
-                        ${mulMod("f3b", "3266489909")} AS f4b FROM h3),
-          hh AS (SELECT doc_id, cnt, xor(f4a, f4a//65536) AS ua,
-                        xor(f4b, f4b//65536) AS ub FROM h4),
-          bits AS (
-            SELECT doc_id, b,
-                   sum(cnt * CASE WHEN (CASE WHEN b < 32 THEN (ub >> b) & 1
-                                         ELSE (ua >> (b - 32)) & 1 END) = 1
-                                  THEN 1 ELSE -1 END) AS votes
-            FROM hh, unnest(range(0, 64)) AS u(b)
-            GROUP BY 1, 2),
-          sig AS (
-            SELECT doc_id,
-                   CAST(sum(CASE WHEN votes > 0 AND b < 63
-                                 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)
-                        - CASE WHEN max(CASE WHEN b = 63 AND votes > 0
-                                        THEN 1 ELSE 0 END) = 1
-                               THEN 9223372036854775808 ELSE 0 END AS BIGINT) AS s
-            FROM bits GROUP BY 1)
+          ${tokPrep("tc", "cnt,")},
+          ${fmixStages("cnt,")},
+          ${simhashSigSql("hh")}
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                  CAST(bit_count(xor(a.s, b.s)) AS INT) AS hamming
           FROM sig a JOIN sig b ON a.doc_id < b.doc_id
@@ -1530,19 +1567,7 @@ object Dedup {
           ORDER BY doc_a, doc_b"""
   }
 
-  /** DuckDB-side exact-double cosine — forwards to the MurmurSql copy.
-    * The body LIVES inside MurmurSql so that object's initializer never
-    * calls back into this outer object: a MurmurSql-first load order
-    * (first external touch being e.g. `MurmurSql.sqlMinhashSql`) would
-    * otherwise re-enter Dedup's constructor mid-MurmurSql-init, and
-    * `defs` below would capture the not-yet-assigned MurmurSql vals as
-    * null (observed round 8: dedup_simhash/dedup_embedding oracles went
-    * null when an unrelated edit changed which symbol touched Dedup
-    * first). `defs` is additionally lazy for the same reason.
-    */
-  private[graft] def duckCosine(a: String, b: String): String =
-    MurmurSql.duckCosine(a, b)
-
+  // `defs` is lazy: see MurmurSql for the initialization-order hazard
   lazy val defs: Map[String, QueryDef] = Map(
 
     // D1 — exact dedup by content hash: one hash-shuffle, keep the
@@ -1645,11 +1670,7 @@ object Dedup {
       """WITH toks AS (
            SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
            FROM documents),
-         sh AS (
-           SELECT doc_id,
-                  list_distinct([array_to_string(t[i:i+2], ' ')
-                                 for i in range(1, len(t) - 1)]) AS shingles
-           FROM toks WHERE len(t) >= 3),
+         """ + MurmurSql.shingleSetsSql + """,
          ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS s
                 FROM sh),
          hot AS (
@@ -1817,9 +1838,9 @@ object Dedup {
           .orderBy("doc_a", "doc_b")
       },
       s"""SELECT p.doc_a, p.doc_b, p.jaccard,
-                 round(${duckCosine("ea.embedding", "eb.embedding")}, 4)
+                 round(${MurmurSql.duckCosine("ea.embedding", "eb.embedding")}, 4)
                    AS cosine,
-                 (round(${duckCosine("ea.embedding", "eb.embedding")}, 4)
+                 (round(${MurmurSql.duckCosine("ea.embedding", "eb.embedding")}, 4)
                    >= CAST(0.9 AS DOUBLE)) AS semantic_agree
           FROM ($exactSql) p
           JOIN embeddings ea ON ea.vec_id = p.doc_a

@@ -15,6 +15,80 @@ import graft.{QueryDef, Tables}
   */
 object IngestQueries {
 
+  /** The `fanout_products` oracle, also the fixpoint of its streaming
+    * twin `stream_fanout_products`: the flat lineitem projection.
+    */
+  val productDetailsSql: String =
+    """SELECT concat('p', l_partkey) AS product_id,
+                concat('o', l_orderkey) AS order_id,
+                concat('part_', l_partkey) AS name,
+                CAST(l_quantity AS INT) AS quantity,
+                l_linenumber AS line_number,
+                l_returnflag AS color,
+                l_linestatus AS size
+         FROM lineitem
+         ORDER BY order_id, line_number"""
+
+  /** DLQ accounting of a wire frame's `data` column in ONE aggregate
+    * pass: decoded (`n_good`) and dead-lettered (`n_bad`) record counts
+    * and the good side's order-key sum. `dlq_routing` runs it over the
+    * landed corrupted feed, `stream_dlq` over the same feed as a stream.
+    */
+  def dlqAccounting(wire: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    wire.withColumn("_evt", EventCodec.parseWire(col("data")))
+      .agg(
+        count(when(col("_evt.order_id").isNotNull, 1)).as("n_good"),
+        count(when(col("_evt.order_id").isNull, 1)).as("n_bad"),
+        sum(substring(col("_evt.order_id"), 2, 18).cast("long"))
+          .as("good_key_sum"))
+
+  /** The oracle of [[dlqAccounting]]: the md5-chosen 1-in-16 corrupt
+    * subset named from the base tables.
+    */
+  val dlqAccountingSql: String =
+    """WITH o AS (
+           SELECT concat('o', o_orderkey) AS order_id, o_orderkey
+           FROM orders
+           WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)),
+         tagged AS (
+           SELECT o_orderkey,
+                  CAST(('0x' || substring(md5(order_id), 1, 2)) AS INT) % 16 = 0
+                    AS corrupt
+           FROM o)
+         SELECT count(CASE WHEN NOT corrupt THEN 1 END) AS n_good,
+                count(CASE WHEN corrupt THEN 1 END) AS n_bad,
+                CAST(sum(CASE WHEN NOT corrupt THEN o_orderkey END) AS BIGINT)
+                  AS good_key_sum
+         FROM tagged"""
+
+  /** Orders per (year, month) partition of the landed orders sink: the
+    * oracle of both A8 sink round trips (by path and by table name).
+    */
+  private val sinkMonthsSql: String =
+    """SELECT strftime(o_orderdate, '%Y') AS year,
+                strftime(o_orderdate, '%m') AS month,
+                count(*) AS n_orders
+         FROM orders
+         WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
+         GROUP BY 1, 2 ORDER BY year, month"""
+
+  /** The shipping-address columns and the orders⋈customer⋈nation body
+    * of the `fanout_addresses` oracle, which `catalog_join` repeats
+    * after the orders columns.
+    */
+  private val addressesSql: String =
+    """n_name AS country,
+                c_mktsegment AS state,
+                concat('city', c_nationkey) AS city,
+                c_name AS street,
+                lpad(CAST(o_custkey AS VARCHAR), 5, '0') AS zip
+         FROM orders
+         JOIN customer ON o_custkey = c_custkey
+         JOIN nation ON c_nationkey = n_nationkey
+         WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
+         ORDER BY order_id"""
+
   val defs: Map[String, QueryDef] = Map(
 
     // A1 — full wire-format round trip: nested doc → to_json → base64 →
@@ -91,15 +165,7 @@ object IngestQueries {
       (s, d) =>
         Fanout.productDetails(SyntheticOrders.nested(s, d))
           .orderBy("order_id", "line_number"),
-      """SELECT concat('p', l_partkey) AS product_id,
-                concat('o', l_orderkey) AS order_id,
-                concat('part_', l_partkey) AS name,
-                CAST(l_quantity AS INT) AS quantity,
-                l_linenumber AS line_number,
-                l_returnflag AS color,
-                l_linestatus AS size
-         FROM lineitem
-         ORDER BY order_id, line_number"""),
+      productDetailsSql),
 
     // A5 — purchase_details fan-out: struct flatten.
     "fanout_purchases" -> QueryDef(
@@ -123,16 +189,7 @@ object IngestQueries {
         Fanout.shippingAddresses(SyntheticOrders.nested(s, d))
           .orderBy("order_id"),
       """SELECT concat('o', o_orderkey) AS order_id,
-                n_name AS country,
-                c_mktsegment AS state,
-                concat('city', c_nationkey) AS city,
-                c_name AS street,
-                lpad(CAST(o_custkey AS VARCHAR), 5, '0') AS zip
-         FROM orders
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-         ORDER BY order_id"""),
+                """ + addressesSql),
 
     // A7 — Firehose dynamic-partition key derivation: zero-padded
     // year/month/day/hour columns, aggregated to partition file counts
@@ -205,12 +262,7 @@ object IngestQueries {
             col("n_orders"))
           .orderBy("year", "month")
       },
-      """SELECT strftime(o_orderdate, '%Y') AS year,
-                strftime(o_orderdate, '%m') AS month,
-                count(*) AS n_orders
-         FROM orders
-         WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-         GROUP BY 1, 2 ORDER BY year, month"""),
+      sinkMonthsSql),
 
     // A26 — Glue-analog CATALOG registration: the reference registers
     // the Firehose sink in Glue so Athena queries it BY TABLE NAME
@@ -236,12 +288,7 @@ object IngestQueries {
         s.sql(s"SELECT year, month, count(*) AS n_orders FROM $tbl " +
           "GROUP BY year, month ORDER BY year, month")
       },
-      """SELECT strftime(o_orderdate, '%Y') AS year,
-                strftime(o_orderdate, '%m') AS month,
-                count(*) AS n_orders
-         FROM orders
-         WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-         GROUP BY 1, 2 ORDER BY year, month"""),
+      sinkMonthsSql),
 
     // A27 — the reference's ACTUAL catalog topology: terraform/main.tf
     // registers FOUR Glue tables, one per Firehose sink, and
@@ -274,16 +321,7 @@ object IngestQueries {
                 concat('o', o_orderkey) AS order_id,
                 CAST(o_orderdate AS DATE) AS order_date,
                 o_orderstatus AS status,
-                n_name AS country,
-                c_mktsegment AS state,
-                concat('city', c_nationkey) AS city,
-                c_name AS street,
-                lpad(CAST(o_custkey AS VARCHAR), 5, '0') AS zip
-         FROM orders
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-         ORDER BY order_id"""),
+                """ + addressesSql),
 
     // A14 gate twin — dead-letter routing under PLANTED corruption: a
     // deterministic 1-in-16 subset of wire records (chosen by md5 of
@@ -316,28 +354,9 @@ object IngestQueries {
         // Classification semantics are IDENTICAL (same md5-chosen
         // 1-in-16 truncation, same order_id null sentinel), proven by
         // the unchanged oracle hash.
-        val parsed = s.read.parquet(SyntheticOrders.dlqWireDir(s, d))
-          .withColumn("_evt", EventCodec.parseWire(col("data")))
-        parsed.agg(
-          count(when(col("_evt.order_id").isNotNull, 1)).as("n_good"),
-          count(when(col("_evt.order_id").isNull, 1)).as("n_bad"),
-          sum(substring(col("_evt.order_id"), 2, 18).cast("long"))
-            .as("good_key_sum"))
+        dlqAccounting(s.read.parquet(SyntheticOrders.dlqWireDir(s, d)))
       },
-      """WITH o AS (
-           SELECT concat('o', o_orderkey) AS order_id, o_orderkey
-           FROM orders
-           WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)),
-         tagged AS (
-           SELECT o_orderkey,
-                  CAST(('0x' || substring(md5(order_id), 1, 2)) AS INT) % 16 = 0
-                    AS corrupt
-           FROM o)
-         SELECT count(CASE WHEN NOT corrupt THEN 1 END) AS n_good,
-                count(CASE WHEN corrupt THEN 1 END) AS n_bad,
-                CAST(sum(CASE WHEN NOT corrupt THEN o_orderkey END) AS BIGINT)
-                  AS good_key_sum
-         FROM tagged"""),
+      dlqAccountingSql),
 
     // A9 — DynamoDB latest-per-key upsert view
     // (`lambda_kinesis_consumer:33-48` put_item = last write wins):

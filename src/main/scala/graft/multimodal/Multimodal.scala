@@ -211,6 +211,74 @@ object Multimodal {
     }.toDF("img_id", "png")
   }
 
+  /** SQL twin of [[graft.functions.Phash64]]'s fixed-point 16-point
+    * DCT basis: opens a `WITH` chain with the one-row CTE `kt(K)`; the
+    * next CTE follows.
+    */
+  private val phashKernelSql: String =
+    """WITH kt AS (SELECT
+           [[16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384],
+            [16305,15679,14449,12665,10394,7723,4756,1606,-1606,-4756,-7723,-10394,-12665,-14449,-15679,-16305],
+            [16069,13623,9102,3196,-3196,-9102,-13623,-16069,-16069,-13623,-9102,-3196,3196,9102,13623,16069],
+            [15679,10394,1606,-7723,-14449,-16305,-12665,-4756,4756,12665,16305,14449,7723,-1606,-10394,-15679],
+            [15137,6270,-6270,-15137,-15137,-6270,6270,15137,15137,6270,-6270,-15137,-15137,-6270,6270,15137],
+            [14449,1606,-12665,-15679,-4756,10394,16305,7723,-7723,-16305,-10394,4756,15679,12665,-1606,-14449],
+            [13623,-3196,-16069,-9102,9102,16069,3196,-13623,-13623,3196,16069,9102,-9102,-16069,-3196,13623],
+            [12665,-7723,-15679,1606,16305,4756,-14449,-10394,10394,14449,-4756,-16305,-1606,15679,7723,-12665]]
+           AS K),
+         """
+
+  /** SQL replay of the [[syntheticPngs]] fixtures' pixel formula as
+    * BT.601 integer luma: `imgs(img_id, p)`, then `lum(img_id, g)`,
+    * the 256 luma values of each 16×16 image; the next CTE follows.
+    */
+  private val fixtureLumaSql: String =
+    """imgs AS (
+           SELECT CAST(r.range AS BIGINT) AS img_id,
+                  CAST(CASE WHEN r.range < 48 THEN r.range % 12
+                            ELSE r.range END AS BIGINT) AS p
+           FROM range(0, 96) r),
+         lum AS (
+           SELECT img_id,
+                  [(299 * (((s % 16) * (16 + p) + (s // 16) * 7 + p * 31) % 256)
+                    + 587 * (((s % 16) * 5 + (s // 16) * (11 + p) + p * 13) % 256)
+                    + 114 * (((s % 16) * 3 + (s // 16) * 29 + p * 47) % 256))
+                   // 1000
+                   for s in range(0, 256)] AS g
+           FROM imgs),
+         """
+
+  /** The pHash oracle tail over `lum(<id>, g)`: the row and column DCT
+    * passes against `kt`, the 63-bit hash, and the dedup verdict per
+    * hash bucket.
+    */
+  private def phashDedupSql(id: String): String =
+    s"""rowp AS (
+           SELECT $id,
+                  [list_sum([g[(i % 16) * 16 + x + 1] * K[i // 16 + 1][x + 1]
+                             for x in range(0, 16)])
+                   for i in range(0, 128)] AS t
+           FROM lum CROSS JOIN kt),
+         colp AS (
+           SELECT $id,
+                  [list_sum([K[i // 8 + 1][y + 1] * t[(i % 8) * 16 + y + 1]
+                             for y in range(0, 16)])
+                   for i in range(0, 64)] AS c
+           FROM rowp CROSS JOIN kt),
+         hashed AS (
+           SELECT $id,
+                  CAST(list_sum(
+                    [CASE WHEN c[i + 1] > list_sort(c[2:64])[32]
+                          THEN CAST(1 AS BIGINT) << (i - 1) ELSE 0 END
+                     for i in range(1, 64)]) AS BIGINT) AS phash
+           FROM colp),
+         groups AS (
+           SELECT phash, min($id) AS rep_id, count(*) AS n_members
+           FROM hashed GROUP BY phash)
+         SELECT h.$id, h.phash, g.rep_id, g.n_members > 1 AS is_dup
+         FROM hashed h JOIN groups g USING (phash)
+         ORDER BY h.$id"""
+
   /** D12 gate entry: binary-column metadata plumbing — byte length and
     * magic-bytes sniff over an opaque blob column, the (deterministic)
     * first step of any media-type dispatch. Pure codegen'd column ops;
@@ -244,48 +312,14 @@ object Multimodal {
             (col("n_members") > 1L).as("is_dup"))
           .orderBy("doc_id")
       },
-      """WITH kt AS (SELECT
-           [[16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384],
-            [16305,15679,14449,12665,10394,7723,4756,1606,-1606,-4756,-7723,-10394,-12665,-14449,-15679,-16305],
-            [16069,13623,9102,3196,-3196,-9102,-13623,-16069,-16069,-13623,-9102,-3196,3196,9102,13623,16069],
-            [15679,10394,1606,-7723,-14449,-16305,-12665,-4756,4756,12665,16305,14449,7723,-1606,-10394,-15679],
-            [15137,6270,-6270,-15137,-15137,-6270,6270,15137,15137,6270,-6270,-15137,-15137,-6270,6270,15137],
-            [14449,1606,-12665,-15679,-4756,10394,16305,7723,-7723,-16305,-10394,4756,15679,12665,-1606,-14449],
-            [13623,-3196,-16069,-9102,9102,16069,3196,-13623,-13623,3196,16069,9102,-9102,-16069,-3196,13623],
-            [12665,-7723,-15679,1606,16305,4756,-14449,-10394,10394,14449,-4756,-16305,-1606,15679,7723,-12665]]
-           AS K),
-         lum AS (
+      phashKernelSql + """lum AS (
            SELECT doc_id,
                   [CASE WHEN length(text) = 0 THEN 0
                         ELSE unicode(substring(text,
                                (s * length(text)) // 256 + 1, 1)) END
                    for s in range(0, 256)] AS g
            FROM documents),
-         rowp AS (
-           SELECT doc_id,
-                  [list_sum([g[(i % 16) * 16 + x + 1] * K[i // 16 + 1][x + 1]
-                             for x in range(0, 16)])
-                   for i in range(0, 128)] AS t
-           FROM lum CROSS JOIN kt),
-         colp AS (
-           SELECT doc_id,
-                  [list_sum([K[i // 8 + 1][y + 1] * t[(i % 8) * 16 + y + 1]
-                             for y in range(0, 16)])
-                   for i in range(0, 64)] AS c
-           FROM rowp CROSS JOIN kt),
-         hashed AS (
-           SELECT doc_id,
-                  CAST(list_sum(
-                    [CASE WHEN c[i + 1] > list_sort(c[2:64])[32]
-                          THEN CAST(1 AS BIGINT) << (i - 1) ELSE 0 END
-                     for i in range(1, 64)]) AS BIGINT) AS phash
-           FROM colp),
-         groups AS (
-           SELECT phash, min(doc_id) AS rep_id, count(*) AS n_members
-           FROM hashed GROUP BY phash)
-         SELECT h.doc_id, h.phash, g.rep_id, g.n_members > 1 AS is_dup
-         FROM hashed h JOIN groups g USING (phash)
-         ORDER BY h.doc_id"""),
+         """ + phashDedupSql("doc_id")),
 
     // D105b — pHash over REAL image bytes (round-8 verdict item 4):
     // the fixture PNGs are genuine ImageIO-encoded files; the engine
@@ -319,54 +353,7 @@ object Multimodal {
             (col("n_members") > 1L).as("is_dup"))
           .orderBy("img_id")
       },
-      """WITH kt AS (SELECT
-           [[16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384,16384],
-            [16305,15679,14449,12665,10394,7723,4756,1606,-1606,-4756,-7723,-10394,-12665,-14449,-15679,-16305],
-            [16069,13623,9102,3196,-3196,-9102,-13623,-16069,-16069,-13623,-9102,-3196,3196,9102,13623,16069],
-            [15679,10394,1606,-7723,-14449,-16305,-12665,-4756,4756,12665,16305,14449,7723,-1606,-10394,-15679],
-            [15137,6270,-6270,-15137,-15137,-6270,6270,15137,15137,6270,-6270,-15137,-15137,-6270,6270,15137],
-            [14449,1606,-12665,-15679,-4756,10394,16305,7723,-7723,-16305,-10394,4756,15679,12665,-1606,-14449],
-            [13623,-3196,-16069,-9102,9102,16069,3196,-13623,-13623,3196,16069,9102,-9102,-16069,-3196,13623],
-            [12665,-7723,-15679,1606,16305,4756,-14449,-10394,10394,14449,-4756,-16305,-1606,15679,7723,-12665]]
-           AS K),
-         imgs AS (
-           SELECT CAST(r.range AS BIGINT) AS img_id,
-                  CAST(CASE WHEN r.range < 48 THEN r.range % 12
-                            ELSE r.range END AS BIGINT) AS p
-           FROM range(0, 96) r),
-         lum AS (
-           SELECT img_id,
-                  [(299 * (((s % 16) * (16 + p) + (s // 16) * 7 + p * 31) % 256)
-                    + 587 * (((s % 16) * 5 + (s // 16) * (11 + p) + p * 13) % 256)
-                    + 114 * (((s % 16) * 3 + (s // 16) * 29 + p * 47) % 256))
-                   // 1000
-                   for s in range(0, 256)] AS g
-           FROM imgs),
-         rowp AS (
-           SELECT img_id,
-                  [list_sum([g[(i % 16) * 16 + x + 1] * K[i // 16 + 1][x + 1]
-                             for x in range(0, 16)])
-                   for i in range(0, 128)] AS t
-           FROM lum CROSS JOIN kt),
-         colp AS (
-           SELECT img_id,
-                  [list_sum([K[i // 8 + 1][y + 1] * t[(i % 8) * 16 + y + 1]
-                             for y in range(0, 16)])
-                   for i in range(0, 64)] AS c
-           FROM rowp CROSS JOIN kt),
-         hashed AS (
-           SELECT img_id,
-                  CAST(list_sum(
-                    [CASE WHEN c[i + 1] > list_sort(c[2:64])[32]
-                          THEN CAST(1 AS BIGINT) << (i - 1) ELSE 0 END
-                     for i in range(1, 64)]) AS BIGINT) AS phash
-           FROM colp),
-         groups AS (
-           SELECT phash, min(img_id) AS rep_id, count(*) AS n_members
-           FROM hashed GROUP BY phash)
-         SELECT h.img_id, h.phash, g.rep_id, g.n_members > 1 AS is_dup
-         FROM hashed h JOIN groups g USING (phash)
-         ORDER BY h.img_id"""),
+      phashKernelSql + fixtureLumaSql + phashDedupSql("img_id")),
 
     // D12 gate (round-11 verdict item 5) — the full decode→feature
     // path of the D12 pipeline as a hash-gated key, retiring its
@@ -396,20 +383,7 @@ object Multimodal {
             posexplode(col("embedding")).as(Seq("dim", "feat")))
           .orderBy("img_id", "dim")
       },
-      """WITH imgs AS (
-           SELECT CAST(r.range AS BIGINT) AS img_id,
-                  CAST(CASE WHEN r.range < 48 THEN r.range % 12
-                            ELSE r.range END AS BIGINT) AS p
-           FROM range(0, 96) r),
-         lum AS (
-           SELECT img_id,
-                  [(299 * (((s % 16) * (16 + p) + (s // 16) * 7 + p * 31) % 256)
-                    + 587 * (((s % 16) * 5 + (s // 16) * (11 + p) + p * 13) % 256)
-                    + 114 * (((s % 16) * 3 + (s // 16) * 29 + p * 47) % 256))
-                   // 1000
-                   for s in range(0, 256)] AS g
-           FROM imgs),
-         feats AS (
+      "WITH " + fixtureLumaSql + """feats AS (
            SELECT img_id, d.range AS dim,
                   list_sum([g[i + 1] for i in range(0, 256)
                             if i % 16 = d.range]) AS fsum,

@@ -98,29 +98,38 @@ object TimeOps {
     Tables.events(s, d).filter(col("event_type") === tpe)
       .select("event_id", "ts", "user_id", "value")
 
-  val defs: Map[String, QueryDef] = Map(
-
-    // C13b — Spark's native session_window (gap-merged intervals; the
-    // same op Structured Streaming uses for stateful sessions). Oracle:
-    // the lag+running-sum formulation — two formulations, one fixpoint.
-    "session_window_agg" -> QueryDef(
-      (s, d) =>
-        Tables.events(s, d)
-          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-          .agg(count(lit(1)).as("n_events"),
-            round(sum("value"), 4).as("session_value"))
-          .select(col("session_window.start").as("session_start"),
-            col("user_id"), col("n_events"), col("session_value"))
-          .orderBy("user_id", "session_start"),
-      """WITH flagged AS (
-           SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
+  /** SQL twin of [[sessionize]]'s session-start flag: opens a `WITH`
+    * chain with the CTE `flagged`, where `new_session` = 1 on a user's
+    * first event and on every event more than 30 minutes after the
+    * previous one. `cols` is the select-list tail after `ts`.
+    */
+  private def sessionFlagSql(cols: String): String =
+    s"""WITH flagged AS (
+           SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts$cols,
                   CASE WHEN lag(CAST(ts AS TIMESTAMP)) OVER w IS NULL THEN 1
                        WHEN epoch_us(CAST(ts AS TIMESTAMP))
                             - epoch_us(lag(CAST(ts AS TIMESTAMP)) OVER w)
                             > 1800 * 1000000 THEN 1
                        ELSE 0 END AS new_session
            FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)),
+           WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)),"""
+
+  /** Per-user 30-minute session windows with their event count and
+    * value sum: `session_window_agg` over the events table and its
+    * streaming twin `stream_sessions` over the events stream.
+    */
+  def sessionWindowStats(events: DataFrame): DataFrame =
+    events
+      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"),
+        round(sum("value"), 4).as("session_value"))
+      .select(col("session_window.start").as("session_start"),
+        col("user_id"), col("n_events"), col("session_value"))
+
+  /** The oracle of [[sessionWindowStats]]: the lag + running-sum
+    * formulation over the batch table, shared by both entries.
+    */
+  val sessionWindowSql: String = sessionFlagSql(", value") + """
          sessions AS (
            SELECT user_id, ts, value,
                   sum(new_session) OVER
@@ -131,7 +140,18 @@ object TimeOps {
          SELECT min(ts) AS session_start, user_id, count(*) AS n_events,
                 round(sum(value), 4) AS session_value
          FROM sessions GROUP BY user_id, session_id
-         ORDER BY user_id, session_start"""),
+         ORDER BY user_id, session_start"""
+
+  val defs: Map[String, QueryDef] = Map(
+
+    // C13b — Spark's native session_window (gap-merged intervals; the
+    // same op Structured Streaming uses for stateful sessions). Oracle:
+    // the lag+running-sum formulation — two formulations, one fixpoint.
+    "session_window_agg" -> QueryDef(
+      (s, d) =>
+        sessionWindowStats(Tables.events(s, d))
+          .orderBy("user_id", "session_start"),
+      sessionWindowSql),
 
     // C77 — hourly session CONCURRENCY: for every hour of the span, how
     // many sessions were live (overlap the hour) — the load-curve
@@ -155,15 +175,7 @@ object TimeOps {
           .groupBy("hour")
           .agg(count(lit(1)).as("n_live"))
           .orderBy("hour"),
-      """WITH flagged AS (
-           SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-                  CASE WHEN lag(CAST(ts AS TIMESTAMP)) OVER w IS NULL THEN 1
-                       WHEN epoch_us(CAST(ts AS TIMESTAMP))
-                            - epoch_us(lag(CAST(ts AS TIMESTAMP)) OVER w)
-                            > 1800 * 1000000 THEN 1
-                       ELSE 0 END AS new_session
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)),
+      sessionFlagSql("") + """
          sessions AS (
            SELECT user_id, ts,
                   CAST(sum(new_session) OVER
@@ -194,15 +206,7 @@ object TimeOps {
             max("ts").as("session_end"),
             round(sum("value"), 4).as("session_value"))
           .orderBy("user_id", "session_id"),
-      """WITH flagged AS (
-           SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
-                  CASE WHEN lag(CAST(ts AS TIMESTAMP)) OVER w IS NULL THEN 1
-                       WHEN epoch_us(CAST(ts AS TIMESTAMP))
-                            - epoch_us(lag(CAST(ts AS TIMESTAMP)) OVER w)
-                            > 1800 * 1000000 THEN 1
-                       ELSE 0 END AS new_session
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)),
+      sessionFlagSql(", value") + """
          sessions AS (
            -- CAST: DuckDB window sum(int) is HUGEINT; Spark's is BIGINT
            SELECT user_id, ts, value,

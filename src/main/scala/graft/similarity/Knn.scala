@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{HashOps, VectorOps}
 import graft.{QueryDef, Tables}
 import graft.Materialize.CutOps
+import graft.dedup.Dedup.MurmurSql
 
 /** Approximate-nearest-neighbor search over embedding columns
   * (SURVEY §2 D6–D7).
@@ -617,6 +618,24 @@ object Knn {
     math.max(30, math.ceil(2.7 * log2n).toInt)
   }
 
+  /** The exact top-k oracle of the 10 fixed queries, up to the ranking:
+    * every other vector's exact-double cosine to each query, then
+    * `ranked` by cosine desc, neighbor_id. `knn_brute` and `knn_custom`
+    * differ only in the final projection.
+    */
+  private val bruteRankedSql: String =
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
+                     FROM embeddings WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, e.vec_id AS neighbor_id,
+                     ${MurmurSql.duckCosine("q.qe", "e.embedding")} AS cos
+              FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, neighbor_id, cos,
+                     row_number() OVER (PARTITION BY query_id
+                                        ORDER BY cos DESC, neighbor_id) AS rank
+              FROM scored)"""
+
   val defs: Map[String, QueryDef] = Map(
 
     // D6 — exact brute-force top-3 for 10 fixed query vectors.
@@ -624,17 +643,7 @@ object Knn {
       (s, d) =>
         bruteForce(queriesOf(s, d), Tables.embeddings(s, d), 3)
           .orderBy("query_id", "rank"),
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
-                     FROM embeddings WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, e.vec_id AS neighbor_id,
-                     ${graft.dedup.Dedup.duckCosine("q.qe", "e.embedding")} AS cos
-              FROM q, embeddings e WHERE e.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos DESC, neighbor_id) AS rank
-              FROM scored)
+      bruteRankedSql + """
           SELECT query_id, rank, neighbor_id, round(cos, 4) AS cosine
           FROM ranked WHERE rank <= 3 ORDER BY query_id, rank"""),
 
@@ -646,7 +655,7 @@ object Knn {
       (s, d) =>
         lsh(queriesOf(s, d), Tables.embeddings(s, d), 3)
           .orderBy("query_id", "rank"),
-      graft.dedup.Dedup.MurmurSql.knnLshSql),
+      MurmurSql.knnLshSql),
 
     // D6b — same semantics as knn_brute through the custom
     // LogicalPlan/Strategy/SparkPlan operator (plans.CosineTopK):
@@ -658,17 +667,7 @@ object Knn {
           Tables.embeddings(s, d), queriesOf(s, d), 3)
           .withColumn("cosine", round(col("cosine"), 4))
           .orderBy("query_id", "rank"),
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
-                     FROM embeddings WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, e.vec_id AS neighbor_id,
-                     ${graft.dedup.Dedup.duckCosine("q.qe", "e.embedding")} AS cos
-              FROM q, embeddings e WHERE e.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos DESC, neighbor_id) AS rank
-              FROM scored)
+      bruteRankedSql + """
           SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
                  round(cos, 4) AS cosine
           FROM ranked WHERE rank <= 3 ORDER BY query_id, rank"""),
@@ -759,7 +758,7 @@ object Knn {
       s"""WITH sube AS (SELECT * FROM embeddings WHERE vec_id % 20 = 0),
           scored AS (
             SELECT a.vec_id, b.vec_id AS neighbor_id,
-                   ${graft.dedup.Dedup.duckCosine("a.embedding", "b.embedding")} AS cos
+                   ${MurmurSql.duckCosine("a.embedding", "b.embedding")} AS cos
             FROM sube a JOIN sube b
               ON a.label = b.label AND a.vec_id <> b.vec_id),
           ranked AS (

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 import graft.{QueryDef, Tables}
+import graft.dedup.Dedup.MurmurSql
 
 /** Scalar quantization for embedding storage/search (SURVEY §2 D27) —
   * the int8 compression step of IVF-PQ-family indexes: per-vector
@@ -80,7 +81,7 @@ object Quantize {
             FROM mm),
           scored AS (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   round(${graft.dedup.Dedup.duckCosine("q.dq", "c.dq")}, 4)
+                   round(${MurmurSql.duckCosine("q.dq", "c.dq")}, 4)
                      AS qcosine
             FROM qz q JOIN qz c ON q.vec_id < 10 AND c.vec_id != q.vec_id),
           ranked AS (

@@ -48,6 +48,50 @@ object VectorAnalytics {
     (signum(s2.cast("double")) * mag) / lit(10000.0)
   }
 
+  /** SQL twin of [[qmean4]] over a column `x`, aliased `m`. */
+  private val qmean4Sql: String =
+    """(CASE WHEN sum(CAST(round(x * 10000, 0) AS BIGINT)) >= 0
+                        THEN 1 ELSE -1 END
+                   * ((2 * abs(sum(CAST(round(x * 10000, 0) AS BIGINT)))
+                       + count(*)) // (2 * count(*))))
+                  / 10000.0 AS m"""
+
+  /** A centroid's dims back in `pos` order from its (pos, m) rows. */
+  private def dimsInOrder: org.apache.spark.sql.Column =
+    transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+      x => x.getField("m"))
+
+  /** Embeddings as (vec_id, label, v = the vector widened to double). */
+  private def labelVectors(s: org.apache.spark.sql.SparkSession, d: String)
+      : org.apache.spark.sql.DataFrame =
+    Tables.embeddings(s, d)
+      .select(col("vec_id"), col("label"),
+        transform(col("embedding"), _.cast("double")).as("v"))
+
+  /** Per-label [[qmean4]] centroids of a [[labelVectors]] frame: the
+    * label column, named `labelAs`, and `c`, the centroid's dims in
+    * order.
+    */
+  private def labelCentroids(emb: org.apache.spark.sql.DataFrame,
+      labelAs: String): org.apache.spark.sql.DataFrame =
+    emb.select(col("label").as(labelAs), posexplode(col("v")))
+      .groupBy(labelAs, "pos")
+      .agg(qmean4(col("col")).as("m"))
+      .groupBy(labelAs)
+      .agg(dimsInOrder.as("c"))
+
+  /** SQL twin of [[labelCentroids]] up to the per-dim means: `dims`
+    * (label, pos, x), then `cent` selecting `label` (the label column
+    * or its alias), pos and `m` per (label, pos).
+    */
+  private def labelCentSql(label: String): String =
+    s"""WITH dims AS (
+           SELECT label, i AS pos, CAST(embedding[i] AS DOUBLE) AS x
+           FROM embeddings, unnest(range(1, 65)) AS t(i)),
+         cent AS (
+           SELECT $label, pos, $qmean4Sql
+           FROM dims GROUP BY 1, 2),"""
+
   /** D89 core — per-label L2-norm audit of an (label, embedding)
     * frame. Factored out so specs can plant unit/zero/scaled vectors
     * and check the envelope and counters.
@@ -98,14 +142,10 @@ object VectorAnalytics {
     val carr = dims.groupBy("source", "pos")
       .agg(qmean4(col("col")).as("m"))
       .groupBy("source")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("m")))),
-        x => x.getField("m")).as("c"))
+      .agg(dimsInOrder.as("c"))
     val garr = dims.groupBy("pos")
       .agg(qmean4(col("col")).as("m"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("m")))),
-        x => x.getField("m")).as("g"))
+      .agg(dimsInOrder.as("g"))
     val nv = j.groupBy("source").agg(count(lit(1)).as("n_vecs"))
     carr.join(nv, "source")
       .crossJoin(broadcast(garr))
@@ -132,11 +172,7 @@ object VectorAnalytics {
           .groupBy("label", "pos")
           .agg(qmean4(col("col").cast("double")).as("m"))
           .groupBy("label")
-          .agg(
-            transform(
-              array_sort(collect_list(struct(col("pos"), col("m")))),
-              x => x.getField("m")).as("c"),
-            count(lit(1)).as("n_dims"))
+          .agg(dimsInOrder.as("c"), count(lit(1)).as("n_dims"))
           .select(col("label"),
             round(sqrt(aggregate(transform(col("c"), x => x * x),
               lit(0.0), (acc, x) => acc + x)), 4).as("centroid_norm"),
@@ -147,11 +183,7 @@ object VectorAnalytics {
            FROM embeddings, unnest(range(1, 65)) AS t(i)),
          centroid AS (
            SELECT label, pos,
-                  (CASE WHEN sum(CAST(round(x * 10000, 0) AS BIGINT)) >= 0
-                        THEN 1 ELSE -1 END
-                   * ((2 * abs(sum(CAST(round(x * 10000, 0) AS BIGINT)))
-                       + count(*)) // (2 * count(*))))
-                  / 10000.0 AS m
+                  """ + qmean4Sql + """
            FROM dims GROUP BY label, pos),
          carr AS (
            SELECT label, list(m ORDER BY pos) AS c, count(*) AS n_dims
@@ -204,17 +236,8 @@ object VectorAnalytics {
     // label-count-bounded confusion-matrix aggregate.
     "centroid_assign" -> QueryDef(
       (s, d) => {
-        val emb = Tables.embeddings(s, d)
-          .select(col("vec_id"), col("label"),
-            transform(col("embedding"), _.cast("double")).as("v"))
-        val cent = emb
-          .select(col("label").as("c_label"), posexplode(col("v")))
-          .groupBy("c_label", "pos")
-          .agg(qmean4(col("col")).as("m"))
-          .groupBy("c_label")
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("m")))),
-            x => x.getField("m")).as("c"))
+        val emb = labelVectors(s, d)
+        val cent = labelCentroids(emb, "c_label")
         val centArr = cent.agg(
           array_sort(collect_list(struct(col("c_label"), col("c")))).as("cents"))
         emb.crossJoin(broadcast(centArr))
@@ -234,16 +257,7 @@ object VectorAnalytics {
           .agg(count(lit(1)).as("n"))
           .orderBy("label", "pred_label")
       },
-      """WITH dims AS (
-           SELECT label, i AS pos, CAST(embedding[i] AS DOUBLE) AS x
-           FROM embeddings, unnest(range(1, 65)) AS t(i)),
-         cent AS (
-           SELECT label AS c_label, pos, (CASE WHEN sum(CAST(round(x * 10000, 0) AS BIGINT)) >= 0
-                        THEN 1 ELSE -1 END
-                   * ((2 * abs(sum(CAST(round(x * 10000, 0) AS BIGINT)))
-                       + count(*)) // (2 * count(*))))
-                  / 10000.0 AS m
-           FROM dims GROUP BY 1, 2),
+      labelCentSql("label AS c_label") + """
          carr AS (
            SELECT c_label, list(m ORDER BY pos) AS c FROM cent GROUP BY 1),
          scored AS (
@@ -311,14 +325,7 @@ object VectorAnalytics {
     // DuckDB list comprehension), so the 4 dp result cannot diverge.
     "centroid_sim" -> QueryDef(
       (s, d) => {
-        val cent = Tables.embeddings(s, d)
-          .select(col("label"), posexplode(col("embedding")))
-          .groupBy("label", "pos")
-          .agg(qmean4(col("col").cast("double")).as("m"))
-          .groupBy("label")
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("m")))),
-            x => x.getField("m")).as("c"))
+        val cent = labelCentroids(labelVectors(s, d), "label")
         val a = cent.select(col("label").as("label_a"), col("c").as("ca"))
         val b = cent.select(col("label").as("label_b"), col("c").as("cb"))
         a.crossJoin(broadcast(b))
@@ -336,16 +343,7 @@ object VectorAnalytics {
             round(col("dot") / (col("na") * col("nb")), 4).as("cosine"))
           .orderBy("label_a", "label_b")
       },
-      """WITH dims AS (
-           SELECT label, i AS pos, CAST(embedding[i] AS DOUBLE) AS x
-           FROM embeddings, unnest(range(1, 65)) AS t(i)),
-         cent AS (
-           SELECT label, pos, (CASE WHEN sum(CAST(round(x * 10000, 0) AS BIGINT)) >= 0
-                        THEN 1 ELSE -1 END
-                   * ((2 * abs(sum(CAST(round(x * 10000, 0) AS BIGINT)))
-                       + count(*)) // (2 * count(*))))
-                  / 10000.0 AS m
-           FROM dims GROUP BY 1, 2),
+      labelCentSql("label") + """
          carr AS (SELECT label, list(m ORDER BY pos) AS c FROM cent GROUP BY 1)
          SELECT a.label AS label_a, b.label AS label_b,
                 round(list_sum([a.c[i] * b.c[i] for i in range(1, 65)])
@@ -366,17 +364,8 @@ object VectorAnalytics {
     "embedding_outliers" -> QueryDef(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val emb = Tables.embeddings(s, d)
-          .select(col("vec_id"), col("label"),
-            transform(col("embedding"), _.cast("double")).as("v"))
-        val cent = emb
-          .select(col("label"), posexplode(col("v")))
-          .groupBy("label", "pos")
-          .agg(qmean4(col("col")).as("m"))
-          .groupBy("label")
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("m")))),
-            x => x.getField("m")).as("c"))
+        val emb = labelVectors(s, d)
+        val cent = labelCentroids(emb, "label")
         val w = Window.partitionBy("label")
           .orderBy(col("dist").desc, col("vec_id"))
         emb.join(broadcast(cent), "label")
@@ -389,16 +378,7 @@ object VectorAnalytics {
           .select(col("label"), col("rank"), col("vec_id"), col("dist"))
           .orderBy("label", "rank")
       },
-      """WITH dims AS (
-           SELECT label, i AS pos, CAST(embedding[i] AS DOUBLE) AS x
-           FROM embeddings, unnest(range(1, 65)) AS t(i)),
-         cent AS (
-           SELECT label, pos, (CASE WHEN sum(CAST(round(x * 10000, 0) AS BIGINT)) >= 0
-                        THEN 1 ELSE -1 END
-                   * ((2 * abs(sum(CAST(round(x * 10000, 0) AS BIGINT)))
-                       + count(*)) // (2 * count(*))))
-                  / 10000.0 AS m
-           FROM dims GROUP BY 1, 2),
+      labelCentSql("label") + """
          carr AS (SELECT label, list(m ORDER BY pos) AS c FROM cent GROUP BY 1),
          scored AS (
            SELECT e.vec_id, e.label,
@@ -431,17 +411,8 @@ object VectorAnalytics {
     // guarded to NULL on both sides, and avg skips NULLs identically.
     "cluster_silhouette" -> QueryDef(
       (s, d) => {
-        val emb = Tables.embeddings(s, d)
-          .select(col("vec_id"), col("label"),
-            transform(col("embedding"), _.cast("double")).as("v"))
-        val cent = emb
-          .select(col("label").as("c_label"), posexplode(col("v")))
-          .groupBy("c_label", "pos")
-          .agg(qmean4(col("col")).as("m"))
-          .groupBy("c_label")
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("m")))),
-            x => x.getField("m")).as("c"))
+        val emb = labelVectors(s, d)
+        val cent = labelCentroids(emb, "c_label")
         val ab = emb.crossJoin(broadcast(cent))
           .withColumn("dist",
             sqrt(aggregate(
@@ -460,16 +431,7 @@ object VectorAnalytics {
             round(avg("sil"), 4).as("avg_sil"))
           .orderBy("label")
       },
-      """WITH dims AS (
-           SELECT label, i AS pos, CAST(embedding[i] AS DOUBLE) AS x
-           FROM embeddings, unnest(range(1, 65)) AS t(i)),
-         cent AS (
-           SELECT label AS c_label, pos, (CASE WHEN sum(CAST(round(x * 10000, 0) AS BIGINT)) >= 0
-                        THEN 1 ELSE -1 END
-                   * ((2 * abs(sum(CAST(round(x * 10000, 0) AS BIGINT)))
-                       + count(*)) // (2 * count(*))))
-                  / 10000.0 AS m
-           FROM dims GROUP BY 1, 2),
+      labelCentSql("label AS c_label") + """
          carr AS (
            SELECT c_label, list(m ORDER BY pos) AS c FROM cent GROUP BY 1),
          scored AS (
@@ -546,19 +508,11 @@ object VectorAnalytics {
            SELECT source, i AS pos, CAST(embedding[i] AS DOUBLE) AS x
            FROM joined, unnest(range(1, 65)) AS t(i)),
          cent AS (
-           SELECT source, pos, (CASE WHEN sum(CAST(round(x * 10000, 0) AS BIGINT)) >= 0
-                        THEN 1 ELSE -1 END
-                   * ((2 * abs(sum(CAST(round(x * 10000, 0) AS BIGINT)))
-                       + count(*)) // (2 * count(*))))
-                  / 10000.0 AS m
+           SELECT source, pos, """ + qmean4Sql + """
            FROM dims GROUP BY 1, 2),
          carr AS (SELECT source, list(m ORDER BY pos) AS c
                   FROM cent GROUP BY 1),
-         gc AS (SELECT pos, (CASE WHEN sum(CAST(round(x * 10000, 0) AS BIGINT)) >= 0
-                        THEN 1 ELSE -1 END
-                   * ((2 * abs(sum(CAST(round(x * 10000, 0) AS BIGINT)))
-                       + count(*)) // (2 * count(*))))
-                  / 10000.0 AS m FROM dims GROUP BY 1),
+         gc AS (SELECT pos, """ + qmean4Sql + """ FROM dims GROUP BY 1),
          garr AS (SELECT list(m ORDER BY pos) AS g FROM gc),
          nv AS (SELECT source, count(*) AS n_vecs FROM joined GROUP BY 1)
          SELECT c.source, nv.n_vecs,

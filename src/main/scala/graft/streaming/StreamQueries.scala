@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.{QueryDef, Tables}
+import graft.ingest.{EventCodec, Fanout, IngestQueries, SyntheticOrders}
+import graft.operators.TimeOps
 
 /** Gate-checked Structured Streaming entries (SURVEY §2 A16–A18):
   * each runs a real streaming query (file source → stateful transform →
@@ -44,6 +46,14 @@ object StreamQueries {
     Tables.normalizeTs(raw)
   }
 
+  /** A landed wire directory as a stream, every file in one
+    * micro-batch (see [[eventsStream]]).
+    */
+  private def wireStream(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(s.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", Int.MaxValue.toString)
+      .parquet(dir)
+
   /** Clamp `spark.sql.shuffle.partitions` to ≤4 for the duration of a
     * streaming run, restoring the caller's value afterwards. A stateful
     * micro-batch pays a PER-PARTITION fixed cost (one state store
@@ -77,6 +87,38 @@ object StreamQueries {
       q.awaitTermination()
       df.sparkSession.table(name)
     }
+
+  /** The events stream as LatestKV records: key = user id, sequence =
+    * event id (unique, so "latest" is deterministic), value = event
+    * type.
+    */
+  private def kvStream(s: SparkSession, d: String) =
+    eventsStream(s, d)
+      .selectExpr("CAST(user_id AS STRING) AS key",
+        "event_id AS seq", "event_type AS value")
+      .as[LatestKV.KV](org.apache.spark.sql.Encoders.product[LatestKV.KV])
+
+  /** Max-seq collapse per key, ordered by key: a no-op for a single
+    * AvailableNow batch, correctness if the source ever splits batches.
+    */
+  private def latestBySeq(kv: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("key").orderBy(col("seq").desc)
+    kv.withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1)
+      .drop("_rn")
+      .orderBy("key")
+  }
+
+  /** The batch latest-per-key fixpoint both KV entries must reach. */
+  private val latestKvSql =
+    """SELECT CAST(user_id AS VARCHAR) AS key, event_id AS seq,
+                event_type AS value
+         FROM (SELECT user_id, event_id, event_type,
+                      row_number() OVER (PARTITION BY user_id
+                                         ORDER BY event_id DESC) AS rn
+               FROM events) t
+         WHERE rn = 1 ORDER BY key"""
 
   val defs: Map[String, QueryDef] = Map(
 
@@ -147,27 +189,10 @@ object StreamQueries {
     // keeps the highest sequence — a no-op for a single AvailableNow
     // batch, correctness under any batch split.
     "stream_latest_kv" -> QueryDef(
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val kv = eventsStream(s, d)
-          .selectExpr("CAST(user_id AS STRING) AS key",
-            "event_id AS seq", "event_type AS value")
-          .as[LatestKV.KV](org.apache.spark.sql.Encoders.product[LatestKV.KV])
-        val out = LatestKV.latest(kv).toDF()
-        val w = Window.partitionBy("key").orderBy(col("seq").desc)
-        runToMemory(out, "update")
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1)
-          .drop("_rn")
-          .orderBy("key")
-      },
-      """SELECT CAST(user_id AS VARCHAR) AS key, event_id AS seq,
-                event_type AS value
-         FROM (SELECT user_id, event_id, event_type,
-                      row_number() OVER (PARTITION BY user_id
-                                         ORDER BY event_id DESC) AS rn
-               FROM events) t
-         WHERE rn = 1 ORDER BY key"""),
+      (s, d) =>
+        latestBySeq(
+          runToMemory(LatestKV.latest(kvStream(s, d)).toDF(), "update")),
+      latestKvSql),
 
     // D19 — the foreachBatch KV SINK as a gate entry (the DynamoDB
     // writer itself, not just the state view): each update micro-batch
@@ -179,13 +204,8 @@ object StreamQueries {
     // no driver-side collect.
     "stream_kv_snapshot" -> QueryDef(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val snap = graft.Tables.freshScratchDir("kv_snap") + "/state"
-        val kv = eventsStream(s, d)
-          .selectExpr("CAST(user_id AS STRING) AS key",
-            "event_id AS seq", "event_type AS value")
-          .as[LatestKV.KV](org.apache.spark.sql.Encoders.product[LatestKV.KV])
-        val q0 = LatestKV.latest(kv).toDF().writeStream
+        val q0 = LatestKV.latest(kvStream(s, d)).toDF().writeStream
           .outputMode("update")
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -214,22 +234,9 @@ object StreamQueries {
           val q = q0.start()
           q.awaitTermination()
         }
-        // max-seq collapse per key: a no-op for a single AvailableNow
-        // batch, correctness if the source ever splits batches
-        val w = Window.partitionBy("key").orderBy(col("seq").desc)
-        s.read.parquet(snap)
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1)
-          .drop("_rn")
-          .orderBy("key")
+        latestBySeq(s.read.parquet(snap))
       },
-      """SELECT CAST(user_id AS VARCHAR) AS key, event_id AS seq,
-                event_type AS value
-         FROM (SELECT user_id, event_id, event_type,
-                      row_number() OVER (PARTITION BY user_id
-                                         ORDER BY event_id DESC) AS rn
-               FROM events) t
-         WHERE rn = 1 ORDER BY key"""),
+      latestKvSql),
 
     // A23 — stream-static enrichment join: the streaming events feed
     // joined per-micro-batch to a BROADCAST static dimension
@@ -269,36 +276,9 @@ object StreamQueries {
     // session state, SQL window algebra), one fixpoint.
     "stream_sessions" -> QueryDef(
       (s, d) =>
-        runToMemory(
-          eventsStream(s, d)
-            .groupBy(session_window(col("ts"), "30 minutes"),
-              col("user_id"))
-            .agg(count(lit(1)).as("n_events"),
-              round(sum("value"), 4).as("session_value"))
-            .select(col("session_window.start").as("session_start"),
-              col("user_id"), col("n_events"), col("session_value")),
-          "complete")
+        runToMemory(TimeOps.sessionWindowStats(eventsStream(s, d)), "complete")
           .orderBy("user_id", "session_start"),
-      """WITH flagged AS (
-           SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
-                  CASE WHEN lag(CAST(ts AS TIMESTAMP)) OVER w IS NULL THEN 1
-                       WHEN epoch_us(CAST(ts AS TIMESTAMP))
-                            - epoch_us(lag(CAST(ts AS TIMESTAMP)) OVER w)
-                            > 1800 * 1000000 THEN 1
-                       ELSE 0 END AS new_session
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)),
-         sessions AS (
-           SELECT user_id, ts, value,
-                  sum(new_session) OVER
-                    (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS session_id
-           FROM flagged)
-         SELECT min(ts) AS session_start, user_id, count(*) AS n_events,
-                round(sum(value), 4) AS session_value
-         FROM sessions GROUP BY user_id, session_id
-         ORDER BY user_id, session_start"""),
+      TimeOps.sessionWindowSql),
 
     // A14 streaming twin — dead-letter ACCOUNTING as a streaming query:
     // the same md5-chosen 1-in-16 truncation corruption as the batch
@@ -310,38 +290,14 @@ object StreamQueries {
     // without needing two concurrent queries on one source.)
     "stream_dlq" -> QueryDef(
       (s, d) => {
-        import graft.ingest.{EventCodec, SyntheticOrders}
         // the corrupted wire feed is a memoized producer-side asset
         // (SyntheticOrders.dlqWireDir) — the timed query is the
         // streaming decode + DLQ accounting, not the client's payload
         // landing (round-9 fix for the 19.8× decade CPU constant)
-        val dir = SyntheticOrders.dlqWireDir(s, d)
-        val raw = s.readStream
-          .schema(s.read.parquet(dir).schema)
-          .option("maxFilesPerTrigger", Int.MaxValue.toString)
-          .parquet(dir)
-        val parsed = raw.withColumn("_evt", EventCodec.parseWire(col("data")))
-        val agg = parsed.agg(
-          count(when(col("_evt.order_id").isNotNull, 1)).as("n_good"),
-          count(when(col("_evt.order_id").isNull, 1)).as("n_bad"),
-          sum(substring(col("_evt.order_id"), 2, 18).cast("long"))
-            .as("good_key_sum"))
-        runToMemory(agg, "complete")
+        val raw = wireStream(s, SyntheticOrders.dlqWireDir(s, d))
+        runToMemory(IngestQueries.dlqAccounting(raw), "complete")
       },
-      """WITH o AS (
-           SELECT concat('o', o_orderkey) AS order_id, o_orderkey
-           FROM orders
-           WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)),
-         tagged AS (
-           SELECT o_orderkey,
-                  CAST(('0x' || substring(md5(order_id), 1, 2)) AS INT) % 16 = 0
-                    AS corrupt
-           FROM o)
-         SELECT count(CASE WHEN NOT corrupt THEN 1 END) AS n_good,
-                count(CASE WHEN corrupt THEN 1 END) AS n_bad,
-                CAST(sum(CASE WHEN NOT corrupt THEN o_orderkey END) AS BIGINT)
-                  AS good_key_sum
-         FROM tagged"""),
+      IngestQueries.dlqAccountingSql),
 
     // A10 gate twin — the reference's WHOLE streaming pipeline shape as
     // one gate-checked query: wire-encoded base64-JSON order records
@@ -358,13 +314,8 @@ object StreamQueries {
     // write distributed, exactly as it must be at 100 TB.
     "stream_fanout_products" -> QueryDef(
       (s, d) => {
-        val wireDir = graft.ingest.SyntheticOrders.wireDir(s, d)
-        val raw = s.readStream
-          .schema(s.read.parquet(wireDir).schema)
-          .option("maxFilesPerTrigger", Int.MaxValue.toString)
-          .parquet(wireDir)
-        val products =
-          graft.ingest.Fanout.productDetails(graft.ingest.EventCodec.decode(raw))
+        val raw = wireStream(s, SyntheticOrders.wireDir(s, d))
+        val products = Fanout.productDetails(EventCodec.decode(raw))
         val out = graft.Tables.freshScratchDir("fanout_sink")
         withStreamShuffle(s) {
           val q = products.writeStream
@@ -378,13 +329,5 @@ object StreamQueries {
         }
         s.read.parquet(s"$out/data").orderBy("order_id", "line_number")
       },
-      """SELECT concat('p', l_partkey) AS product_id,
-                concat('o', l_orderkey) AS order_id,
-                concat('part_', l_partkey) AS name,
-                CAST(l_quantity AS INT) AS quantity,
-                l_linenumber AS line_number,
-                l_returnflag AS color,
-                l_linestatus AS size
-         FROM lineitem
-         ORDER BY order_id, line_number"""))
+      IngestQueries.productDetailsSql))
 }

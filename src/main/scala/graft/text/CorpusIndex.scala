@@ -123,14 +123,22 @@ object CorpusIndex {
       chunkLen: Int,
       chunkSet: Option[org.apache.spark.sql.DataFrame] = None)
       : org.apache.spark.sql.DataFrame = {
+    val ch = chunkSet.getOrElse(chunkRows(docs, chunkLen))
+    val cnts = ch.groupBy("chunk").agg(count(lit(1)).as("cnt"))
+    rebuild(docs, chunkLen, ch.join(cnts, "chunk").filter(col("cnt") === 1))
+  }
+
+  /** Each doc rebuilt from its `kept` chunk rows (doc_id, pos, chunk)
+    * plus the un-chunked tail tokens: per-doc (n_chunks, n_kept,
+    * text_md5 of the rebuilt text). Shared by D83 and D40.
+    */
+  private def rebuild(docs: org.apache.spark.sql.DataFrame, chunkLen: Int,
+      kept: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val toks = docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
       .withColumn("nchunks",
         floor(size(col("t")) / chunkLen).cast("int"))
-    val ch = chunkSet.getOrElse(chunkRows(docs, chunkLen))
-    val cnts = ch.groupBy("chunk").agg(count(lit(1)).as("cnt"))
-    val keptAgg = ch.join(cnts, "chunk")
-      .filter(col("cnt") === 1)
+    val keptAgg = kept
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_kept"),
         array_join(
@@ -218,6 +226,32 @@ object CorpusIndex {
     */
   private[graft] val IntraDocChunkTokens = 2
 
+  /** Chunk-oracle prelude: `toks` (doc_id, token list `t`), then
+    * `meta` adding `nchunks`, the doc's count of whole `width`-token
+    * chunks.
+    */
+  private def chunkMetaSql(width: Int): String =
+    raw"""WITH toks AS (
+           SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+           FROM documents),
+         meta AS (SELECT doc_id, t,
+                         len(t) // $width AS nchunks FROM toks)"""
+
+  /** SQL twin of [[chunkRows]] at [[CorpusChunkTokens]], the body of a
+    * `ch(doc_id, pos, chunk)` CTE over `src`'s token lists `t`: the
+    * fixed unnest grid bounded by [[OracleMaxDocTokens]], filtered to
+    * the `nchunks` real chunks.
+    */
+  private def corpusChunkSql(src: String, nchunks: String): String =
+    raw"""SELECT doc_id, i AS pos,
+                  array_to_string(t[i*$CorpusChunkTokens+1 :
+                                    i*$CorpusChunkTokens+$CorpusChunkTokens],
+                                  ' ') AS chunk
+           FROM $src,
+                unnest(range(0, ${OracleMaxDocTokens / CorpusChunkTokens}))
+                  AS u(i)
+           WHERE i < $nchunks"""
+
   val defs: Map[String, QueryDef] = Map(
 
     // D31 — inverted-index build: term → (document frequency, term
@@ -272,14 +306,7 @@ object CorpusIndex {
            FROM documents),
          ch AS (
            -- fixed unnest grid; bound derived from OracleMaxDocTokens
-           SELECT doc_id, i AS pos,
-                  array_to_string(t[i*$CorpusChunkTokens+1 :
-                                    i*$CorpusChunkTokens+$CorpusChunkTokens],
-                                  ' ') AS chunk
-           FROM toks,
-                unnest(range(0, ${OracleMaxDocTokens / CorpusChunkTokens}))
-                  AS u(i)
-           WHERE i < len(t) // $CorpusChunkTokens),
+           ${corpusChunkSql("toks", "len(t) // " + CorpusChunkTokens)}),
          ranked AS (
            SELECT doc_id, pos, chunk,
                   row_number() OVER (PARTITION BY chunk
@@ -302,47 +329,14 @@ object CorpusIndex {
     "dedup_rewrite" -> QueryDef(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val toks = docs
-          .select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
-          .withColumn("nchunks",
-            floor(size(col("t")) / CorpusChunkTokens).cast("int"))
-        val keptAgg = chunkKept(docs, CorpusChunkTokens,
-            Some(sharedChunks(s, d)))
-          .filter(col("kept") === 1)
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_kept"),
-            array_join(
-              transform(
-                array_sort(collect_list(struct(col("pos"), col("chunk")))),
-                x => x.getField("chunk")), " ").as("kept_str"))
-        toks
-          .join(keptAgg, Seq("doc_id"), "left")
-          .withColumn("tail",
-            array_join(
-              expr(s"slice(t, nchunks*$CorpusChunkTokens+1, " +
-                s"size(t) - nchunks*$CorpusChunkTokens)"), " "))
-          .select(col("doc_id"),
-            col("nchunks").cast("long").as("n_chunks"),
-            coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-            md5(concat_ws(" ", col("kept_str"),
-              expr("nullif(tail, '')")).cast("binary")).as("text_md5"))
+        val kept = chunkKept(docs, CorpusChunkTokens, Some(sharedChunks(s, d)))
+        rebuild(docs, CorpusChunkTokens, kept.filter(col("kept") === 1))
           .orderBy("doc_id")
       },
-      raw"""WITH toks AS (
-           SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-           FROM documents),
-         meta AS (SELECT doc_id, t,
-                         len(t) // $CorpusChunkTokens AS nchunks FROM toks),
+      raw"""${chunkMetaSql(CorpusChunkTokens)},
          ch AS (
            -- fixed unnest grid; bound derived from OracleMaxDocTokens
-           SELECT doc_id, i AS pos,
-                  array_to_string(t[i*$CorpusChunkTokens+1 :
-                                    i*$CorpusChunkTokens+$CorpusChunkTokens],
-                                  ' ') AS chunk
-           FROM meta,
-                unnest(range(0, ${OracleMaxDocTokens / CorpusChunkTokens}))
-                  AS u(i)
-           WHERE i < nchunks),
+           ${corpusChunkSql("meta", "nchunks")}),
          ranked AS (
            SELECT doc_id, pos, chunk,
                   row_number() OVER (PARTITION BY chunk
@@ -374,11 +368,7 @@ object CorpusIndex {
     "intradoc_dedup" -> QueryDef(
       (s, d) => intradocStrip(Tables.documents(s, d), IntraDocChunkTokens)
         .orderBy("doc_id"),
-      raw"""WITH toks AS (
-           SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-           FROM documents),
-         meta AS (SELECT doc_id, t,
-                         len(t) // $IntraDocChunkTokens AS nchunks FROM toks),
+      raw"""${chunkMetaSql(IntraDocChunkTokens)},
          ch AS (
            -- LATERAL per-doc grid (round-11): the earlier fixed
            -- range(0, ${OracleMaxDocTokens / IntraDocChunkTokens}) grid
@@ -433,21 +423,10 @@ object CorpusIndex {
       (s, d) => boilerplateStrip(Tables.documents(s, d), CorpusChunkTokens,
         Some(sharedChunks(s, d)))
         .orderBy("doc_id"),
-      raw"""WITH toks AS (
-           SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-           FROM documents),
-         meta AS (SELECT doc_id, t,
-                         len(t) // $CorpusChunkTokens AS nchunks FROM toks),
+      raw"""${chunkMetaSql(CorpusChunkTokens)},
          ch AS (
            -- fixed unnest grid; bound derived from OracleMaxDocTokens
-           SELECT doc_id, i AS pos,
-                  array_to_string(t[i*$CorpusChunkTokens+1 :
-                                    i*$CorpusChunkTokens+$CorpusChunkTokens],
-                                  ' ') AS chunk
-           FROM meta,
-                unnest(range(0, ${OracleMaxDocTokens / CorpusChunkTokens}))
-                  AS u(i)
-           WHERE i < nchunks),
+           ${corpusChunkSql("meta", "nchunks")}),
          cnts AS (SELECT chunk, count(*) AS cnt FROM ch GROUP BY chunk),
          keptagg AS (
            SELECT doc_id, count(*) AS n_kept,
@@ -481,20 +460,9 @@ object CorpusIndex {
     "dup_span_coverage" -> QueryDef(
       (s, d) => spanCoverage(Tables.documents(s, d), CorpusChunkTokens,
         Some(sharedChunks(s, d))),
-      raw"""WITH toks AS (
-           SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-           FROM documents),
-         meta AS (SELECT doc_id, t,
-                         len(t) // $CorpusChunkTokens AS nchunks FROM toks),
+      raw"""${chunkMetaSql(CorpusChunkTokens)},
          ch AS (
-           SELECT doc_id, i AS pos,
-                  array_to_string(t[i*$CorpusChunkTokens+1 :
-                                    i*$CorpusChunkTokens+$CorpusChunkTokens],
-                                  ' ') AS chunk
-           FROM meta,
-                unnest(range(0, ${OracleMaxDocTokens / CorpusChunkTokens}))
-                  AS u(i)
-           WHERE i < nchunks),
+           ${corpusChunkSql("meta", "nchunks")}),
          cnts AS (SELECT chunk, count(*) AS cnt FROM ch GROUP BY chunk),
          per_doc AS (
            SELECT doc_id, count(*) AS nc,

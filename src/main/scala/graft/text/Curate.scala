@@ -54,6 +54,20 @@ object Curate {
       .orderBy(s"${attr}_a", s"${attr}_b")
   }
 
+  /** SQL twin of [[pairMatrix]] over the shared pair graph. */
+  private def pairMatrixSql(attr: String): String =
+    """WITH """ + Dedup.MurmurSql.pairGraphChainSql + s"""
+         SELECT least(da.$attr, db.$attr) AS ${attr}_a,
+                greatest(da.$attr, db.$attr) AS ${attr}_b,
+                count(*) AS n_pairs,
+                round(sum(CAST(round(jaccard * 10000, 0) AS BIGINT))
+                      / (10000.0 * count(*)), 4) AS mean_jaccard
+         FROM pairs p
+         JOIN documents da ON p.doc_a = da.doc_id
+         JOIN documents db ON p.doc_b = db.doc_id
+         GROUP BY 1, 2
+         ORDER BY ${attr}_a, ${attr}_b"""
+
   /** The curated keep-set (doc_id, n_tokens, quality): quality ∧
     * cluster-representative ∧ length. Shared by the manifest entry and
     * the training-layout composition below.
@@ -118,36 +132,25 @@ object Curate {
       .orderBy("source")
   }
 
+  /** The oracle prefix of [[keptSet]]'s two entries: `scored` (doc_id,
+    * n_tokens, quality) and `dropped`, the non-representative near-dup
+    * docs.
+    */
+  private val keptInputsSql: String =
+    """WITH RECURSIVE
+         toks AS (
+           SELECT doc_id, """ + TextAnalysis.qualityInputsSql + """,
+         scored AS (
+           SELECT doc_id, len(t) AS n_tokens,
+                  """ + TextAnalysis.qualitySql + """ AS quality
+           FROM toks),
+         """ + Dedup.MurmurSql.nonRepsSql("dropped")
+
   val defs: Map[String, QueryDef] = Map(
     "curate_keep" -> QueryDef(
       (s, d) => keptSet(Tables.documents(s, d),
         Some(Clusters.sharedLabels(s, d))).orderBy("doc_id"),
-      """WITH RECURSIVE
-         toks AS (
-           SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t,
-                  length(text) AS lc,
-                  length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS sym
-           FROM documents),
-         scored AS (
-           SELECT doc_id, len(t) AS n_tokens,
-                  CAST(((2 * (least(len(t), 100) * CAST(len(t) AS HUGEINT) * lc
-                              + 100 * CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS HUGEINT) * lc
-                              + 50 * CAST(len(t) AS HUGEINT) * (lc - sym)) * 10000
-                          + 250 * CAST(len(t) AS HUGEINT) * lc)
-                         // (500 * CAST(len(t) AS HUGEINT) * lc)) AS DOUBLE) / 10000.0 AS quality
-           FROM toks),
-         """ + Dedup.MurmurSql.pairGraphChainSql + """,
-         sym_e AS (
-           SELECT doc_a AS a, doc_b AS b FROM pairs
-           UNION SELECT doc_b, doc_a FROM pairs
-           UNION SELECT doc_a, doc_a FROM pairs
-           UNION SELECT doc_b, doc_b FROM pairs),
-         reach(a, b) AS (
-           SELECT a, b FROM sym_e
-           UNION
-           SELECT r.a, s.b FROM reach r JOIN sym_e s ON r.b = s.a),
-         comp AS (SELECT a AS doc_id, min(b) AS rep FROM reach GROUP BY a),
-         dropped AS (SELECT doc_id FROM comp WHERE doc_id <> rep)
+      keptInputsSql + """
          SELECT s.doc_id, CAST(s.n_tokens AS INT) AS n_tokens, s.quality
          FROM scored s
          WHERE s.doc_id NOT IN (SELECT doc_id FROM dropped)
@@ -174,18 +177,7 @@ object Curate {
           .orderBy("source")
       },
       """WITH RECURSIVE
-         """ + Dedup.MurmurSql.pairGraphChainSql + """,
-         sym_e AS (
-           SELECT doc_a AS a, doc_b AS b FROM pairs
-           UNION SELECT doc_b, doc_a FROM pairs
-           UNION SELECT doc_a, doc_a FROM pairs
-           UNION SELECT doc_b, doc_b FROM pairs),
-         reach(a, b) AS (
-           SELECT a, b FROM sym_e
-           UNION
-           SELECT r.a, s.b FROM reach r JOIN sym_e s ON r.b = s.a),
-         comp AS (SELECT a AS doc_id, min(b) AS rep FROM reach GROUP BY a),
-         dups AS (SELECT doc_id FROM comp WHERE doc_id <> rep)
+         """ + Dedup.MurmurSql.nonRepsSql("dups") + """
          SELECT d.source, count(*) AS n_docs,
                 CAST(count(dp.doc_id) AS BIGINT) AS n_dups,
                 round(CAST(count(dp.doc_id) AS DOUBLE) / count(*), 4)
@@ -213,17 +205,7 @@ object Curate {
     "dup_source_matrix" -> QueryDef(
       (s, d) => sourceMatrix(Tables.documents(s, d),
         Dedup.sharedPairs(s, d)),
-      """WITH """ + Dedup.MurmurSql.pairGraphChainSql + """
-         SELECT least(da.source, db.source) AS source_a,
-                greatest(da.source, db.source) AS source_b,
-                count(*) AS n_pairs,
-                round(sum(CAST(round(jaccard * 10000, 0) AS BIGINT))
-                      / (10000.0 * count(*)), 4) AS mean_jaccard
-         FROM pairs p
-         JOIN documents da ON p.doc_a = da.doc_id
-         JOIN documents db ON p.doc_b = db.doc_id
-         GROUP BY 1, 2
-         ORDER BY source_a, source_b"""),
+      pairMatrixSql("source")),
 
     // D100 — cross-LANGUAGE duplication matrix: the lang-attributed
     // twin of D87. Lexical 3-gram near-dups across two declared
@@ -238,17 +220,7 @@ object Curate {
     "dup_lang_matrix" -> QueryDef(
       (s, d) => pairMatrix(Tables.documents(s, d),
         Dedup.sharedPairs(s, d), "lang"),
-      """WITH """ + Dedup.MurmurSql.pairGraphChainSql + """
-         SELECT least(da.lang, db.lang) AS lang_a,
-                greatest(da.lang, db.lang) AS lang_b,
-                count(*) AS n_pairs,
-                round(sum(CAST(round(jaccard * 10000, 0) AS BIGINT))
-                      / (10000.0 * count(*)), 4) AS mean_jaccard
-         FROM pairs p
-         JOIN documents da ON p.doc_a = da.doc_id
-         JOIN documents db ON p.doc_b = db.doc_id
-         GROUP BY 1, 2
-         ORDER BY lang_a, lang_b"""),
+      pairMatrixSql("lang")),
 
     // D95 — dedup savings in BYTES per source: the chars sitting in
     // non-representative near-dup members — what dedup actually
@@ -276,18 +248,7 @@ object Curate {
           .orderBy("source")
       },
       """WITH RECURSIVE
-         """ + Dedup.MurmurSql.pairGraphChainSql + """,
-         sym_e AS (
-           SELECT doc_a AS a, doc_b AS b FROM pairs
-           UNION SELECT doc_b, doc_a FROM pairs
-           UNION SELECT doc_a, doc_a FROM pairs
-           UNION SELECT doc_b, doc_b FROM pairs),
-         reach(a, b) AS (
-           SELECT a, b FROM sym_e
-           UNION
-           SELECT r.a, s.b FROM reach r JOIN sym_e s ON r.b = s.a),
-         comp AS (SELECT a AS doc_id, min(b) AS rep FROM reach GROUP BY a),
-         dropped AS (SELECT doc_id FROM comp WHERE doc_id <> rep)
+         """ + Dedup.MurmurSql.nonRepsSql("dropped") + """
          SELECT d.source,
                 CAST(sum(d.n_chars) AS BIGINT) AS total_chars,
                 CAST(COALESCE(sum(CASE WHEN dp.doc_id IS NOT NULL
@@ -317,30 +278,12 @@ object Curate {
       """WITH RECURSIVE
          toks AS (
            SELECT doc_id, source,
-                  regexp_split_to_array(trim(text), '\s+') AS t,
-                  length(text) AS lc,
-                  length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS sym
-           FROM documents),
+                  """ + TextAnalysis.qualityInputsSql + """,
          scored AS (
            SELECT doc_id, source, len(t) AS n_tokens,
-                  CAST(((2 * (least(len(t), 100) * CAST(len(t) AS HUGEINT) * lc
-                              + 100 * CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS HUGEINT) * lc
-                              + 50 * CAST(len(t) AS HUGEINT) * (lc - sym)) * 10000
-                          + 250 * CAST(len(t) AS HUGEINT) * lc)
-                         // (500 * CAST(len(t) AS HUGEINT) * lc)) AS DOUBLE) / 10000.0 AS quality
+                  """ + TextAnalysis.qualitySql + """ AS quality
            FROM toks),
-         """ + Dedup.MurmurSql.pairGraphChainSql + """,
-         sym_e AS (
-           SELECT doc_a AS a, doc_b AS b FROM pairs
-           UNION SELECT doc_b, doc_a FROM pairs
-           UNION SELECT doc_a, doc_a FROM pairs
-           UNION SELECT doc_b, doc_b FROM pairs),
-         reach(a, b) AS (
-           SELECT a, b FROM sym_e
-           UNION
-           SELECT r.a, s.b FROM reach r JOIN sym_e s ON r.b = s.a),
-         comp AS (SELECT a AS doc_id, min(b) AS rep FROM reach GROUP BY a),
-         dropped AS (SELECT doc_id FROM comp WHERE doc_id <> rep)
+         """ + Dedup.MurmurSql.nonRepsSql("dropped") + """
          SELECT s.source, count(*) AS n_raw,
                 CAST(sum(CASE WHEN s.quality >= 0.5 THEN 1 ELSE 0 END)
                      AS BIGINT) AS n_quality,
@@ -384,32 +327,7 @@ object Curate {
             floor(col("prefix_tok") / 2048).cast("long").as("bin"))
           .orderBy("shuffle_rank")
       },
-      """WITH RECURSIVE
-         toks AS (
-           SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t,
-                  length(text) AS lc,
-                  length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS sym
-           FROM documents),
-         scored AS (
-           SELECT doc_id, len(t) AS n_tokens,
-                  CAST(((2 * (least(len(t), 100) * CAST(len(t) AS HUGEINT) * lc
-                              + 100 * CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS HUGEINT) * lc
-                              + 50 * CAST(len(t) AS HUGEINT) * (lc - sym)) * 10000
-                          + 250 * CAST(len(t) AS HUGEINT) * lc)
-                         // (500 * CAST(len(t) AS HUGEINT) * lc)) AS DOUBLE) / 10000.0 AS quality
-           FROM toks),
-         """ + Dedup.MurmurSql.pairGraphChainSql + """,
-         sym_e AS (
-           SELECT doc_a AS a, doc_b AS b FROM pairs
-           UNION SELECT doc_b, doc_a FROM pairs
-           UNION SELECT doc_a, doc_a FROM pairs
-           UNION SELECT doc_b, doc_b FROM pairs),
-         reach(a, b) AS (
-           SELECT a, b FROM sym_e
-           UNION
-           SELECT r.a, s.b FROM reach r JOIN sym_e s ON r.b = s.a),
-         comp AS (SELECT a AS doc_id, min(b) AS rep FROM reach GROUP BY a),
-         dropped AS (SELECT doc_id FROM comp WHERE doc_id <> rep),
+      keptInputsSql + """,
          kept AS (
            SELECT s.doc_id, s.n_tokens,
                   md5(CAST(s.doc_id AS VARCHAR) || ':train') AS h

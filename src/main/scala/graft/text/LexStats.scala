@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.dedup.Dedup.MurmurSql
 
 /** Lexical corpus statistics: bigram association strength (PMI-style
   * lift) and the Gopher-style per-document quality-rule battery — both
@@ -123,11 +124,7 @@ object LexStats {
       """WITH toks AS (
            SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
            FROM documents),
-         sh AS (
-           SELECT doc_id,
-                  list_distinct([array_to_string(t[i:i+2], ' ')
-                                 for i in range(1, len(t) - 1)]) AS shingles
-           FROM toks WHERE len(t) >= 3),
+         """ + MurmurSql.shingleSetsSql + """,
          ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
          df AS (SELECT s, count(*) AS df FROM ex GROUP BY s),
          per AS (

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.dedup.Dedup.MurmurSql
 
 /** Corpus retrieval and growth diagnostics: BM25 scoring (the lexical
   * ranking function behind quality-classifier seed selection and
@@ -146,11 +147,7 @@ object Retrieval {
           .orderBy("df")
       },
       raw"""WITH $duckToks,
-         sh AS (
-           SELECT doc_id,
-                  list_distinct([array_to_string(t[i:i+2], ' ')
-                                 for i in range(1, len(t) - 1)]) AS shingles
-           FROM toks WHERE len(t) >= 3),
+         ${MurmurSql.shingleSetsSql},
          ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
          dfs AS (SELECT s, count(*) AS df FROM ex GROUP BY s)
          SELECT df, count(*) AS n_shingles, df * count(*) AS n_occurrences

@@ -67,7 +67,8 @@ object TextAnalysis {
     * ⌊(2·NUM·10⁴ + D) / (2D)⌋, computed in decimal(38,0) via the
     * pmod-subtract exact division (the quotient is an integer, so the
     * decimal division's scale-6 rounding is a no-op), one final cast
-    * to double. The oracles compute the identical HUGEINT expression.
+    * to double. The oracles compute the identical HUGEINT expression,
+    * [[qualitySql]].
     */
   def qualityCol: Column = {
     val t = split(trim(col("text")), "\\s+")
@@ -85,6 +86,52 @@ object TextAnalysis {
     val q2 = den + den
     ((p - pmod(p, q2)) / q2).cast("double") / lit(10000.0)
   }
+
+  /** SQL twin of [[withLangId]]'s marker counts `c_en` … `c_fr`,
+    * closing a select list over `documents` and its CTE.
+    */
+  private val markerCountsSql: String =
+    """len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+                      x -> x IN ('the','a','of'))) AS c_en,
+                  len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+                      x -> x IN ('el','la','de'))) AS c_es,
+                  len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+                      x -> x IN ('der','die','und'))) AS c_de,
+                  len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+                      x -> x IN ('le','les','et'))) AS c_fr
+           FROM documents)"""
+
+  /** SQL twin of [[withLangId]]'s argmax over the marker counts of a
+    * CTE `c`: `predicted_lang`, closing the select list and its CTE.
+    */
+  private val predictedLangSql: String =
+    """CASE
+                    WHEN c_en + c_es + c_de + c_fr = 0 THEN 'unknown'
+                    WHEN c_en >= c_es AND c_en >= c_de AND c_en >= c_fr THEN 'en'
+                    WHEN c_es >= c_de AND c_es >= c_fr THEN 'es'
+                    WHEN c_de >= c_fr THEN 'de'
+                    ELSE 'fr' END AS predicted_lang
+           FROM c)"""
+
+  /** SQL twin of [[qualityCol]]'s inputs, closing a select list over
+    * `documents` and its CTE: the token list `t`, the char count `lc`
+    * and the symbol-char count `sym`.
+    */
+  val qualityInputsSql: String =
+    """regexp_split_to_array(trim(text), '\s+') AS t,
+                  length(text) AS lc,
+                  length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS sym
+           FROM documents)"""
+
+  /** SQL twin of [[qualityCol]] over [[qualityInputsSql]]'s columns:
+    * the same exact half-up division in HUGEINT, unaliased.
+    */
+  val qualitySql: String =
+    """CAST(((2 * (least(len(t), 100) * CAST(len(t) AS HUGEINT) * lc
+                              + 100 * CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS HUGEINT) * lc
+                              + 50 * CAST(len(t) AS HUGEINT) * (lc - sym)) * 10000
+                          + 250 * CAST(len(t) AS HUGEINT) * lc)
+                         // (500 * CAST(len(t) AS HUGEINT) * lc)) AS DOUBLE) / 10000.0"""
 
   val defs: Map[String, QueryDef] = Map(
 
@@ -174,17 +221,10 @@ object TextAnalysis {
           .orderBy("lang"),
       """WITH prep AS (
            SELECT lang,
-                  regexp_split_to_array(trim(text), '\s+') AS t,
-                  length(text) AS lc,
-                  length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS sym
-           FROM documents),
+                  """ + qualityInputsSql + """,
          scored AS (
            SELECT lang,
-                  CAST(((2 * (least(len(t), 100) * CAST(len(t) AS HUGEINT) * lc
-                              + 100 * CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS HUGEINT) * lc
-                              + 50 * CAST(len(t) AS HUGEINT) * (lc - sym)) * 10000
-                          + 250 * CAST(len(t) AS HUGEINT) * lc)
-                         // (500 * CAST(len(t) AS HUGEINT) * lc)) AS DOUBLE) / 10000.0 AS q
+                  """ + qualitySql + """ AS q
            FROM prep)
          SELECT lang, count(*) AS n_docs,
                 round(sum(CAST(round(q * 10000, 0) AS BIGINT))
@@ -258,21 +298,14 @@ object TextAnalysis {
       },
       """WITH q AS (
            SELECT doc_id,
-                  regexp_split_to_array(trim(text), '\s+') AS t,
-                  length(text) AS lc,
-                  length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS sym
-           FROM documents),
+                  """ + qualityInputsSql + """,
          m AS (
            SELECT doc_id,
                   len(t) AS n_tokens,
                   CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
                     / CAST(len(t) AS DOUBLE) AS stop_ratio,
                   CAST(sym AS DOUBLE) / CAST(lc AS DOUBLE) AS sym_ratio,
-                  CAST(((2 * (least(len(t), 100) * CAST(len(t) AS HUGEINT) * lc
-                              + 100 * CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS HUGEINT) * lc
-                              + 50 * CAST(len(t) AS HUGEINT) * (lc - sym)) * 10000
-                          + 250 * CAST(len(t) AS HUGEINT) * lc)
-                         // (500 * CAST(len(t) AS HUGEINT) * lc)) AS DOUBLE) / 10000.0 AS quality
+                  """ + qualitySql + """ AS quality
            FROM q)
          SELECT doc_id, n_tokens,
                 round(stop_ratio, 4) AS stopword_ratio,
@@ -290,23 +323,9 @@ object TextAnalysis {
           .orderBy("predicted_lang"),
       """WITH c AS (
            SELECT doc_id,
-                  len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                      x -> x IN ('the','a','of'))) AS c_en,
-                  len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                      x -> x IN ('el','la','de'))) AS c_es,
-                  len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                      x -> x IN ('der','die','und'))) AS c_de,
-                  len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                      x -> x IN ('le','les','et'))) AS c_fr
-           FROM documents),
+                  """ + markerCountsSql + """,
          p AS (
-           SELECT CASE
-                    WHEN c_en + c_es + c_de + c_fr = 0 THEN 'unknown'
-                    WHEN c_en >= c_es AND c_en >= c_de AND c_en >= c_fr THEN 'en'
-                    WHEN c_es >= c_de AND c_es >= c_fr THEN 'es'
-                    WHEN c_de >= c_fr THEN 'de'
-                    ELSE 'fr' END AS predicted_lang
-           FROM c)
+           SELECT """ + predictedLangSql + """
          SELECT predicted_lang, count(*) AS n_docs
          FROM p GROUP BY predicted_lang ORDER BY predicted_lang"""),
 
@@ -333,23 +352,9 @@ object TextAnalysis {
       },
       """WITH c AS (
            SELECT lang,
-                  len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                      x -> x IN ('the','a','of'))) AS c_en,
-                  len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                      x -> x IN ('el','la','de'))) AS c_es,
-                  len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                      x -> x IN ('der','die','und'))) AS c_de,
-                  len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                      x -> x IN ('le','les','et'))) AS c_fr
-           FROM documents),
+                  """ + markerCountsSql + """,
          p AS (
-           SELECT lang, CASE
-                    WHEN c_en + c_es + c_de + c_fr = 0 THEN 'unknown'
-                    WHEN c_en >= c_es AND c_en >= c_de AND c_en >= c_fr THEN 'en'
-                    WHEN c_es >= c_de AND c_es >= c_fr THEN 'es'
-                    WHEN c_de >= c_fr THEN 'de'
-                    ELSE 'fr' END AS predicted_lang
-           FROM c),
+           SELECT lang, """ + predictedLangSql + """,
          m AS (SELECT lang, predicted_lang, count(*) AS n_docs
                FROM p GROUP BY 1, 2),
          t AS (SELECT lang, sum(n_docs) AS n_lang FROM m GROUP BY 1)
@@ -410,17 +415,10 @@ object TextAnalysis {
       },
       """WITH q AS (
            SELECT doc_id, source,
-                  regexp_split_to_array(trim(text), '\s+') AS t,
-                  length(text) AS lc,
-                  length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS sym
-           FROM documents),
+                  """ + qualityInputsSql + """,
          m AS (
            SELECT doc_id, source,
-                  CAST(((2 * (least(len(t), 100) * CAST(len(t) AS HUGEINT) * lc
-                              + 100 * CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS HUGEINT) * lc
-                              + 50 * CAST(len(t) AS HUGEINT) * (lc - sym)) * 10000
-                          + 250 * CAST(len(t) AS HUGEINT) * lc)
-                         // (500 * CAST(len(t) AS HUGEINT) * lc)) AS DOUBLE) / 10000.0 AS quality
+                  """ + qualitySql + """ AS quality
            FROM q)
          SELECT doc_id, source, quality,
                 round(percent_rank() OVER (PARTITION BY source

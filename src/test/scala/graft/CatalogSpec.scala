@@ -47,6 +47,15 @@ class CatalogSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  // A shared SQL fragment read before its object has finished
+  // initializing is concatenated as the text `null`; no oracle holds
+  // that word otherwise (DuckDB's keyword is written NULL here).
+  test("no oracle holds a fragment read before its object initialized") {
+    val word = "\\bnull\\b".r
+    val hit = SparkEntry.oracleSql.filter { case (_, sql) => word.findFirstIn(sql).isDefined }
+    assert(hit.isEmpty, s"oracles with a null fragment: ${hit.keys.toSeq.sorted}")
+  }
+
   test("every query runs at sf0.001 and has sane columns") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, TestSpark.sf)
