@@ -56,7 +56,8 @@ object GraftExtensions {
       (es: Seq[Expression]) => SimHash64(es(0))),
     ("winnow_fp",
       info("winnow_fp", "winnow_fp(text) - winnowing fingerprint set"),
-      (es: Seq[Expression]) => WinnowFingerprint(es(0), 9, 4)))
+      (es: Seq[Expression]) => WinnowFingerprint(es(0),
+        HashOps.WinnowK, HashOps.WinnowWindow)))
 
   /** Idempotent post-hoc registration on an existing session. */
   def register(spark: SparkSession): Unit = {

@@ -30,11 +30,10 @@ object Materialize {
 
   private val ReliableDirKey = "spark.graft.reliableCheckpointDir"
 
-  /** Materialize `df` and truncate its lineage. `eager = false` defers
-    * the job to the first action (used by iterative loops that overlay
-    * several cuts into one pass).
+  /** Materialize `df` and truncate its lineage. The cut is eager: the
+    * materializing job runs here, not at the first action on the result.
     */
-  def cut(df: DataFrame, eager: Boolean = true): DataFrame = {
+  def cut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption(ReliableDirKey).filter(_.nonEmpty) match {
       case Some(dir) =>
@@ -49,8 +48,8 @@ object Materialize {
           .makeQualified(configured)
         if (!sc.getCheckpointDir.exists(d => new Path(d).getParent == qualified))
           sc.setCheckpointDir(dir)
-        df.checkpoint(eager)
-      case None => df.localCheckpoint(eager)
+        df.checkpoint()
+      case None => df.localCheckpoint()
     }
   }
 
@@ -75,6 +74,6 @@ object Materialize {
     * call sites read like the `localCheckpoint` they replace.
     */
   implicit class CutOps(private val df: DataFrame) extends AnyVal {
-    def cutLineage(eager: Boolean = true): DataFrame = cut(df, eager)
+    def cutLineage(): DataFrame = cut(df)
   }
 }

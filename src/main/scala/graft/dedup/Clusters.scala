@@ -16,10 +16,14 @@ import graft.Materialize.CutOps
   * plain hash-min would — and the same loop runs at 100 TB.
   *
   * The driver-side loop only checks a changed-count per round (a scalar
-  * aggregate) — no data is collected. Non-convergence within `maxIter`
-  * throws rather than silently emitting wrong representatives.
+  * aggregate) — no data is collected. Non-convergence within
+  * `MaxRounds` throws rather than silently emitting wrong
+  * representatives.
   */
 object Clusters {
+
+  /** Round cap: shortcutting covers component diameters up to 2^rounds. */
+  final val MaxRounds = 30
 
   /** The distinct edges of `edges(src, dst)` in both directions, cut
     * ONCE: every round of the loops below joins against them, and
@@ -35,13 +39,13 @@ object Clusters {
   /** edges(src,dst) → (doc_id, cluster_rep = min id reachable). Only
     * vertices that appear in an edge are returned.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame = {
+  def connectedComponents(edges: DataFrame): DataFrame = {
     val sym = symmetricEdges(edges)
     // seed labels with min(id, min neighbor) — the first propagation
-    // round folded into initialization. The cut is EAGER (cutLineage()
-    // defaults to eager = true): seeding costs one materializing job,
-    // and the first convergence probe below is a second job over the
-    // cut blocks.
+    // round folded into initialization. The cut is eager (every
+    // cutLineage() is): seeding costs one materializing job, and the
+    // first convergence probe below is a second job over the cut
+    // blocks.
     var labels = sym.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("_mn"))
       .select(col("id"), least(col("id"), col("_mn")).as("label"))
@@ -58,7 +62,7 @@ object Clusters {
     var prevSum = labelSum(labels)
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < MaxRounds && !converged) {
       // neighbor labels flow along edges; keep the minimum seen
       val viaEdges = sym
         .join(labels.withColumnRenamed("id", "src"), "src")
@@ -68,10 +72,10 @@ object Clusters {
       val viaPtr = labels.as("l")
         .join(labels.as("m"), col("l.label") === col("m.id"))
         .select(col("l.id").as("id"), col("m.label").as("label"))
-      // EAGER cut (cutLineage() defaults to eager = true): `next` is
-      // materialized by its own job, then the convergence probe runs a
-      // second job over the cut blocks, and the following round's
-      // joins read them too: two jobs per round.
+      // eager cut, like every cutLineage(): `next` is materialized by
+      // its own job, then the convergence probe runs a second job over
+      // the cut blocks, and the following round's joins read them too:
+      // two jobs per round.
       val next = labels.select(col("id"), col("label"))
         .union(viaEdges)
         .union(viaPtr)
@@ -86,8 +90,8 @@ object Clusters {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — " +
-          "component diameter exceeds 2^rounds; raise maxIter")
+        s"connectedComponents did not converge in $MaxRounds rounds — " +
+          s"a component's diameter exceeds 2^$MaxRounds")
     labels.select(col("id").as("doc_id"), col("label").as("cluster_rep"))
   }
 

@@ -452,7 +452,7 @@ object Dedup {
     * fits the budget, logged loudly. Integer-exact and replicated by
     * the oracle (cwmass/cwst CTEs), so the two engines always pick the
     * same stride and the entry stays hash-provable on any corpus
-    * shape. Strides above windowTokens sample the doc with gaps —
+    * shape. Strides above WindowTokens sample the doc with gaps —
     * degraded contiguous-containment recall, the documented trade for
     * bounded disk; the exact sub-budget path is always lossless. The
     * oracle SQL interpolates this same constant, so both engines pick
@@ -477,13 +477,13 @@ object Dedup {
     * the estimate fits, and the oracle replicates the identical mass
     * scalar + CASE ladder (cwmass/cwst).
     */
-  private[graft] def windowStrideOf(docs: DataFrame, windowTokens: Int,
-      windowStride: Int, windowMassBudget: Long): Int = {
+  private[graft] def windowStrideOf(docs: DataFrame, windowStride: Int,
+      windowMassBudget: Long): Int = {
     val mrow = docs
       .select(size(split(trim(col("text")), "\\s+")).as("l"))
       .filter(col("l") >= 3)
       .agg(coalesce(sum(
-        (greatest(col("l") - lit(windowTokens), lit(0))
+        (greatest(col("l") - lit(WindowTokens), lit(0))
           / lit(windowStride)).cast("long") + 1L), lit(0L)).as("m"),
         count(lit(1)).as("d"))
       .head()
@@ -495,19 +495,31 @@ object Dedup {
         s"${mrow.getLong(1)} docs exceeds budget $windowMassBudget " +
         s"at stride $windowStride — DEGRADING stride to $strideSel " +
         s"(deep-containment recall is reduced" +
-        (if (strideSel > windowTokens) "; stride exceeds the window " +
+        (if (strideSel > WindowTokens) "; stride exceeds the window " +
           "width, coverage is now gappy-sampled" else "") + ")")
     strideSel
   }
 
+  /** containmentPairsLsh's band geometry: `ContainBands` 2-row bands
+    * of the doc signature; the window grid cuts `WindowTokens`-token
+    * windows, bands their signatures into `WindowBands` bands and caps
+    * window buckets at `WindowBandCap` docs (see the notes in the body).
+    * 32 window bands, not the doc-level 64: per-window detection at the
+    * worst-case alignment J ~ 0.33 is still 0.975 (1-(1-J^2)^32) and
+    * most snippets span >= 2 windows, while the banded-table volume
+    * halves - long sparse docs (zipf10: ~14 windows/doc x 510k docs)
+    * spilled the 64-band table past the bench host's disk.
+    */
+  final val ContainBands = 64
+  final val WindowTokens = 32
+  final val WindowBands = 32
+  final val WindowBandCap = 64L
+
   def containmentPairsLsh(docs: DataFrame, threshold: Double,
-      numHashes: Int = 128, bands: Int = 64,
-      bandCap: Long = 256L,
       filteredPostings: Option[DataFrame] = None,
-      windowTokens: Int = 32, windowStride: Int = 16,
-      windowBandCap: Long = 64L, windowBands: Int = 32,
+      windowStride: Int = 16,
       windowMassBudget: Long = defaultWindowMassBudget): DataFrame = {
-    val rows = numHashes / bands
+    val rows = MinhashHashes / ContainBands
     // Verification reads HOT-FILTERED shingle sets so both branches
     // agree on what "common" counts (round-8 advice item): the exact
     // branch counts common over hot-filtered postings, so verifying
@@ -532,12 +544,12 @@ object Dedup {
     // MinHashSignature scaladoc) — measured 85/14701 missed pairs at
     // sf1 before the wrap, 0 expected after
     val sig = sh.select(col("doc_id"),
-      HashOps.minhashW32(col("shingles"), numHashes).as("sig"))
+      HashOps.minhashW32(col("shingles"), MinhashHashes).as("sig"))
     // packed band key, same reasoning as minhashPairs (see packedKey);
     // the 2-row bands pack LOSSLESSLY into k1 (wrap32 values < 2³²),
     // k2 pinned to 0
     val banded = sig.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
+      posexplode(transform(sequence(lit(0), lit(ContainBands - 1)), b =>
         packedKey(element_at(col("sig"), b * lit(rows) + 1),
           element_at(col("sig"), b * lit(rows) + 2)))))
       .withColumnRenamed("pos", "band")
@@ -549,7 +561,7 @@ object Dedup {
     // sf1's max bucket is 105, so every committed proof is unchanged.
     // Same one-shuffle per-bucket expansion as minhashPairs (see the
     // memory note there — the count+join-back formulation OOM'd at sf10).
-    val candDoc = bandedCappedPairs(banded, bandCap)
+    val candDoc = bandedCappedPairs(banded, BandCap)
     // WINDOW-GRID deep-asymmetry candidates (round-10; RECALL_SF10
     // measured the doc-level signatures at 0.38 recall for size ratio
     // R ≥ 7 — minhash over the LARGE side's full set is dominated by
@@ -573,8 +585,8 @@ object Dedup {
     // from both schemes are unioned before the one exact verify;
     // bucket membership is per DISTINCT doc (several windows of one
     // doc in a bucket count once, and intra-doc collisions can't
-    // produce a pair). windowTokens ≤ 0 disables the pass; the DuckDB
-    // oracle replicates the default geometry (32/16) exactly.
+    // produce a pair). The DuckDB oracle replicates the geometry
+    // (32-token windows at the default stride 16) exactly.
     // Window buckets cap at 64 (not the doc-level 256) and window
     // candidates keep only SIZE-SKEWED pairs (max(n) >= 2*min(n)):
     // same-scale window collisions are boilerplate noise the doc-level
@@ -582,31 +594,17 @@ object Dedup {
     // without the two trims the tripled verify volume spilled the sf10
     // probe past 55 GB of disk. Both trims are replicated exactly in
     // the oracle (cwcap HAVING <= 64; the cshf size filter on wcand).
-    val candWin: DataFrame =
-      if (windowTokens <= 0) candDoc.limit(0)
-      else {
-        // 32 window bands, not the doc-level 64: per-window detection
-        // at the worst-case alignment J ~ 0.33 is still 0.975
-        // (1-(1-J^2)^32) and most snippets span >= 2 windows, while
-        // the banded-table volume halves - long sparse docs (zipf10:
-        // ~14 windows/doc x 510k docs) spilled the 64-band table past
-        // the sandbox disk in the bench
-        val strideSel = windowStrideOf(docs, windowTokens, windowStride,
-          windowMassBudget)
-        val raw = bandedCappedPairs(
-          windowBanded(docs, numHashes, windowBands, windowTokens,
-            strideSel),
-          windowBandCap)
-        val sz = shf.select(col("doc_id"), col("n"))
-        raw
-          .join(sz.select(col("doc_id").as("doc_a"), col("n").as("wna")),
-            "doc_a")
-          .join(sz.select(col("doc_id").as("doc_b"), col("n").as("wnb")),
-            "doc_b")
-          .filter(greatest(col("wna"), col("wnb"))
-            >= least(col("wna"), col("wnb")) * lit(2))
-          .select("doc_a", "doc_b")
-      }
+    val strideSel = windowStrideOf(docs, windowStride, windowMassBudget)
+    val sz = shf.select(col("doc_id"), col("n"))
+    val candWin = bandedCappedPairs(windowBanded(docs, strideSel),
+        WindowBandCap)
+      .join(sz.select(col("doc_id").as("doc_a"), col("n").as("wna")),
+        "doc_a")
+      .join(sz.select(col("doc_id").as("doc_b"), col("n").as("wnb")),
+        "doc_b")
+      .filter(greatest(col("wna"), col("wnb"))
+        >= least(col("wna"), col("wnb")) * lit(2))
+      .select("doc_a", "doc_b")
     val cand = candDoc.union(candWin).distinct()
       .select(col("doc_a").as("x"), col("doc_b").as("y"))
     val dir = cand.select(col("x").as("doc_a"), col("y").as("doc_b"))
@@ -643,17 +641,25 @@ object Dedup {
     jaccardVerified(idx, probe, col("a.s") === col("b.s"), threshold)
   }
 
+  /** Width of every minhash signature in this module (minhashPairs,
+    * bandProfile and both containment signatures), the 4-row band
+    * count of minhashPairs and bandProfile, and the absolute
+    * band-bucket cap (see minhashPairs' body).
+    */
+  final val MinhashHashes = 128
+  final val MinhashBands = 32
+  final val BandCap = 256L
+
   /** D3 — MinHash+LSH candidate pairs, then exact-Jaccard verification.
     * 128-hash signatures, 32 bands × 4 rows: P(candidate) ≈
     * 1-(1-j⁴)³² — ~0.87 at j=0.5, ~1.0 at j≥0.8. Verification joins
     * the shingle arrays back only for candidates.
     */
   def minhashPairs(docs: DataFrame, threshold: Double,
-      numHashes: Int = 128, bands: Int = 32,
-      bandCap: Long = 256L): DataFrame = {
-    val rows = numHashes / bands
+      bandCap: Long = BandCap): DataFrame = {
+    val rows = MinhashHashes / MinhashBands
     val sh = withShingles(docs).select(col("doc_id"), col("shingles"))
-    val sig = sh.withColumn("sig", HashOps.minhash(col("shingles"), numHashes))
+    val sig = sh.withColumn("sig", HashOps.minhash(col("shingles"), MinhashHashes))
     // band key = the two PACKED low-32 pair columns (see packedKey),
     // not Spark's hash(slice): the oracle computes the identical
     // integer expression, so a key collision merges the same buckets
@@ -661,7 +667,7 @@ object Dedup {
     // (round-8 advice item) — while the keys stay primitive longs on
     // the aggregation fast path
     val banded = sig.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
+      posexplode(transform(sequence(lit(0), lit(MinhashBands - 1)), b =>
         struct(
           packedKey(element_at(col("sig"), b * lit(rows) + 1),
             element_at(col("sig"), b * lit(rows) + 2)).as("k1"),
@@ -704,9 +710,8 @@ object Dedup {
     * predicts the join's work exactly: `cand_pairs` is the per-band
     * candidate yield before dedup across bands.
     */
-  def bandProfile(docs: DataFrame,
-      numHashes: Int = 128, bands: Int = 32): DataFrame = {
-    val rows = numHashes / bands
+  def bandProfile(docs: DataFrame): DataFrame = {
+    val rows = MinhashHashes / MinhashBands
     // drop docs with no shingles (<3 tokens): their empty sets all
     // minhash to the same all-MaxValue sentinel signature, which would
     // collide them in EVERY band as fake bucket mass — and the oracle's
@@ -714,9 +719,9 @@ object Dedup {
     val sig = withShingles(docs)
       .filter(size(col("shingles")) > 0)
       .select(col("doc_id"),
-        HashOps.minhash(col("shingles"), numHashes).as("sig"))
+        HashOps.minhash(col("shingles"), MinhashHashes).as("sig"))
     val banded = sig.select(
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
+      posexplode(transform(sequence(lit(0), lit(MinhashBands - 1)),
         b => slice(col("sig"), b * lit(rows) + 1, lit(rows)))))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bkey")
@@ -732,32 +737,31 @@ object Dedup {
 
   /** The WINDOW-GRID banded table behind containmentPairsLsh's
     * deep-asymmetry candidates: every doc's token stream cut into
-    * `windowTokens`-token windows at `windowStride`, each window
-    * shingled and minhashed (wrap32) like a document, banded 2-row,
-    * and reduced to DISTINCT (doc, band, key) rows — several windows
-    * of one doc in a bucket count once.
+    * `WindowTokens`-token windows at `windowStride`, each window
+    * shingled and minhashed (wrap32) like a document, banded 2-row
+    * into `WindowBands` bands, and reduced to DISTINCT (doc, band,
+    * key) rows — several windows of one doc in a bucket count once.
     */
-  private def windowBanded(docs: DataFrame, numHashes: Int,
-      bands: Int, windowTokens: Int, windowStride: Int): DataFrame = {
-    val rows = numHashes / bands
+  private def windowBanded(docs: DataFrame, windowStride: Int): DataFrame = {
+    val rows = MinhashHashes / WindowBands
     val tok = docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
       .filter(size(col("t")) >= 3)
-    val nWinTop = (greatest(size(col("t")) - lit(windowTokens), lit(0))
+    val nWinTop = (greatest(size(col("t")) - lit(WindowTokens), lit(0))
       / lit(windowStride)).cast("int")
     val wins = tok.select(col("doc_id"),
         posexplode(transform(sequence(lit(0), nWinTop), i =>
           concat_ws(" ",
             slice(col("t"), i * lit(windowStride) + 1,
-              lit(windowTokens))))))
+              lit(WindowTokens))))))
       .select(col("doc_id"), col("col").as("wtext"))
     val wsh = withShingles(wins.withColumnRenamed("wtext", "text"))
       .filter(size(col("shingles")) > 0)
       .select(col("doc_id"), col("shingles"))
     val wsig = wsh.select(col("doc_id"),
-      HashOps.minhashW32(col("shingles"), numHashes).as("sig"))
+      HashOps.minhashW32(col("shingles"), MinhashHashes).as("sig"))
     wsig.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
+        posexplode(transform(sequence(lit(0), lit(WindowBands - 1)), b =>
           packedKey(element_at(col("sig"), b * lit(rows) + 1),
             element_at(col("sig"), b * lit(rows) + 2)))))
       .withColumnRenamed("pos", "band")
@@ -766,11 +770,17 @@ object Dedup {
       .distinct()
   }
 
+  /** Hamming radius of [[simhashPairs]]; 4 bands of 16 bits guarantee
+    * that every pair within it shares an intact band.
+    */
+  final val SimhashMaxHamming = 3
+
   /** D4 — SimHash near-dup: 64-bit signature, 4 bands of 16 bits for
     * candidate generation (any pair within hamming distance 3 shares at
-    * least one intact band), verified with bit_count(xor) ≤ maxHamming.
+    * least one intact band), verified with bit_count(xor) ≤
+    * `SimhashMaxHamming`.
     */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
+  def simhashPairs(docs: DataFrame): DataFrame = {
     val sig = docs
       .withColumn("toks", split(trim(col("text")), "\\s+"))
       .select(col("doc_id"), HashOps.simhash(col("toks")).as("sig"))
@@ -788,7 +798,7 @@ object Dedup {
         col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
       .distinct()
       .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= SimhashMaxHamming)
       .select("doc_a", "doc_b", "hamming")
   }
 
@@ -861,9 +871,11 @@ object Dedup {
     */
   private val lshLadder: Seq[(Int, Int)] = Seq((4, 8), (2, 16), (1, 32))
 
+  /** Expected-candidate budget the ladder's rung must fit. */
+  final val LshBucketBudget = 20000000L
+
   def embeddingPairs(emb: DataFrame, threshold: Double,
-      pairBudget: Long = 100000000L,
-      bucketBudget: Long = 20000000L): DataFrame = {
+      pairBudget: Long = 100000000L): DataFrame = {
     val e = emb.select(col("vec_id"), col("label"), col("embedding"))
     val spent = e.groupBy("label").agg(count(lit(1)).as("n"))
       .agg(coalesce(sum(col("n") * (col("n") - lit(1L))), lit(0L)).as("v"))
@@ -873,7 +885,7 @@ object Dedup {
       val (tables, bits) = lshLadder
         .find { case (t, b) =>
           // tables·spent/2^bits ≤ budget, in overflow-safe integers
-          spent / (1L << b) <= bucketBudget / t
+          spent / (1L << b) <= LshBucketBudget / t
         }
         .getOrElse(lshLadder.last)
       embeddingPairsLsh(e, threshold, tables, bits)
@@ -898,12 +910,12 @@ object Dedup {
     * larger block sizes (documented trade, same dial as knn_lsh).
     */
   def embeddingPairsLsh(e: DataFrame, threshold: Double,
-      tables: Int = 4, bitsPerTable: Int = 8): DataFrame = {
+      tables: Int, bitsPerTable: Int): DataFrame = {
     // sig cast to long BEFORE shift/mask: at the 1×32 ladder rung the
     // mask (2³²−1) does not fit an Int, and the long arithmetic is
     // what the oracle's BIGINT expressions replicate bit-for-bit
     val sig = e.select(col("vec_id"), col("label"),
-      HashOps.hyperplaneSig(col("embedding"), 32).cast("long").as("sig"))
+      HashOps.hyperplaneSig(col("embedding")).cast("long").as("sig"))
     val bandCols = array((0 until tables).map(t =>
       shiftright(col("sig"), t * bitsPerTable)
         .bitwiseAND(lit((1L << bitsPerTable) - 1L))): _*)
@@ -1092,11 +1104,11 @@ object Dedup {
           ${fmixStages("")},
           uls AS (SELECT doc_id, list([ua, ub | 1]) AS ul FROM hh GROUP BY doc_id),
           sig AS (SELECT doc_id,
-            list_transform(range(0, 128), i ->
+            list_transform(range(0, $MinhashHashes), i ->
               list_min(list_transform(ul, p -> p[1] + i*p[2]))) AS s
             FROM uls),
           bands AS (SELECT doc_id, bnd, s[4*bnd+1:4*bnd+4] AS bkey
-            FROM sig, unnest(range(0, 32)) AS u(bnd))"""
+            FROM sig, unnest(range(0, $MinhashBands)) AS u(bnd))"""
 
     val minhashPairsSql: String =
       s"""$minhashSigBandsSql,
@@ -1107,7 +1119,7 @@ object Dedup {
                 + bkey[4] % 4294967296 AS k2
             FROM bands),
           bcap AS (SELECT bnd, k1, k2 FROM bpk
-                   GROUP BY bnd, k1, k2 HAVING count(*) <= 256),
+                   GROUP BY bnd, k1, k2 HAVING count(*) <= $BandCap),
           bandsk AS (SELECT b.doc_id, b.bnd, b.k1, b.k2
                      FROM bpk b JOIN bcap USING (bnd, k1, k2)),
           cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1253,7 +1265,7 @@ object Dedup {
           pluls AS (SELECT doc_id, list([ua, ub | 1]) AS ul FROM lphh
                     GROUP BY doc_id),
           plsig AS (SELECT doc_id,
-            list_transform(range(0, 128), i ->
+            list_transform(range(0, $MinhashHashes), i ->
               list_min(list_transform(ul, p -> p[1] + i*p[2]))) AS s
             FROM pluls),
           plbands AS (SELECT doc_id, bnd,
@@ -1261,9 +1273,9 @@ object Dedup {
                 + s[4*bnd+2] % 4294967296 AS k1,
               (s[4*bnd+3] % 4294967296 - 2147483648) * 4294967296
                 + s[4*bnd+4] % 4294967296 AS k2
-            FROM plsig, unnest(range(0, 32)) AS u(bnd)),
+            FROM plsig, unnest(range(0, $MinhashBands)) AS u(bnd)),
           plbcap AS (SELECT bnd, k1, k2 FROM plbands
-                     GROUP BY bnd, k1, k2 HAVING count(*) <= 256),
+                     GROUP BY bnd, k1, k2 HAVING count(*) <= $BandCap),
           plbk AS (SELECT b.doc_id, b.bnd, b.k1, b.k2
                    FROM plbands b JOIN plbcap USING (bnd, k1, k2)),
           plcand AS MATERIALIZED (
@@ -1343,16 +1355,16 @@ object Dedup {
             SELECT doc_a, doc_b, round(common * 1.0 / na, 4) AS containment
             FROM ecand WHERE common * 1.0 / na >= 0.8),
           sigw AS (SELECT doc_id,
-            list_transform(range(0, 128), i ->
+            list_transform(range(0, $MinhashHashes), i ->
               list_min(list_transform(ul, p -> (p[1] + i*p[2]) % 4294967296)))
               AS s
             FROM uls),
           bands2 AS (SELECT doc_id, bnd,
               (s[2*bnd+1] % 4294967296 - 2147483648) * 4294967296
                 + s[2*bnd+2] % 4294967296 AS k1
-            FROM sigw, unnest(range(0, 64)) AS u(bnd)),
+            FROM sigw, unnest(range(0, $ContainBands)) AS u(bnd)),
           bcap2 AS (SELECT bnd, k1 FROM bands2
-                    GROUP BY bnd, k1 HAVING count(*) <= 256),
+                    GROUP BY bnd, k1 HAVING count(*) <= $BandCap),
           bands2k AS (SELECT b.doc_id, b.bnd, b.k1
                       FROM bands2 b JOIN bcap2 USING (bnd, k1)),
           lcand AS (SELECT DISTINCT a.doc_id AS x, b.doc_id AS y
@@ -1360,7 +1372,7 @@ object Dedup {
               ON a.bnd = b.bnd AND a.k1 = b.k1 AND a.doc_id < b.doc_id
             WHERE (SELECT v FROM cspent) > 20000000),
           cwmass AS (
-            SELECT coalesce(sum(greatest(len(t)-32, 0)//16 + 1), 0) AS m,
+            SELECT coalesce(sum(greatest(len(t)-$WindowTokens, 0)//16 + 1), 0) AS m,
                    count(*) AS d
             FROM toks WHERE len(t) >= 3),
           cwst AS (SELECT CASE
@@ -1370,9 +1382,9 @@ object Dedup {
               WHEN (m-d)*16 <= ($windowMassBudgetSql-d)*128 THEN 128
               ELSE 256 END AS st FROM cwmass),
           cwin AS (SELECT doc_id, i AS w,
-              t[i*(SELECT st FROM cwst)+1 : i*(SELECT st FROM cwst)+32] AS wt
+              t[i*(SELECT st FROM cwst)+1 : i*(SELECT st FROM cwst)+$WindowTokens] AS wt
             FROM toks, unnest(range(0,
-              greatest((len(t)-32)//(SELECT st FROM cwst), 0) + 1)) u(i)
+              greatest((len(t)-$WindowTokens)//(SELECT st FROM cwst), 0) + 1)) u(i)
             WHERE len(t) >= 3 AND (SELECT v FROM cspent) > 20000000),
           cwsh AS (SELECT doc_id, w,
               list_distinct([array_to_string(wt[j:j+2], ' ')
@@ -1384,16 +1396,16 @@ object Dedup {
           cwuls AS (SELECT doc_id, w, list([ua, ub | 1]) AS ul FROM cwhh
                     GROUP BY doc_id, w),
           cwsig AS (SELECT doc_id, w,
-            list_transform(range(0, 128), i ->
+            list_transform(range(0, $MinhashHashes), i ->
               list_min(list_transform(ul, p -> (p[1] + i*p[2]) % 4294967296)))
               AS s
             FROM cwuls),
           cwbd AS (SELECT DISTINCT doc_id, bnd,
               (s[4*bnd+1] % 4294967296 - 2147483648) * 4294967296
                 + s[4*bnd+2] % 4294967296 AS k1
-            FROM cwsig, unnest(range(0, 32)) AS u(bnd)),
+            FROM cwsig, unnest(range(0, $WindowBands)) AS u(bnd)),
           cwcap AS (SELECT bnd, k1 FROM cwbd
-                    GROUP BY bnd, k1 HAVING count(*) <= 64),
+                    GROUP BY bnd, k1 HAVING count(*) <= $WindowBandCap),
           cwk AS (SELECT b.doc_id, b.bnd, b.k1
                   FROM cwbd b JOIN cwcap USING (bnd, k1)),
           wcand0 AS (SELECT DISTINCT a.doc_id AS x, b.doc_id AS y
@@ -1440,9 +1452,10 @@ object Dedup {
       * CTE instead of the raw embeddings table.
       */
     private def hyperplaneSigsSqlFor(tbl: String): String = {
+      import HashOps.{HyperplaneBits, HyperplaneDims}
       val mixChain = mixh(mixh(mixh("1540483477", "2516344202"), "p"), "i")
       s"""pi AS (SELECT p, i
-            FROM unnest(range(0,32)) t(p), unnest(range(0,64)) u(i)),
+            FROM unnest(range(0,$HyperplaneBits)) t(p), unnest(range(0,$HyperplaneDims)) u(i)),
           m0 AS (SELECT p, i, $mixChain AS h FROM pi),
           a0 AS (SELECT p, i, xor(xor(h, 2), xor(h, 2)//65536) AS a1 FROM m0),
           a1s AS (SELECT p, i, ${mulMod("a1", "2246822507")} AS a2 FROM a0),
@@ -1505,7 +1518,7 @@ object Dedup {
             SELECT tables, bits
             FROM (VALUES (4, 8, 1), (2, 16, 2), (1, 32, 3)) s(tables, bits, rung)
             WHERE (SELECT v FROM spent) // (CAST(1 AS BIGINT) << bits)
-                    <= 20000000 // tables
+                    <= $LshBucketBudget // tables
             ORDER BY rung LIMIT 1),
           tsel2 AS (SELECT coalesce((SELECT tables FROM tsel), 1) AS tables,
                            coalesce((SELECT bits FROM tsel), 32) AS bits),
@@ -1537,7 +1550,7 @@ object Dedup {
         s"(sqrt(${dot("qe.embedding", "qe.embedding")}) * sqrt(${dot("ce.embedding", "ce.embedding")})))"
       s"""WITH $hyperplaneSigsSql,
           buckets AS (SELECT vec_id, t, (sig >> (t*4)) & 15 AS bucket
-            FROM sigs, unnest(range(0, 8)) u(t)),
+            FROM sigs, unnest(range(0, ${graft.similarity.Knn.LshTables})) u(t)),
           cand AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
             FROM buckets q JOIN buckets c ON q.t = c.t AND q.bucket = c.bucket
             WHERE q.vec_id < 10 AND q.vec_id != c.vec_id),
@@ -1563,7 +1576,7 @@ object Dedup {
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                  CAST(bit_count(xor(a.s, b.s)) AS INT) AS hamming
           FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.s, b.s)) <= 3
+          WHERE bit_count(xor(a.s, b.s)) <= $SimhashMaxHamming
           ORDER BY doc_a, doc_b"""
   }
 

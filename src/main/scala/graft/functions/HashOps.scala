@@ -51,11 +51,24 @@ object HashOps {
   def simhash(tokens: Column): Column =
     column(SimHash64(expression(tokens)))
 
-  def fingerprint(text: Column, k: Int = 9, window: Int = 4): Column =
-    column(WinnowFingerprint(expression(text), k, window))
+  /** Winnowing geometry: `WinnowK`-character grams, the minimum of
+    * every `WinnowWindow` consecutive gram hashes kept.
+    */
+  final val WinnowK = 9
+  final val WinnowWindow = 4
 
-  def hyperplaneSig(vec: Column, bits: Int): Column =
-    column(HyperplaneSignature(expression(vec), bits))
+  def fingerprint(text: Column): Column =
+    column(WinnowFingerprint(expression(text), WinnowK, WinnowWindow))
+
+  /** Hyperplane signature geometry: `HyperplaneBits` planes (one sign
+    * bit each, an int signature) over the first `HyperplaneDims`
+    * vector components.
+    */
+  final val HyperplaneBits = 32
+  final val HyperplaneDims = 64
+
+  def hyperplaneSig(vec: Column): Column =
+    column(HyperplaneSignature(expression(vec)))
 
   def wordShingles(text: Column, k: Int): Column =
     column(WordShingles(expression(text), k))
@@ -192,24 +205,24 @@ case class WinnowFingerprint(child: Expression, k: Int, w: Int)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** array<float> → int signature of `bits` sign-bits against
-  * deterministic pseudo-random hyperplanes.
+/** array<float> → int signature of `HashOps.HyperplaneBits` sign-bits
+  * against deterministic pseudo-random hyperplanes.
   */
-case class HyperplaneSignature(child: Expression, bits: Int, dims: Int = 64)
+case class HyperplaneSignature(child: Expression)
     extends UnaryExpression with CodegenFallback {
-  require(bits <= 32)
+  import HashOps.{HyperplaneBits, HyperplaneDims}
   override def dataType: DataType = IntegerType
 
   // materialized once per executor (transient: rebuilt after deserialize)
   @transient private lazy val planes: Array[Array[Double]] =
-    Array.tabulate(bits, dims)((p, i) => HashOps.planeComponent(p, i))
+    Array.tabulate(HyperplaneBits, HyperplaneDims)(HashOps.planeComponent)
 
   override def nullSafeEval(v: Any): Any = {
     val vec = v.asInstanceOf[ArrayData]
-    val n = math.min(vec.numElements(), dims)
+    val n = math.min(vec.numElements(), HyperplaneDims)
     var sig = 0
     var p = 0
-    while (p < bits) {
+    while (p < HyperplaneBits) {
       val plane = planes(p)
       var dot = 0.0
       var i = 0

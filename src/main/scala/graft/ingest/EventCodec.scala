@@ -18,6 +18,9 @@ import org.apache.spark.sql.types._
   */
 object EventCodec {
 
+  /** The record column carrying the base64 payload (Kinesis' name). */
+  final val DataCol = "data"
+
   /** The producer's document schema, verbatim — including the
     * reference's `purchaise_details` spelling
     * (`python_producer.py:66`).
@@ -59,21 +62,20 @@ object EventCodec {
   /** base64 `data` column → typed event columns. Works identically on
     * batch and streaming DataFrames (pure narrow projection).
     */
-  def decode(records: DataFrame, dataCol: String = "data"): DataFrame =
-    records.withColumn("_evt", parseWire(col(dataCol))).select(col("_evt.*"))
+  def decode(records: DataFrame): DataFrame =
+    records.withColumn("_evt", parseWire(col(DataCol))).select(col("_evt.*"))
 
   /** Decode with dead-letter routing (the Firehose error-prefix analog:
     * failed records land in an S3 error output instead of vanishing).
     * Returns (decoded-good, raw-bad); bad = records whose base64 or JSON
     * failed to parse. One pass over the data per side, both narrow.
     */
-  def decodeWithDlq(records: DataFrame, dataCol: String = "data")
-      : (DataFrame, DataFrame) = {
-    val parsed = records.withColumn("_evt", parseWire(col(dataCol)))
+  def decodeWithDlq(records: DataFrame): (DataFrame, DataFrame) = {
+    val parsed = records.withColumn("_evt", parseWire(col(DataCol)))
     // from_json yields an all-null struct on malformed input; order_id is
     // non-null in every real event, so it is the validity sentinel
     val good = parsed.filter(col("_evt.order_id").isNotNull).select(col("_evt.*"))
-    val bad = parsed.filter(col("_evt.order_id").isNull).select(col(dataCol))
+    val bad = parsed.filter(col("_evt.order_id").isNull).select(col(DataCol))
     (good, bad)
   }
 
@@ -82,7 +84,7 @@ object EventCodec {
     * the codec and to feed the streaming ingest specs.
     */
   def encode(events: DataFrame): DataFrame =
-    events.select(encodeCol(events).as("data"))
+    events.select(encodeCol(events).as(DataCol))
 
   /** The encode expression as a Column, for callers that must attach the
     * payload alongside other columns of the SAME row (zipping two

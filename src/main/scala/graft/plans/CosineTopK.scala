@@ -10,6 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.BoundedHeap
+import CosineTopK.{EmbCol, IdCol}
 
 /** Whole-operator custom plan (SURVEY §4 ladder step (c)): exact cosine
   * top-k of a small broadcast query set against an embedding corpus.
@@ -32,8 +33,6 @@ case class CosineTopKPlan(
     queryIds: Array[Long],
     queryVecs: Array[Array[Float]],
     k: Int,
-    idCol: String,
-    embCol: String,
     // constructor parameter, NOT a computed val: Catalyst copies nodes
     // during optimization and freshly-minted AttributeReferences would
     // get new expr-ids, breaking downstream bindings
@@ -49,7 +48,7 @@ case class CosineTopKPlan(
   // references set ColumnPruning would rewrite the child to Project []
   override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(
-      child.output.filter(a => a.name == idCol || a.name == embCol))
+      child.output.filter(a => a.name == IdCol || a.name == EmbCol))
 
   override protected def withNewChildInternal(c: LogicalPlan) = copy(child = c)
 }
@@ -67,8 +66,6 @@ case class CosineTopKExec(
     queryIds: Array[Long],
     queryVecs: Array[Array[Float]],
     k: Int,
-    idCol: String,
-    embCol: String,
     override val output: Seq[Attribute])
   extends UnaryExecNode {
 
@@ -76,10 +73,10 @@ case class CosineTopKExec(
     org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val idIdx = child.output.indexWhere(_.name == idCol)
-    val embIdx = child.output.indexWhere(_.name == embCol)
+    val idIdx = child.output.indexWhere(_.name == IdCol)
+    val embIdx = child.output.indexWhere(_.name == EmbCol)
     require(idIdx >= 0 && embIdx >= 0,
-      s"child must expose $idCol and $embCol; has ${child.output.map(_.name)}")
+      s"child must expose $IdCol and $EmbCol; has ${child.output.map(_.name)}")
     val bcIds = sparkContext.broadcast(queryIds)
     val bcVecs = sparkContext.broadcast(queryVecs)
     val kk = k
@@ -151,31 +148,34 @@ object CosineTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: CosineTopKPlan =>
       CosineTopKExec(planLater(p.child), p.queryIds, p.queryVecs, p.k,
-        p.idCol, p.embCol, p.output) :: Nil
+        p.output) :: Nil
     case _ => Nil
   }
 }
 
 object CosineTopK {
 
+  /** The id and embedding columns both `corpus` and `queries` carry. */
+  final val IdCol = "vec_id"
+  final val EmbCol = "embedding"
+
   /** Public API: exact top-k neighbors of `queries` within `corpus`.
     * Queries are collected to the driver (they are small by contract —
     * the broadcast side) and baked into the logical node.
     */
-  def topK(corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+  def topK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val spark = corpus.sparkSession
     if (!spark.sessionState.planner.extraPlanningStrategies
         .contains(CosineTopKStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ CosineTopKStrategy
     }
-    val q = queries.select(idCol, embCol).collect()
+    val q = queries.select(IdCol, EmbCol).collect()
     val ids = q.map(_.getLong(0))
     val vecs = q.map(_.getSeq[Float](1).toArray)
     val plan = CosineTopKPlan(
-      corpus.select(idCol, embCol).queryExecution.analyzed,
-      ids, vecs, k, idCol, embCol, CosineTopKPlan.freshOutput())
+      corpus.select(IdCol, EmbCol).queryExecution.analyzed,
+      ids, vecs, k, CosineTopKPlan.freshOutput())
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
   }
 }

@@ -20,8 +20,12 @@ import graft.QueryDef
   */
 object Ivf {
 
-  private def fitModel(corpus: DataFrame, nlist: Int, seed: Long,
-      maxTrain: Long): org.apache.spark.ml.clustering.KMeansModel = {
+  /** The quantizer's k-means seed and training-sample cap. */
+  final val Seed = 42L
+  final val MaxTrain = 100000L
+
+  private def fitModel(corpus: DataFrame,
+      nlist: Int): org.apache.spark.ml.clustering.KMeansModel = {
     // array<float> → ml Vector via the built-in converter (handles
     // float arrays natively, no Seq boxing; last UDF in main removed
     // per round-7 verdict item 6)
@@ -29,13 +33,13 @@ object Ivf {
       org.apache.spark.ml.functions.array_to_vector(col("embedding")))
     // the quantizer only needs a representative SAMPLE: at corpus scale
     // fitting k-means on all vectors is a full multi-pass scan for no
-    // recall gain. Cap the training set at maxTrain rows (deterministic
+    // recall gain. Cap the training set at MaxTrain rows (deterministic
     // seed); assignment still covers the full corpus. The test
     // corpora are below the cap, so fit sees every row there.
     val n = feat.count()
-    val train = if (n <= maxTrain) feat
-      else feat.sample(withReplacement = false, maxTrain.toDouble / n, seed)
-    new KMeans().setK(nlist).setSeed(seed).setMaxIter(10).fit(train)
+    val train = if (n <= MaxTrain) feat
+      else feat.sample(withReplacement = false, MaxTrain.toDouble / n, Seed)
+    new KMeans().setK(nlist).setSeed(Seed).setMaxIter(10).fit(train)
   }
 
   /** Centers only — the coarse-quantizer half of the index, reused by
@@ -43,13 +47,12 @@ object Ivf {
     * (round-15 item 4): blocking needs the centroids to assign
     * against scan-side, not the transform()'d assignment frame.
     */
-  def quantizer(corpus: DataFrame, nlist: Int, seed: Long = 42L,
-      maxTrain: Long = 100000L): Array[Array[Double]] =
-    fitModel(corpus, nlist, seed, maxTrain).clusterCenters.map(_.toArray)
+  def quantizer(corpus: DataFrame, nlist: Int): Array[Array[Double]] =
+    fitModel(corpus, nlist).clusterCenters.map(_.toArray)
 
-  def index(corpus: DataFrame, nlist: Int, seed: Long = 42L,
-      maxTrain: Long = 100000L): (DataFrame, Array[Array[Double]]) = {
-    val model = fitModel(corpus, nlist, seed, maxTrain)
+  def index(corpus: DataFrame,
+      nlist: Int): (DataFrame, Array[Array[Double]]) = {
+    val model = fitModel(corpus, nlist)
     val feat = corpus.withColumn("features",
       org.apache.spark.ml.functions.array_to_vector(col("embedding")))
     val assigned = model.transform(feat)

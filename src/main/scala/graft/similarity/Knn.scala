@@ -15,9 +15,9 @@ import graft.dedup.Dedup.MurmurSql
   * the corpus — exact, one pass, no shuffle except the final per-query
   * top-k. Scale path: random-hyperplane LSH bucketing — signatures
   * computed scan-side, candidates restricted to bucket collisions across
-  * `tables` independent 8-bit views of a 32-bit signature, then exact
-  * rerank. That turns 100 TB × queries from a cross join into
-  * #tables shuffled equi-joins.
+  * `LshTables` independent 4-bit views of a 32-bit signature, then
+  * exact rerank. That turns 100 TB × queries from a cross join into
+  * `LshTables` shuffled equi-joins.
   */
 object Knn {
 
@@ -41,20 +41,23 @@ object Knn {
         round(col("cosine"), 4).as("cosine"))
   }
 
-  /** LSH-bucketed ANN: 32-bit hyperplane signature split into `tables`
-    * bucket keys of `32/tables` bits; candidates = bucket collisions in
-    * any table, exact-cosine reranked to top-k. Fewer bits per table →
-    * higher recall, bigger buckets: 8×4 bits gives ~0.7 recall on
-    * moderate-cosine neighbors; scale the bit width with corpus size.
+  /** Bucket tables of [[lsh]]: 8 keys of 4 signature bits each. */
+  final val LshTables = 8
+
+  /** LSH-bucketed ANN: 32-bit hyperplane signature split into
+    * `LshTables` bucket keys; candidates = bucket collisions in any
+    * table, exact-cosine reranked to top-k. Fewer bits per table →
+    * higher recall, bigger buckets: the fixed 8×4 bits give ~0.7 recall
+    * on moderate-cosine neighbors, and buckets fill linearly with the
+    * corpus at that width.
     */
-  def lsh(queries: DataFrame, corpus: DataFrame, k: Int,
-      tables: Int = 8): DataFrame = {
-    val bitsPerTable = 32 / tables
+  def lsh(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val bitsPerTable = HashOps.HyperplaneBits / LshTables
     val mask = (1 << bitsPerTable) - 1
     def sigd(df: DataFrame, idCol: String, embCol: String) = df
-      .withColumn("_sig", HashOps.hyperplaneSig(col(embCol), 32))
+      .withColumn("_sig", HashOps.hyperplaneSig(col(embCol)))
       .select(col(idCol), col(embCol), posexplode(
-        array((0 until tables).map(t =>
+        array((0 until LshTables).map(t =>
           shiftright(col("_sig"), t * bitsPerTable).bitwiseAND(lit(mask))): _*)))
       .withColumnRenamed("pos", "table")
       .withColumnRenamed("col", "bucket")
@@ -183,12 +186,12 @@ object Knn {
 
   /** The fixed-COUNT probe modulus: smallest power-free mod ≥ 100 that
     * keeps the probe's ordered-pair mass spent/mod under the budget.
-    * Pure function of (corpus pair mass, budget) — replicated verbatim
-    * in the knn_graph oracle's `sm` CTE so both engines sample the
-    * same 1-in-mod queries.
+    * Pure function of (corpus pair mass, probeMassBudget) — replicated
+    * verbatim in the knn_graph oracle's `sm` CTE so both engines sample
+    * the same 1-in-mod queries.
     */
-  def autoSampleMod(spent: Long, budget: Long = probeMassBudget): Long =
-    math.max(100L, math.ceil(spent.toDouble / budget).toLong)
+  def autoSampleMod(spent: Long): Long =
+    math.max(100L, math.ceil(spent.toDouble / probeMassBudget).toLong)
 
   /** Cumulative rung-work budget multiplier for the escalation ladder:
     * rung retries may spend up to `factor ×` the INITIAL construction's

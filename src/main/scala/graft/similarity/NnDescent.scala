@@ -41,7 +41,7 @@ import graft.Materialize.CutOps
   * [[VectorOps.cosine]], (d) a per-src top-kInternal merge.
   * Rounds run until the surviving fresh mass falls below the paper's
   * δ·K·n threshold (δ = 0.001 — see the termination note in the loop),
-  * with maxIters as a loudly-logged runaway backstop.
+  * with MaxRounds as a loudly-logged runaway backstop.
   *
   * Round-11 (verdict item 4): steps (a) and (d) are bounded-buffer
   * TypedImperativeAggregates ([[graft.functions.BottomKByLongKey]],
@@ -71,6 +71,9 @@ import graft.Materialize.CutOps
   */
 object NnDescent {
 
+  /** Runaway backstop on the rounds; the δ rule below is the binding stop. */
+  final val MaxRounds = 60
+
   /** Top-`k` cosine neighbors per vector within its label block.
     * Output: (vec_id, rank, neighbor_id, cosine(4dp)), rank 1..k by
     * (cosine desc, neighbor_id). Extraction reads the forward lists
@@ -80,8 +83,7 @@ object NnDescent {
     * list, because the pair was compared when either end discovered
     * it).
     */
-  def knnGraph(e: DataFrame, k: Int, kInternal: Int = 30,
-      maxIters: Int = 60): DataFrame = {
+  def knnGraph(e: DataFrame, k: Int, kInternal: Int = 30): DataFrame = {
     require(kInternal >= k, s"kInternal=$kInternal must be >= k=$k")
     val emb = e.select(col("vec_id"), col("label"), col("embedding"))
 
@@ -130,9 +132,9 @@ object NnDescent {
     // be broadcast anyway, so the conservative default stat is also
     // the correct planning input.
     import org.apache.spark.sql.GraftSqlBridge.detachStats
-    // edgesCk keeps the checkpointed handle (unpersist targets the
-    // frame that owns the blocks); edges is its stat-detached wrapper
-    // over the same materialized RDD
+    // edgesCk keeps the checkpointed handle (Materialize.release frees
+    // the cut it is handed); edges is its stat-detached wrapper over
+    // the same materialized RDD
     var edgesCk = score(initPairs).withColumn("fresh", lit(true))
       .cutLineage()
     var edges = detachStats(edgesCk)
@@ -146,7 +148,7 @@ object NnDescent {
     // NOT at literal zero. Round-13 finding (decorrelated 218k-block
     // corpus, evidence/decade/KSWEEP_SF100D1.json): on low-structure
     // geometry the fresh mass has a long sub-percent tail, and the previous
-    // fresh==0 ∧ maxIters=18 pair terminated BY THE CAP mid-descent
+    // fresh==0 stop with an 18-round cap terminated BY THE CAP mid-descent
     // (999k fresh at round 18, recall@3 0.789 — an iteration-budget
     // artifact, not a K deficit). δ-stop bounds the un-exploited
     // staleness at 0.1% of list mass (recall effect ≤ ~10⁻³) while
@@ -154,12 +156,12 @@ object NnDescent {
     // in one round (evidence/decade/KSWEEP_SF100V.json), stop on the
     // same round they previously hit 0 — their final edge set is
     // bit-identical
-    // because the sub-δ round discovered nothing. maxIters = 60 is a
+    // because the sub-δ round discovered nothing. MaxRounds is a
     // runaway backstop, no longer the binding constraint; hitting it
     // is logged as NOT CONVERGED.
     val nVec = emb.count()
     val deltaStop = math.max(1L, (0.001 * kInternal * nVec).toLong)
-    while (it < maxIters && freshCount > deltaStop) {
+    while (it < MaxRounds && freshCount > deltaStop) {
       val fwd = edges
         .select(col("src").as("pivot"), col("dst").as("nb"), col("fresh"))
       // reverse adjacency degree-capped at kInternal in deterministic
@@ -209,7 +211,6 @@ object NnDescent {
           col("e.score").as("cos"), col("e.fresh").as("fresh"))
         .cutLineage()
       freshCount = next.filter(col("fresh")).count()
-      edgesCk.unpersist(blocking = false)
       Materialize.release(edgesCk)
       edgesCk = next
       edges = detachStats(next)
@@ -218,9 +219,9 @@ object NnDescent {
         s"$freshCount fresh edges (delta-stop at $deltaStop)")
     }
     if (freshCount > deltaStop)
-      System.err.println(s"[graft] nn-descent NOT CONVERGED: hit " +
-        s"maxIters=$maxIters with $freshCount fresh edges " +
-        s"(delta-stop $deltaStop) — raise maxIters or kInternal")
+      System.err.println(s"[graft] nn-descent NOT CONVERGED: hit the " +
+        s"$MaxRounds-round cap with $freshCount fresh edges " +
+        s"(delta-stop $deltaStop) — raise kInternal")
 
     // final extraction from the forward lists, then detach the result
     // from the persisted loop state (localCheckpoint is eager) so the
@@ -231,7 +232,6 @@ object NnDescent {
       .select(col("src").as("vec_id"), col("rank"),
         col("dst").as("neighbor_id"), round(col("cos"), 4).as("cosine"))
       .cutLineage()
-    edgesCk.unpersist(blocking = false)
     Materialize.release(edgesCk)
     out
   }

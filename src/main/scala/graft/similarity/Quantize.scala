@@ -23,16 +23,17 @@ import graft.dedup.Dedup.MurmurSql
 object Quantize {
 
   /** embedding: array<float> → (codes array<int> in [0,255], mn, mx). */
-  def withCodes(emb: DataFrame, vecCol: String = "embedding"): DataFrame =
+  def withCodes(emb: DataFrame): DataFrame = {
+    val vec = col("embedding")
     emb
-      .withColumn("mn", array_min(col(vecCol)).cast("double"))
-      .withColumn("mx", array_max(col(vecCol)).cast("double"))
+      .withColumn("mn", array_min(vec).cast("double"))
+      .withColumn("mx", array_max(vec).cast("double"))
       .withColumn("codes",
-        when(col("mx") === col("mn"),
-          transform(col(vecCol), _ => lit(0)))
-          .otherwise(transform(col(vecCol), x =>
+        when(col("mx") === col("mn"), transform(vec, _ => lit(0)))
+          .otherwise(transform(vec, x =>
             round((x.cast("double") - col("mn")) /
               (col("mx") - col("mn")) * lit(255.0), 0).cast("int"))))
+  }
 
   /** codes → float32 reconstruction. */
   def dequantized: Column =

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -53,6 +54,34 @@ object StreamQueries {
     s.readStream.schema(s.read.parquet(dir).schema)
       .option("maxFilesPerTrigger", Int.MaxValue.toString)
       .parquet(dir)
+
+  /** Merge one update micro-batch of the LatestKV view (`key` plus
+    * the view's columns) into the parquet snapshot at `snap`: the
+    * snapshot's rows whose key the batch changed are replaced by the
+    * batch's. The merge is written to a per-batch tmp generation first,
+    * so the overwrite never reads the files it replaces. A missing
+    * snapshot means the first batch; a snapshot that exists but cannot
+    * be read fails the batch, so an unreadable table is never replaced
+    * by one batch's keys.
+    */
+  private[graft] def mergeKvSnapshot(batch: DataFrame, snap: String,
+      id: Long): Unit = {
+    val sp = batch.sparkSession
+    val snapPath = new Path(snap)
+    val fs = snapPath.getFileSystem(sp.sparkContext.hadoopConfiguration)
+    val merged =
+      if (!fs.exists(snapPath)) batch
+      else sp.read.parquet(snap)
+        .join(batch.select(col("key").as("_k")), col("key") === col("_k"),
+          "left_anti")
+        .unionByName(batch)
+    val tmp = snap + ".tmp" + id
+    merged.write.mode("overwrite").parquet(tmp)
+    sp.read.parquet(tmp).write.mode("overwrite").parquet(snap)
+    // the tmp generation is dead once copied into the snapshot —
+    // without cleanup, disk grows O(batches × snapshot size)
+    fs.delete(new Path(tmp), true)
+  }
 
   /** Clamp `spark.sql.shuffle.partitions` to ≤4 for the duration of a
     * streaming run, restoring the caller's value afterwards. A stateful
@@ -209,26 +238,7 @@ object StreamQueries {
           .outputMode("update")
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, id: Long) =>
-            val sp = batch.sparkSession
-            val existing =
-              try sp.read.parquet(snap)
-              catch { case _: Throwable =>
-                sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  batch.schema)
-              }
-            val merged = existing
-              .join(batch.select(col("key").as("_k")),
-                col("key") === col("_k"), "left_anti")
-              .unionByName(batch)
-            val tmp = snap + ".tmp" + id
-            merged.write.mode("overwrite").parquet(tmp)
-            sp.read.parquet(tmp).write.mode("overwrite").parquet(snap)
-            // the tmp generation is dead once copied into the snapshot —
-            // without cleanup, disk grows O(batches × snapshot size)
-            val fs = org.apache.hadoop.fs.FileSystem.get(
-              sp.sparkContext.hadoopConfiguration)
-            fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-            ()
+            mergeKvSnapshot(batch, snap, id)
           }
         withStreamShuffle(s) {
           val q = q0.start()

@@ -549,10 +549,10 @@ object TextAnalysis {
           .select(col("doc_id"), size(col("fp")).as("n_fingerprints"),
             element_at(col("fp"), 1).as("min_fingerprint"))
           .orderBy("doc_id"),
-      """WITH g AS (
+      s"""WITH g AS (
            SELECT doc_id,
              list_transform(range(1, length(text) - 7), i ->
-               CAST(list_sum(list_transform(range(0, 9), j ->
+               CAST(list_sum(list_transform(range(0, ${HashOps.WinnowK}), j ->
                  CAST(ord(text[i+j]) AS HUGEINT) *
                  ([19031147999601100801, 74051159531521793, 288136807515649,
                    1121154893057, 4362470401, 16974593, 66049, 257, 1])[j+1]
@@ -560,7 +560,7 @@ object TextAnalysis {
            FROM documents),
          m AS (
            SELECT doc_id,
-             CASE WHEN len(grams) < 4 THEN [list_min(grams)]
+             CASE WHEN len(grams) < ${HashOps.WinnowWindow} THEN [list_min(grams)]
                   ELSE list_transform(range(1, len(grams) - 2),
                          i -> list_min(grams[i:i+3]))
              END AS mins

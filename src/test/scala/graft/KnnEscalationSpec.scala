@@ -148,14 +148,15 @@ class KnnEscalationSpec extends AnyFunSuite {
   }
 
   test("autoSampleMod is fixed-count: floors at 100, scales with pair mass") {
-    assert(Knn.autoSampleMod(0L, 5000000000L) == 100L)
+    assert(Knn.probeMassBudget == 5000000000L)
+    assert(Knn.autoSampleMod(0L) == 100L)
     // sf100 shape (2 x 218k blocks, spent ~9.5e10): mod stays the
     // historical 100 — every committed gate row is unchanged
-    assert(Knn.autoSampleMod(95000000000L, 5000000000L) == 100L)
+    assert(Knn.autoSampleMod(95000000000L) == 100L)
     // one decade up the mod scales so the probe mass stays at budget
-    assert(Knn.autoSampleMod(9500000000000L, 5000000000L) == 1900L)
+    assert(Knn.autoSampleMod(9500000000000L) == 1900L)
     val spent = 123456789012345L
-    val m = Knn.autoSampleMod(spent, 5000000000L)
+    val m = Knn.autoSampleMod(spent)
     assert(spent / m <= 5000000000L, "probe mass must stay under budget")
   }
 

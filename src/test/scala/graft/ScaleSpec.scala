@@ -168,38 +168,70 @@ class ScaleSpec extends AnyFunSuite {
     assert(operators.Maintenance.unescapePartitionValue("x%-5y") == "x%-5y")
   }
 
-  test("foreachBatch sink maintains an upserted KV snapshot per micro-batch") {
+  /** A LatestKV update stream whose micro-batches the KV snapshot sink
+    * merges into `snap`; the caller feeds it and stops the query.
+    */
+  private def kvSnapshotQuery(snap: String) = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val snap = java.nio.file.Files.createTempDirectory("graft-kv-snap").toString
     val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[graft.streaming.LatestKV.KV]
-    val q = graft.streaming.LatestKV.latest(input.toDS())
+      .MemoryStream[streaming.LatestKV.KV]
+    val q = streaming.LatestKV.latest(input.toDS())
       .writeStream
       .outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.streaming.LatestKV.KV], id: Long) =>
-        // the DynamoDB-writer analog: merge the update batch into the
-        // snapshot (read-modify-write on the small changed-key set)
-        val existing = try spark.read.parquet(snap)
-          catch { case _: Throwable => spark.emptyDataset[graft.streaming.LatestKV.KV].toDF() }
-        val merged = existing
-          .join(batch.toDF().select(col("key").as("_k")),
-            col("key") === col("_k"), "left_anti")
-          .unionByName(batch.toDF())
-        val tmp = snap + ".tmp" + id
-        merged.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(snap)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[streaming.LatestKV.KV], id: Long) =>
+        streaming.StreamQueries.mergeKvSnapshot(batch.toDF(), snap, id)
       }
       .start()
-    input.addData(graft.streaming.LatestKV.KV("a", 1, "v1"),
-      graft.streaming.LatestKV.KV("b", 1, "w1"))
+    (input, q)
+  }
+
+  private def freshSnapPath(): String =
+    java.nio.file.Files.createTempDirectory("graft-kv-snap").toString + "/state"
+
+  test("foreachBatch sink maintains an upserted KV snapshot per micro-batch") {
+    val snap = freshSnapPath()
+    val (input, q) = kvSnapshotQuery(snap)
+    input.addData(streaming.LatestKV.KV("a", 1, "v1"),
+      streaming.LatestKV.KV("b", 1, "w1"))
     q.processAllAvailable()
-    input.addData(graft.streaming.LatestKV.KV("a", 2, "v2"))
+    input.addData(streaming.LatestKV.KV("a", 2, "v2"))
     q.processAllAvailable()
     q.stop()
     val state = spark.read.parquet(snap).collect()
       .map(r => r.getAs[String]("key") -> r.getAs[String]("value")).toMap
     assert(state == Map("a" -> "v2", "b" -> "w1"))
+  }
+
+  test("a KV snapshot that exists but cannot be read fails the batch") {
+    val snap = freshSnapPath()
+    val (input, q) = kvSnapshotQuery(snap)
+    val garbage = "not a parquet file".getBytes
+    val parts =
+      try {
+        input.addData(streaming.LatestKV.KV("a", 1, "v1"),
+          streaming.LatestKV.KV("b", 1, "w1"))
+        q.processAllAvailable()
+        // corrupt every data file of the snapshot (and drop its .crc, so
+        // the read fails on the parquet footer, not on the checksum)
+        val parts = new java.io.File(snap).listFiles()
+          .filter(f => f.getName.startsWith("part-"))
+        assert(parts.nonEmpty, "the first batch wrote no snapshot")
+        parts.foreach { f =>
+          java.nio.file.Files.write(f.toPath, garbage)
+          new java.io.File(snap, s".${f.getName}.crc").delete()
+        }
+        input.addData(streaming.LatestKV.KV("a", 2, "v2"))
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.processAllAvailable()
+        }
+        parts
+      } finally q.stop()
+    // the unreadable snapshot is left as it was, not replaced by batch 2
+    parts.foreach { f =>
+      assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(f.toPath),
+        garbage), s"${f.getName} was rewritten")
+    }
   }
 
   test("runtime bloom filter prunes the big side of a selective shuffle join") {
