@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.count_if
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage-cutting materialization with a config-gated RELIABLE path
@@ -51,6 +52,15 @@ object Materialize {
         df.checkpoint()
       case None => df.localCheckpoint()
     }
+  }
+
+  /** [[cut]] plus the count of rows matching `cond`, observed on the
+    * cut's own job (both paths deliver it) instead of a second job.
+    */
+  def cutCounting(df: DataFrame, cond: Column): (DataFrame, Long) = {
+    val obs = Observation()
+    val c = cut(df.observe(obs, count_if(cond).as("n")))
+    (c, obs.get("n").asInstanceOf[Long])
   }
 
   /** Free a cut that is no longer read: drop a local cut's blocks, and

@@ -66,15 +66,15 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     catalog.collect { case (k, QueryDef(_, Some(sql))) => k -> sql }
 
-  /** Catalog keys whose plans aggregate through the bounded-heap
-    * TypedImperativeAggregates (functions.TopKAgg family). These need
-    * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` raised
-    * past its 128-groups/task default — the fallback external-SORTS the
-    * partial aggregation's whole input, the exact full-width sort the
-    * O(k) buffers exist to avoid (measured 150 GB of sort spill at the
-    * 2M-vector exact k-NN twin). The raise is SCOPED to these keys
-    * (round-12 advice): the threshold also governs every other
-    * ObjectHashAggregate, and for unbounded per-group state
+  /** Catalog keys whose bounded-heap aggregates (functions.TopKAgg
+    * family) hold more groups per task than the 128 of
+    * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`, so they
+    * raise it: the fallback external-SORTS the partial aggregation's
+    * whole input, the full-width sort the O(k) buffers exist to avoid
+    * (measured 150 GB of sort spill at the 2M-vector exact k-NN twin).
+    * `knn_brute`, `knn_lsh` and `knn_ivf` rank through the same aggregate
+    * over at most 10 query groups, under the threshold. The raise is
+    * SCOPED to these keys: for unbounded per-group state
     * (collect_list/collect_set) the count threshold is the only spill
     * backstop — session-wide it would let up to 1e6 arbitrary-size
     * group buffers pin executor memory in the ~20 collect-heavy keys.

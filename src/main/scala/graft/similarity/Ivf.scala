@@ -2,7 +2,6 @@ package graft.similarity
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 import graft.QueryDef
@@ -61,37 +60,32 @@ object Ivf {
     (assigned, model.clusterCenters.map(_.toArray))
   }
 
-  /** Probe: rank centroids per query by exact cosine, take `nprobe`
-    * lists, exact-rerank within them.
+  /** Probe: rank centroids per query by exact cosine, take the `nprobe`
+    * nearest lists, exact-rerank within them (both [[Knn.topNeighbours]]).
     */
   def search(assigned: DataFrame, centers: Array[Array[Double]],
       queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
     val centersDf = centers.zipWithIndex
-      .map { case (c, i) => (i, c.map(_.toFloat)) }
+      .map { case (c, i) => (i.toLong, c.map(_.toFloat)) }
       .toSeq.toDF("list_id", "center")
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"))
     // per-query probe list: nprobe nearest centroids
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("c_cos").desc, col("list_id"))
-    val probes = q.crossJoin(broadcast(centersDf))
-      .withColumn("c_cos", VectorOps.cosine(col("q_emb"), col("center")))
-      .withColumn("c_rk", row_number().over(wq))
-      .filter(col("c_rk") <= nprobe)
-      .select("query_id", "q_emb", "list_id")
+    val probes = Knn.topNeighbours(q.crossJoin(broadcast(centersDf))
+        .select(col("query_id"), col("list_id").as("neighbor_id"),
+          VectorOps.cosine(col("q_emb"), col("center")).as("cosine")),
+        "query_id", nprobe)
+      .select(col("query_id"), col("neighbor_id").cast("int").as("list_id"))
+      .join(broadcast(q), "query_id")
     // rerank inside probed lists only
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    probes.join(assigned.select(col("vec_id").as("neighbor_id"),
+    Knn.topNeighbours(probes.join(assigned.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("c_emb"), col("list_id")), Seq("list_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", VectorOps.cosine(col("q_emb"), col("c_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"))
+      .select(col("query_id"), col("neighbor_id"),
+        VectorOps.cosine(col("q_emb"), col("c_emb")).as("cosine")),
+      "query_id", k)
   }
 
   val defs: Map[String, QueryDef] = Map(

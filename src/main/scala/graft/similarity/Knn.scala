@@ -1,9 +1,8 @@
 package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{HashOps, VectorOps}
+import graft.functions.{HashOps, TopKAgg, VectorOps}
 import graft.{QueryDef, Tables}
 import graft.Materialize.CutOps
 import graft.dedup.Dedup.MurmurSql
@@ -21,24 +20,39 @@ import graft.dedup.Dedup.MurmurSql
   */
 object Knn {
 
-  /** Exact top-k: broadcast the (small) query side; per-partition cosine
-    * in codegen; TakeOrdered-style window for the top-k.
+  /** The k-NN family's one neighbour ranking, used by every top-k
+    * neighbour and nearest-cell pick: per `id`, the `k` (≤ 1024) best rows
+    * of a scored frame (id, neighbor_id: bigint, cosine) by (cosine desc,
+    * neighbor_id asc) as (id, rank 1..k, neighbor_id, cosine at 4 dp).
+    * One bounded-heap aggregate ([[TopKAgg.topK]]) wires O(k) values per
+    * (id, map task), where a ranking window shuffles and sorts every
+    * scored pair (≈ 150 GB of sort spill at the 2M-vector exact twin).
+    * It selects the window's rows: NaN ranks first, as in Spark's
+    * descending sort, and `-0.0` folds into `+0.0`, as the 4-dp round
+    * does anyway. A null score is skipped, not ranked last;
+    * [[VectorOps.cosine]] returns none for non-null embeddings.
+    */
+  def topNeighbours(scored: DataFrame, id: String, k: Int): DataFrame =
+    scored.groupBy(id)
+      .agg(TopKAgg.topK(col("neighbor_id"), col("cosine"), k).as("top"))
+      .select(col(id), posexplode(col("top")).as(Seq("pos", "e")))
+      .select(col(id), (col("pos") + 1).cast("int").as("rank"),
+        col("e.payload").as("neighbor_id"),
+        round(col("e.score"), 4).as("cosine"))
+
+  /** Exact top-k: broadcast the (small) query side, per-partition cosine
+    * in codegen, then [[topNeighbours]].
     */
   def bruteForce(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"))
     val c = corpus.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("c_emb"))
-    val scored = c.crossJoin(broadcast(q))
+    topNeighbours(c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", VectorOps.cosine(col("q_emb"), col("c_emb")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"))
+      .select(col("query_id"), col("neighbor_id"),
+        VectorOps.cosine(col("q_emb"), col("c_emb")).as("cosine")),
+      "query_id", k)
   }
 
   /** Bucket tables of [[lsh]]: 8 keys of 4 signature bits each. */
@@ -71,38 +85,21 @@ object Knn {
       // dedupe multi-table collisions on the ID pair only — a distinct()
       // over the full rows would shuffle-hash the embedding arrays
       .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cosine", VectorOps.cosine(col("q_emb"), col("c_emb")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    cand
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"))
+      .select(col("query_id"), col("neighbor_id"),
+        VectorOps.cosine(col("q_emb"), col("c_emb")).as("cosine"))
+    topNeighbours(cand, "query_id", k)
   }
 
   private def queriesOf(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d).filter(col("vec_id") < 10)
 
   /** The EXACT within-label top-k graph — one equi-join shuffle on the
-    * label key plus a BOUNDED-HEAP top-k aggregate. This is knn_graph's
-    * below-budget plan and the ground-truth twin every recall
-    * measurement compares against; `queryFilter` restricts the QUERY
-    * side (exact, not approximate: a query's rows depend only on its
-    * own label block, so a filtered a-side computes exactly the full
-    * graph's rows for those queries at a fraction of the cost).
-    *
-    * Round 12: the per-vector row_number window became
-    * [[graft.functions.TopKAgg.topK]] (score desc, payload asc — the
-    * IDENTICAL strict total order the window sorted by, so the
-    * selected rows are the same; knn_graph_block's row-level hash gate
-    * re-proves it at every SF). The window shuffled and sorted EVERY
-    * scored pair — Σ n_query_l·n_l rows, which at the sf100-shape
-    * 2M-vector twin is 4.1e9 rows ≈ 150 GB of sort spill (measured
-    * disk-filling this round); the aggregate folds scored pairs into
-    * per-vector k-entry buffers INSIDE the join stage and wires
-    * O(k) values per (vec, map task) — the same scale property the
-    * round-11 NN-descent merge rewrite bought.
+    * label key plus [[topNeighbours]]. This is knn_graph's below-budget
+    * plan and the ground-truth twin every recall measurement compares
+    * against; `queryFilter` restricts the QUERY side (exact, not
+    * approximate: a query's rows depend only on its own label block, so
+    * a filtered a-side computes exactly the full graph's rows for those
+    * queries at a fraction of the cost).
     */
   def exactLabelGraph(e: DataFrame, k: Int,
       queryFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
@@ -111,16 +108,11 @@ object Knn {
     val a = queryFilter.map(aAll.filter).getOrElse(aAll)
     val b = e.select(col("label"), col("vec_id").as("neighbor_id"),
       col("embedding").as("b_emb"))
-    a.join(b, Seq("label"))
+    topNeighbours(a.join(b, Seq("label"))
       .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("cosine", VectorOps.cosine(col("a_emb"), col("b_emb")))
-      .groupBy("vec_id")
-      .agg(graft.functions.TopKAgg.topK(
-        col("neighbor_id"), col("cosine"), k).as("top"))
-      .select(col("vec_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("vec_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("e.payload").as("neighbor_id"),
-        round(col("e.score"), 4).as("cosine"))
+      .select(col("vec_id"), col("neighbor_id"),
+        VectorOps.cosine(col("a_emb"), col("b_emb")).as("cosine")),
+      "vec_id", k)
   }
 
   /** Escalation outcome of [[graphTopKEscalating]]'s recall guard —
@@ -138,18 +130,9 @@ object Knn {
       initialRecall: Double, finalRecall: Double,
       failingLabels: Seq[Long], exactLabels: Seq[Long],
       rungLabels: Seq[Long],
-      rungsTried: Seq[Int] = Nil,
-      budgetExhausted: Boolean = false)
+      rungsTried: Seq[Int],
+      budgetExhausted: Boolean)
 
-  /** [[graphTopKEscalating]]'s result: the final graph, the
-    * localCheckpoint'd exact probe sample (vec_id, neighbor_id) when
-    * the approximate branch ran (None on the lossless exact branch —
-    * recall is identically 1 there), the escalation report when the
-    * recall guard fired, and the sampleMod the probe/gate actually
-    * used (derived from the probe-mass budget unless pinned by the
-    * caller — the gate's fallback sample and the DuckDB oracle must
-    * use the SAME modulus).
-    */
   /** [[graphTopKQuantized]]'s report: the derived cell count, the
     * per-cell NN-descent width, the quantized graph's measured sampled
     * recall vs GLOBAL (true-label) exact truth, and whether the guard
@@ -159,11 +142,20 @@ object Knn {
       nlist: Int, kCell: Int, quantizedRecall: Double,
       escalatedToGlobal: Boolean)
 
+  /** The k-NN graph dispatchers' result: the final graph, the
+    * localCheckpoint'd exact probe sample (vec_id, neighbor_id) when
+    * the approximate branch ran (None on the lossless exact branch —
+    * recall is identically 1 there), the escalation report when the
+    * recall guard fired, the sampleMod the probe/gate actually used
+    * (derived from the probe-mass budget unless pinned by the caller —
+    * the gate's fallback sample and the DuckDB oracle must use the SAME
+    * modulus), and [[graphTopKQuantized]]'s report.
+    */
   final case class GraphResult(
       graph: DataFrame,
       probeSample: Option[DataFrame],
       escalation: Option[EscalationInfo],
-      sampleModUsed: Long = 100L,
+      sampleModUsed: Long,
       quantize: Option[QuantizeInfo] = None)
 
   /** Ordered-pair-mass budget for the recall PROBE (round-14 verdict
@@ -210,6 +202,11 @@ object Knn {
   def nextKRung(k: Int): Int =
     math.max(k + 1, math.ceil(k * 4.0 / 3.0).toInt)
 
+  /** Ordered-pair mass Σ n_l·(n_l−1) up to which the exact graph is
+    * affordable: the dispatch and per-block fallback budgets' default.
+    */
+  final val ExactPairBudget = 20000000L
+
   /** D54 production dispatcher — the budget-dispatched k-NN graph plus
     * a SELF-HEALING recall guard (round-13 verdict item 2). Below the
     * ordered-pair budget Σ n_l·(n_l−1) ≤ `budget` the exact
@@ -253,28 +250,39 @@ object Knn {
     * measured recall in the report (and the downstream hash gate
     * fails as before — the guard never silently accepts).
     *
-    * Per-label driver state is bounded: `label` is the corpus's
-    * class dimension (10-ish values at every shipped SF), not a
-    * data-scale dimension; a 10k-label guard fails loudly rather
-    * than collect an unbounded map.
-    *
     * On corpora below `budget` the exact branch returns untouched
     * (no probe — the graph IS the ground truth); on approximate
     * corpora that pass the probe (every real corpus family measured
     * so far: sf1 0.9968, sf10 0.9808-shape, sf100b 1.0000) the only
-    * added cost is the probe itself — which the knn_graph gate
-    * previously computed anyway, and now REUSES via `probeSample`
-    * instead of re-deriving plan-side.
+    * added cost is the probe itself, which the knn_graph gate reuses.
     */
-  def graphTopKEscalating(e: DataFrame, k: Int, budget: Long = 20000000L,
+  def graphTopKEscalating(e: DataFrame, k: Int,
+      budget: Long = ExactPairBudget,
       kInternal: Int = 0, recallTarget: Double = 0.9,
       sampleMod: Long = 0L,
-      fallbackBudget: Long = 20000000L,
-      rungFactor: Double = -1.0,
-      preSample: Option[DataFrame] = None): GraphResult = {
+      fallbackBudget: Long = ExactPairBudget,
+      rungFactor: Double = -1.0): GraphResult =
+    labelBlocks(e, k, budget, sampleMod) match {
+      case Left(exact) => exact
+      case Right(m) => escalate(e, k, m, kInternal, recallTarget,
+        fallbackBudget, rungFactor, guardSample(e, k, m.mod))
+    }
+
+  /** Rows per label and the probe modulus, as the recall guard reads them. */
+  private final case class LabelBlocks(ns: Map[Long, Long], mod: Long)
+
+  /** The k-NN graph dispatchers' preamble: rows per label, their pair
+    * mass, the probe modulus ([[autoSampleMod]] unless `sampleMod` > 0
+    * pins it), and the lossless exact graph (Left) when the mass fits
+    * `budget`. `label` is a bounded class dimension (10-ish values at
+    * every shipped SF): over 10,000 labels fail loudly rather than
+    * collect an unbounded map.
+    */
+  private def labelBlocks(e: DataFrame, k: Int, budget: Long,
+      sampleMod: Long): Either[GraphResult, LabelBlocks] = {
     val labelRows = e.groupBy("label").agg(count(lit(1)).as("n")).take(10001)
     require(labelRows.length <= 10000,
-      "graphTopKEscalating: >10000 distinct labels — label must be a " +
+      "knn_graph: >10000 distinct labels — label must be a " +
         "bounded class dimension for per-block escalation")
     val ns = labelRows.map(r => r.getAs[Number]("label").longValue() ->
       r.getAs[Long]("n")).toMap
@@ -287,49 +295,66 @@ object Knn {
       System.err.println(s"[graft] knn_graph probe: pair mass $spent " +
         s"over probe budget ${probeMassBudget} at mod 100 — sampleMod " +
         s"auto-scaled to $mod (probe mass ${spent / mod})")
-    if (spent <= budget)
-      return GraphResult(exactLabelGraph(e, k), None, None, mod)
+    if (spent <= budget) Left(GraphResult(exactLabelGraph(e, k), None, None, mod))
+    else Right(LabelBlocks(ns, mod))
+  }
 
+  /** The recall probe's ground truth: the exact graph's
+    * (vec_id, neighbor_id) rows for the deterministic 1-in-`mod` query
+    * sample pmod(vec_id, mod) = 0 — exact for those queries at 1/mod of
+    * the quadratic. The knn_graph gate counts the same sample.
+    */
+  private def probeSample(e: DataFrame, k: Int, mod: Long): DataFrame =
+    exactLabelGraph(e, k, Some(pmod(col("vec_id"), lit(mod)) === 0L))
+      .select("vec_id", "neighbor_id")
+
+  /** [[probeSample]] tagged with each query's label and cut once. */
+  private def guardSample(e: DataFrame, k: Int, mod: Long): DataFrame =
+    probeSample(e, k, mod).join(e.select("vec_id", "label"), "vec_id")
+      .cutLineage()
+
+  /** Per label: (sampled pairs of a [[guardSample]], those `g` holds). */
+  private def recallByLabel(samp: DataFrame,
+      g: DataFrame): Map[Long, (Long, Long)] =
+    samp.join(
+        g.select(col("vec_id"), col("neighbor_id"), lit(1L).as("hit")),
+        Seq("vec_id", "neighbor_id"), "left")
+      .groupBy("label")
+      .agg(count(lit(1)).as("ns"),
+        coalesce(sum(col("hit")), lit(0L)).as("nh"))
+      .collect()
+      .map(r => r.getAs[Number]("label").longValue() ->
+        (r.getAs[Long]("ns"), r.getAs[Long]("nh"))).toMap
+
+  /** The overall recall of a [[recallByLabel]] map; 1 on an empty sample. */
+  private def overall(m: Map[Long, (Long, Long)]): Double = {
+    val s = m.valuesIterator.map(_._1).sum
+    if (s == 0L) 1.0 else m.valuesIterator.map(_._2).sum.toDouble / s
+  }
+
+  /** [[graphTopKEscalating]]'s approximate branch: NN-descent, the
+    * per-label probe against the cut [[guardSample]] `samp` and the
+    * ladder. [[graphTopKQuantized]]'s fallback hands over its own sample.
+    */
+  private def escalate(e: DataFrame, k: Int, m: LabelBlocks,
+      kInternal: Int, recallTarget: Double, fallbackBudget: Long,
+      rungFactor: Double, samp: DataFrame): GraphResult = {
+    val ns = m.ns
     val nTotal = ns.valuesIterator.sum
     val nbar = if (ns.isEmpty) 0.0 else nTotal.toDouble / ns.size
     val kInt = if (kInternal > 0) kInternal else autoKInternal(nbar)
     val g0 = NnDescent.knnGraph(e, k, kInt) // localCheckpoint'd inside
 
-    // probe: the exact graph restricted to the deterministic
-    // 1-in-mod query sample — exact for those queries at 1/mod of the
-    // quadratic — tagged with each query's label
     val labelOf = e.select(col("vec_id"), col("label"))
-    val qf = pmod(col("vec_id"), lit(mod)) === 0L
-    // preSample lets graphTopKQuantized's failed-guard fallback hand
-    // over its already-checkpointed exact sample (the probe is the
-    // expensive part of the guard — never pay it twice)
-    val samp = preSample.getOrElse(
-        exactLabelGraph(e, k, Some(qf)).select("vec_id", "neighbor_id"))
-      .join(labelOf, "vec_id")
-      .cutLineage()
-    def recallByLabel(g: DataFrame): Map[Long, (Long, Long)] =
-      samp.join(
-          g.select(col("vec_id"), col("neighbor_id"), lit(1L).as("hit")),
-          Seq("vec_id", "neighbor_id"), "left")
-        .groupBy("label")
-        .agg(count(lit(1)).as("ns"),
-          coalesce(sum(col("hit")), lit(0L)).as("nh"))
-        .collect()
-        .map(r => r.getAs[Number]("label").longValue() ->
-          (r.getAs[Long]("ns"), r.getAs[Long]("nh"))).toMap
-    def overall(m: Map[Long, (Long, Long)]): Double = {
-      val s = m.valuesIterator.map(_._1).sum
-      if (s == 0L) 1.0 else m.valuesIterator.map(_._2).sum.toDouble / s
-    }
-    def failingOf(m: Map[Long, (Long, Long)]): Seq[Long] = m.collect {
+    def failingOf(probe: Map[Long, (Long, Long)]): Seq[Long] = probe.collect {
       case (l, (s0, h0)) if s0 > 0 && h0.toDouble / s0 < recallTarget => l
     }.toSeq.sorted
-    val probe0 = recallByLabel(g0)
+    val probe0 = recallByLabel(samp, g0)
     val r0 = overall(probe0)
     val failing0 = failingOf(probe0)
     if (failing0.isEmpty)
       return GraphResult(g0, Some(samp.select("vec_id", "neighbor_id")),
-        None, mod)
+        None, m.mod)
 
     // ---- escalation ladder (round-15 item 5: LOOP the rungs) ----
     // blocks under the fallback pair budget re-route ONCE to the
@@ -406,7 +431,7 @@ object Knn {
           s"(work ${workSpent.toLong} / ${workBudget.toLong})")
         rungBuilds = rungBuilds :+ ((pending, NnDescent.knnGraph(
           e.filter(col("label").isin(pending: _*)), k, kCur)))
-        val probeNow = recallByLabel(spliceAll())
+        val probeNow = recallByLabel(samp, spliceAll())
         lastProbe = Some(probeNow)
         pending = failingOf(probeNow).filter(pending.contains)
       }
@@ -415,7 +440,7 @@ object Knn {
     // loop's last probe (when the ladder fired) measures exactly this
     // final graph — don't pay the probe join twice
     val g = spliceAll().cutLineage()
-    val probe = lastProbe.getOrElse(recallByLabel(g))
+    val probe = lastProbe.getOrElse(recallByLabel(samp, g))
     val r1 = overall(probe)
     val info = EscalationInfo(kInt, kRung0, r0, r1,
       failing0, exactLabels, rungLabels, rungsTried, exhausted)
@@ -426,7 +451,7 @@ object Knn {
         "or the rung work factor)"
        else ""))
     GraphResult(g, Some(samp.select("vec_id", "neighbor_id")), Some(info),
-      mod)
+      m.mod)
   }
 
   /** Target vectors per quantizer cell for the unlabeled-corpus
@@ -472,29 +497,32 @@ object Knn {
     * state, embarrassing cross-cell parallelism, straggler isolation,
     * and cells small enough for the exact fallback budget.
     */
-  def graphTopKQuantized(e: DataFrame, k: Int, budget: Long = 20000000L,
+  def graphTopKQuantized(e: DataFrame, k: Int,
+      budget: Long = ExactPairBudget,
       recallTarget: Double = 0.9, sampleMod: Long = 0L,
       targetBlock: Long = 0L): GraphResult = {
-    val ns = e.groupBy("label").agg(count(lit(1)).as("n")).take(10001)
-      .map(r => r.getAs[Number]("label").longValue() -> r.getAs[Long]("n"))
-      .toMap
-    val spent = ns.valuesIterator.map(n => n * (n - 1L)).sum
-    val mod = if (sampleMod > 0L) sampleMod else autoSampleMod(spent)
-    if (spent <= budget)
-      return GraphResult(exactLabelGraph(e, k), None, None, mod)
-    val n = ns.valuesIterator.sum
+    val m = labelBlocks(e, k, budget, sampleMod) match {
+      case Left(exact) => return exact
+      case Right(blocks) => blocks
+    }
+    val n = m.ns.valuesIterator.sum
     val tb = if (targetBlock > 0L) targetBlock else knnBlockSize
     val nlist = math.ceil(n.toDouble / tb).toInt
-    if (nlist < 2) {
-      System.err.println(s"[graft] knn_graph quantize: n=$n under 2x " +
-        s"target block $tb — blocking buys nothing, dispatching to the " +
-        "label-blocked construction")
-      return graphTopKEscalating(e, k, budget, 0, recallTarget, sampleMod)
-    }
     require(nlist <= 10000,
       s"knn_graph quantize: nlist=$nlist cells — raise the target " +
         "block size (targetBlock) to keep the centroid " +
         "broadcast bounded")
+    // global-truth probe at the fixed-count modulus; the unblocked
+    // construction reuses it
+    val samp = guardSample(e, k, m.mod)
+    def unblocked(): GraphResult = escalate(e, k, m, 0, recallTarget,
+      ExactPairBudget, rungWorkFactor, samp)
+    if (nlist < 2) {
+      System.err.println(s"[graft] knn_graph quantize: n=$n under 2x " +
+        s"target block $tb — blocking buys nothing, dispatching to the " +
+        "label-blocked construction")
+      return unblocked()
+    }
     val spark = e.sparkSession
     import spark.implicits._
     System.err.println(s"[graft] knn_graph quantize: n=$n -> $nlist " +
@@ -503,25 +531,21 @@ object Knn {
     val centersDf = centers.zipWithIndex
       .map { case (c, i) => (i.toLong, c.map(_.toFloat)) }
       .toSeq.toDF("cell", "center")
-    // top-2 cells per vector: nlist cosines per vector scan-side, a
-    // bounded-heap top-2 per vec_id (map-side partials keep the wire
+    // top-2 cells per vector: nlist cosines per vector scan-side, the
+    // bounded-heap ranking per vec_id (map-side partials keep the wire
     // at 2 rows/vector — the n x nlist scored mass never shuffles)
-    val top2 = e.select(col("vec_id"), col("embedding"))
+    val top2 = topNeighbours(e.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(centersDf))
-      .select(col("vec_id"), col("cell"),
-        VectorOps.cosine(col("embedding"), col("center")).as("c_cos"))
-      .groupBy("vec_id")
-      .agg(graft.functions.TopKAgg.topK(col("cell"), col("c_cos"), 2)
-        .as("cells"))
-      .select(col("vec_id"), posexplode(col("cells")).as(Seq("pos", "ce")))
-      .select(col("vec_id"), col("pos"), col("ce.payload").as("cell"))
+      .select(col("vec_id"), col("cell").as("neighbor_id"),
+        VectorOps.cosine(col("embedding"), col("center")).as("cosine")),
+      "vec_id", 2)
     // doubled membership under synthetic ids (2*id / 2*id+1 — a vector
     // has at most one primary and one secondary copy, so ids stay
     // unique and NnDescent's per-label machinery applies unchanged)
     val ePrime = top2.join(e.select(col("vec_id"), col("embedding")),
         "vec_id")
-      .select((col("vec_id") * 2 + col("pos")).as("vec_id"),
-        col("cell").as("label"), col("embedding"))
+      .select((col("vec_id") * 2 + col("rank") - 1).as("vec_id"),
+        col("neighbor_id").as("label"), col("embedding"))
     val kCell = autoKInternal(2.0 * n / nlist)
     val gCell = NnDescent.knnGraph(ePrime, k, kCell)
     // merge the two copies' lists back onto original ids: collapse
@@ -536,33 +560,20 @@ object Knn {
         shiftright(col("neighbor_id"), 1).as("neighbor_id"))
       .filter(col("vec_id") =!= col("neighbor_id"))
       .dropDuplicates("vec_id", "neighbor_id")
-    val merged = cand
+    val merged = topNeighbours(cand
       .join(e.select(col("vec_id"), col("embedding").as("a_emb")), "vec_id")
       .join(e.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("b_emb")), "neighbor_id")
-      .withColumn("cos", VectorOps.cosine(col("a_emb"), col("b_emb")))
-      .groupBy("vec_id")
-      .agg(graft.functions.TopKAgg.topK(
-        col("neighbor_id"), col("cos"), k).as("top"))
-      .select(col("vec_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("vec_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("e.payload").as("neighbor_id"),
-        round(col("e.score"), 4).as("cosine"))
+      .select(col("vec_id"), col("neighbor_id"),
+        VectorOps.cosine(col("a_emb"), col("b_emb")).as("cosine")),
+      "vec_id", k)
       .cutLineage()
-    // global-truth probe at the fixed-count modulus
-    val qf = pmod(col("vec_id"), lit(mod)) === 0L
-    val samp = exactLabelGraph(e, k, Some(qf))
-      .select("vec_id", "neighbor_id")
-      .cutLineage()
-    val nSamp = samp.count()
-    val nHit = if (nSamp == 0L) 0L
-      else samp.join(merged.select("vec_id", "neighbor_id"),
-        Seq("vec_id", "neighbor_id"), "left_semi").count()
-    val rec = if (nSamp == 0L) 1.0 else nHit.toDouble / nSamp
+    val rec = overall(recallByLabel(samp, merged))
     if (rec >= recallTarget) {
       System.err.println(f"[graft] knn_graph quantize: sampled recall " +
         f"$rec%.4f >= $recallTarget%.2f — quantized graph accepted")
-      return GraphResult(merged, Some(samp), None, mod,
+      return GraphResult(merged, Some(samp.select("vec_id", "neighbor_id")),
+        None, m.mod,
         Some(QuantizeInfo(nlist, kCell, rec, escalatedToGlobal = false)))
     }
     System.err.println(f"[graft] knn_graph quantize: sampled recall " +
@@ -570,9 +581,7 @@ object Knn {
       "capture this corpus's neighbor structure (isotropic geometry " +
       "defeats spatial blocking); escalating to the UNBLOCKED proven " +
       "construction")
-    val res = graphTopKEscalating(e, k, budget, 0, recallTarget,
-      sampleMod = mod, preSample = Some(samp))
-    res.copy(quantize =
+    unblocked().copy(quantize =
       Some(QuantizeInfo(nlist, kCell, rec, escalatedToGlobal = true)))
   }
 
@@ -701,27 +710,18 @@ object Knn {
     // knn_graph_block below; the full-corpus decade recall readout
     // lives in RECALL_SF10.json.
     // Below budget the dispatched graph IS the exact twin and the
-    // recall term is identically 1.
-    // Round 14: the entry dispatches through graphTopKEscalating —
-    // on recall_ok=false geometry the operator now self-heals
-    // per label block (exact twin under the pair budget, next K rung
-    // above it) instead of only failing the gate; the gate then
-    // re-measures the FINAL graph, reusing the dispatcher's
-    // checkpointed probe sample (one exact-sample evaluation total,
-    // vs two plan-side evaluations before).
+    // recall term is identically 1. Above it the dispatcher self-heals
+    // failing label blocks, and the gate re-measures the FINAL graph on
+    // the dispatcher's checkpointed probe sample.
     "knn_graph" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val res = graphTopKDispatch(e, 3)
         val g = res.graph
-        // round 15: fixed-COUNT sample — the modulus is derived from
-        // the probe-mass budget (sampleModUsed; 100 at every proven SF
-        // through sf100 shape, scaling past it), and the oracle's `sm`
-        // CTE replicates the derivation bit-for-bit
-        val qf = pmod(col("vec_id"), lit(res.sampleModUsed)) === 0L
+        // fixed-COUNT sample: the oracle's `sm` CTE replicates the
+        // derivation of sampleModUsed bit-for-bit
         val exactSample = res.probeSample.getOrElse(
-          exactLabelGraph(e, 3, Some(qf))
-            .select("vec_id", "neighbor_id"))
+          probeSample(e, 3, res.sampleModUsed))
         val hits = exactSample
           .join(g.select("vec_id", "neighbor_id"),
             Seq("vec_id", "neighbor_id"), "left_semi")

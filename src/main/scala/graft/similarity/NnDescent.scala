@@ -45,7 +45,7 @@ import graft.Materialize.CutOps
   *
   * Round-11 (verdict item 4): steps (a) and (d) are bounded-buffer
   * TypedImperativeAggregates ([[graft.functions.BottomKByLongKey]],
-  * [[graft.functions.TopKFreshByScore]]) instead of row_number
+  * [[graft.functions.TopKFreshByScore]]) instead of ranking
   * windows. The window merge was TWO full-sort shuffles per round
   * (groupBy(src,dst) pair dedup, then a per-src rank sort) over the
   * ~6M-edge (sf10) merge input, 18 rounds deep — 68% of the decade
@@ -134,15 +134,12 @@ object NnDescent {
     import org.apache.spark.sql.GraftSqlBridge.detachStats
     // edgesCk keeps the checkpointed handle (Materialize.release frees
     // the cut it is handed); edges is its stat-detached wrapper over
-    // the same materialized RDD
-    var edgesCk = score(initPairs).withColumn("fresh", lit(true))
-      .cutLineage()
+    // the same materialized RDD. Each cut counts its fresh edges.
+    var (edgesCk, freshCount) = Materialize.cutCounting(
+      score(initPairs).withColumn("fresh", lit(true)), col("fresh"))
     var edges = detachStats(edgesCk)
 
-    val wTop = Window.partitionBy("src")
-      .orderBy(col("cos").desc, col("dst"))
     var it = 0
-    var freshCount = edges.count() // init is all fresh
     // Termination is the paper's δ rule (Dong et al. §2.3, δ = 0.001):
     // stop once a round's surviving fresh mass falls below δ·K·n —
     // NOT at literal zero. Round-13 finding (decorrelated 218k-block
@@ -174,7 +171,7 @@ object NnDescent {
       // best-connected nodes (measured: a shared cap left sf10 at
       // 1.3M fresh edges and recall 0.81 after 12 rounds).
       // BottomKByLongKey selects the same (xxhash64 asc, nb asc)
-      // bottom-k the old row_number window did, without the full sort
+      // bottom-k the old ranking window did, without the full sort
       // — nb values are unique per (pivot, fresh) (edges are deduped),
       // so the bounded-buffer selection is order-independent.
       val rev = edges
@@ -202,15 +199,16 @@ object NnDescent {
       // (a pair present in BOTH old and new is a re-discovery, not
       // fresh) folded into one bounded-buffer aggregation — see the
       // TopKFreshByScore scaladoc for the exact-equivalence argument
-      val next = edges.withColumn("fresh", lit(false)).union(newDirected)
-        .groupBy("src")
-        .agg(TopKAgg.topKFresh(col("dst"), col("cos"), col("fresh"),
-          kInternal).as("top"))
-        .select(col("src"), explode(col("top")).as("e"))
-        .select(col("src"), col("e.payload").as("dst"),
-          col("e.score").as("cos"), col("e.fresh").as("fresh"))
-        .cutLineage()
-      freshCount = next.filter(col("fresh")).count()
+      val (next, nextFresh) = Materialize.cutCounting(
+        edges.withColumn("fresh", lit(false)).union(newDirected)
+          .groupBy("src")
+          .agg(TopKAgg.topKFresh(col("dst"), col("cos"), col("fresh"),
+            kInternal).as("top"))
+          .select(col("src"), explode(col("top")).as("e"))
+          .select(col("src"), col("e.payload").as("dst"),
+            col("e.score").as("cos"), col("e.fresh").as("fresh")),
+        col("fresh"))
+      freshCount = nextFresh
       Materialize.release(edgesCk)
       edgesCk = next
       edges = detachStats(next)
@@ -226,11 +224,8 @@ object NnDescent {
     // final extraction from the forward lists, then detach the result
     // from the persisted loop state (localCheckpoint is eager) so the
     // intermediate blocks don't outlive this call
-    val out = edges
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select(col("src").as("vec_id"), col("rank"),
-        col("dst").as("neighbor_id"), round(col("cos"), 4).as("cosine"))
+    val out = Knn.topNeighbours(edges.select(col("src").as("vec_id"),
+        col("dst").as("neighbor_id"), col("cos").as("cosine")), "vec_id", k)
       .cutLineage()
     Materialize.release(edgesCk)
     out

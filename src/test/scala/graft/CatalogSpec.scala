@@ -173,6 +173,12 @@ class CatalogSpec extends AnyFunSuite {
       s"-Xss4m $flag")
   }
 
+  test("every bounded-heap key names a catalog key") {
+    // a renamed key would silently lose its fallback-threshold raise
+    val unknown = SparkEntry.boundedHeapKeys -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"boundedHeapKeys not in the catalog: $unknown")
+  }
+
   test("withConf restores a set key and unsets an unset one") {
     val (set, unset) = ("spark.sql.shuffle.partitions", "spark.sql.graft.probe")
     val before = spark.conf.get(set)

@@ -148,7 +148,8 @@ class DedupSpec extends AnyFunSuite {
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (brute & lsh).size.toDouble / brute.size
-    assert(recall >= 0.3, s"LSH recall@3 = $recall (4 tables x 8 bits)")
+    assert(recall >= 0.3, s"LSH recall@3 = $recall (${Knn.LshTables} " +
+      s"tables x ${graft.functions.HashOps.HyperplaneBits / Knn.LshTables} bits)")
     assert(lsh.size <= brute.size)
   }
 

@@ -160,6 +160,38 @@ class KnnEscalationSpec extends AnyFunSuite {
     assert(spent / m <= 5000000000L, "probe mass must stay under budget")
   }
 
+  test("topNeighbours ranks like a row_number window over (cosine desc, neighbor_id)") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // exact ties (id 1), fewer candidates than k (id 2), negative
+    // cosines, a NaN score and a signed-zero tie (id 3)
+    val scored = Seq(
+      (1L, 10L, 0.5), (1L, 12L, 0.5), (1L, 11L, 0.5), (1L, 13L, -0.2),
+      (1L, 14L, Double.NaN), (1L, 15L, 0.9),
+      (2L, 21L, -0.7), (2L, 20L, -0.3),
+      (3L, 31L, 0.0), (3L, 30L, -0.0), (3L, 32L, -0.25), (3L, 33L, 0.12345))
+      .toDF("vec_id", "neighbor_id", "cosine").repartition(3)
+    val w = Window.partitionBy("vec_id")
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    for (k <- Seq(1, 3)) {
+      val want = scored.withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k)
+        .select(col("vec_id"), col("rank"), col("neighbor_id"),
+          round(col("cosine"), 4).as("cosine"))
+        .orderBy("vec_id", "rank").collect().toSeq
+      val got = Knn.topNeighbours(scored, "vec_id", k)
+        .orderBy("vec_id", "rank").collect().toSeq
+      assert(got == want, s"k=$k")
+    }
+  }
+
+  test("graphTopKQuantized refuses a corpus with more than 10,000 labels") {
+    val e = spark.range(10001).select(col("id").as("vec_id"),
+      array(lit(1.0f), lit(0.0f)).as("embedding"), col("id").as("label"))
+    val err = intercept[IllegalArgumentException](Knn.graphTopKQuantized(e, 3))
+    assert(err.getMessage.contains(">10000 distinct labels"))
+  }
+
   test("GraphResult carries the derived modulus on both dispatch branches") {
     val small = df(block(0L, 50, 1))
     assert(Knn.graphTopKEscalating(small, 3).sampleModUsed == 100L,

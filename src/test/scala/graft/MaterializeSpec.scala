@@ -79,6 +79,30 @@ class MaterializeSpec extends AnyFunSuite {
     }
   }
 
+  test("cutCounting delivers its observed count on the local and the reliable path") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val root = java.nio.file.Files.createTempDirectory("graft_ckpt_obs")
+    val key = "spark.graft.reliableCheckpointDir"
+    // a grouped frame, as NN-descent cuts it; a path that never delivers
+    // the observation would block, so the wait is bounded
+    def counted() = Await.result(Future(Materialize.cutCounting(
+      sample().groupBy((col("k") % 10).as("g")).agg(count(lit(1)).as("n")),
+      col("g") < 3)), 2.minutes)
+    try {
+      val (local, nLocal) = counted()
+      spark.conf.set(key, root.toString)
+      val (reliable, nReliable) = counted()
+      assert(nLocal == 3L && nReliable == 3L, s"$nLocal / $nReliable")
+      assert(local.count() == 10L && reliable.count() == 10L)
+      assert(rddDirs(root) == 1, "the reliable cut must write one checkpoint")
+    } finally {
+      spark.conf.unset(key)
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    }
+  }
+
   /** Reliable checkpoint dirs (`rdd-*`) under `root`, at any depth. */
   private def rddDirs(root: java.nio.file.Path): Int = {
     import scala.jdk.CollectionConverters._
